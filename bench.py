@@ -545,26 +545,26 @@ def _write_bench_md(results: dict[int, dict], levels: list[int], sf_dir: str,
             f"MEDIAN of {len(p3)} protocol-3 (A/B-alternated) pairs — see "
             f"the protocol section below"
         )
-        rep_hi = max(by_rep)
-        hi_med = _st.median(by_rep[rep_hi])
-        hi_n = len(by_rep[rep_hi])
+        # the verdict is the POOLED median over every valid pair; a
+        # per-workload median is supporting evidence only, since no
+        # workload subset was fixed in the protocol before its pairs ran
+        verdict = "MET" if e_main >= 0.8 else "NOT met"
         headline_line = (
-            f"**N→4N efficiency (local[{lo}] → local[{mid}]) = {hi_med:.3f} "
-            f"at the scale-representative workload** (replicate ×{rep_hi}, "
-            f"median of {hi_n} A/B-alternated pair(s)"
-            + (" — the ≥ 0.8 BASELINE.json north-rule target is MET"
-               if hi_med >= 0.8 and rep_hi > min(by_rep) else "")
-            + "). Across ALL workloads the pooled median is "
-            f"{e_main:.3f} over {len(p3)} pairs; the smallest-workload "
-            f"median (×{min(by_rep)}, "
-            f"{_st.median(by_rep[min(by_rep)]):.3f}) is the conservative "
-            "floor — see the workload breakdown below for why the ratio is "
-            "workload-dependent."
-        ) if len(by_rep) > 1 else (
-            f"**N→4N efficiency (local[{lo}] → local[{mid}]) = "
-            f"{e_main:.3f}** (target ≥ 0.8, BASELINE.json north_rule) — "
-            f"{eff_src}."
+            f"**N→4N efficiency (local[{lo}] → local[{mid}]) = {e_main:.3f}**, "
+            f"pooled over all workloads ({eff_src}); the ≥ 0.8 "
+            f"BASELINE.json north-rule target is {verdict}."
         )
+        if len(by_rep) > 1:
+            rep_hi = max(by_rep)
+            headline_line += (
+                " Supporting evidence only: the largest workload "
+                f"(replicate ×{rep_hi}) alone gives "
+                f"{_st.median(by_rep[rep_hi]):.3f} over "
+                f"{len(by_rep[rep_hi])} pair(s), the smallest "
+                f"(×{min(by_rep)}) {_st.median(by_rep[min(by_rep)]):.3f} — "
+                "see the workload breakdown below for why the ratio is "
+                "workload-dependent."
+            )
         # invalid pairs stay VISIBLE (struck through, with the recorded
         # reason) — excluded from the estimate, never hidden
         pair_rows = "\n".join(
@@ -650,11 +650,10 @@ carries a fixed JVM cost (short shuffle/window phases q2/q3, scheduling,
 commit) that the 4×-parallel side amortizes over a 4×-shorter wall — at
 the small historical workload (×8) that fixed share caps the ratio near
 0.71 even though every per-row worker span is flat (see the worker-span
-split below), while at ×32 — one step toward the 10^12-sequence target
-scale, where per-pass fixed cost vanishes entirely — the measured
-efficiency crosses the ≥ 0.8 bar. The scale-representative number is the
-LARGEST-workload median; the small-workload median is retained alongside
-as the conservative floor.
+split below), and the share shrinks as the per-pass input grows. A
+per-workload median stays supporting evidence: the verdict above is the
+pooled median, until a workload is fixed in the protocol before its pairs
+are recorded.
 
 ## Worker-span split (feed / kernel / emit, µs per row, lo → mid)
 

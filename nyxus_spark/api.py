@@ -53,35 +53,12 @@ class NyxusSpark:
     def featurize(
         self, df: DataFrame, keep_tokens: bool = False,
         annotations: list[str] | None = None,
-        backend: str = "kernel",
     ) -> DataFrame:
         """One wide feature row per input row (the reference's per-ROI
-        vector, one float64 column per enabled feature). `annotations`
+        vector, one float64 column per enabled feature), computed by the
+        Arrow-vectorized kernels (`extract_features`). `annotations`
         passes input columns through as `anno{i}` strings ahead of the
-        features (output_2_csv.cpp:62-80).
-
-        backend="kernel" (default) runs the Arrow-vectorized numpy kernels
-        (mapInArrow — the fast path, full catalog). backend="sql" runs
-        PURE Catalyst expressions for the SQL-expressible statistical
-        subset (features/sqlback.py — the 35-code firstorder family plus
-        the 44-code IH family; entropies stay kernel-only): no Python
-        workers, bit-identical values, ~4× slower per row (measured) —
-        pick it for pure-JVM
-        deployments or SQL-view/streaming composition. Raises ValueError
-        when the enabled feature set exceeds the SQL-expressible subset
-        (or uses annotations, which are a kernel-path feature)."""
-        if backend == "sql":
-            if annotations:
-                raise ValueError("annotations require backend='kernel'")
-            from nyxus_spark.features.registry import resolve_features
-            from nyxus_spark.features.sqlback import extract_features_sql
-
-            return extract_features_sql(
-                df, resolve_features(self.features),
-                tokens_col=self.tokens_col, keep_tokens=keep_tokens,
-            )
-        if backend != "kernel":
-            raise ValueError(f"unknown backend {backend!r} (kernel|sql)")
+        features (output_2_csv.cpp:62-80)."""
         return extract_features(
             df, self.features, settings=self.settings,
             tokens_col=self.tokens_col, keep_tokens=keep_tokens,
@@ -92,21 +69,17 @@ class NyxusSpark:
         self, src: DataFrame, keep_tokens: bool = False,
     ) -> DataFrame:
         """Streaming featurization: the same per-row feature vector over an
-        unbounded `readStream` source. Runs the SQL backend (pure stateless
-        Catalyst projections — no state store, no Python workers, so
-        `append` mode works with no watermark; values bit-identical to the
-        batch kernel, tests/test_sqlback.py). The enabled feature set must
-        be SQL-expressible (the same contract as backend='sql'); start the
-        returned stream with `.writeStream` + a checkpointLocation for the
-        resumability contract (tests/test_streaming_restart.py)."""
+        unbounded `readStream` source, through the same kernels and
+        settings as `featurize`. The kernel is a stateless per-row
+        `mapInArrow`, so `append` mode works with no watermark and values
+        are bit-identical to batch. Start the returned stream with
+        `.writeStream` + a checkpointLocation for the resumability contract
+        (tests/test_streaming_restart.py)."""
         if not src.isStreaming:
             raise ValueError("featurize_stream needs a streaming DataFrame "
                              "(spark.readStream...); use featurize for batch")
-        from nyxus_spark.features.registry import resolve_features
-        from nyxus_spark.features.sqlback import extract_features_sql
-
-        return extract_features_sql(
-            src, resolve_features(self.features),
+        return extract_features(
+            src, self.features, settings=self.settings,
             tokens_col=self.tokens_col, keep_tokens=keep_tokens,
         )
 

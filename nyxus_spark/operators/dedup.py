@@ -234,11 +234,13 @@ def _first_occurrence_flag(df: DataFrame, key_col: str, order_cols: list[str],
     )
 
 
-def reassemble_segments(segs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def reassemble_segments(segs: DataFrame, id_col: str = "doc_id",
+                        tokens_col: str = "tokens",
+                        n_tok_col: str = "n_tok") -> DataFrame:
     """Rebuild cleaned documents from their surviving segments — the output
     stage of the line-dedup pass: kept segments concatenate back in seg_id
-    order into a token table (id, tokens, n_tok) ready for the rest of the
-    pipeline (chunking, packing, feature kernels). One hash aggregation on
+    order into a token table (id, tokens_col, n_tok_col) ready for the rest
+    of the pipeline (chunking, packing, feature kernels). One hash aggregation on
     the document id; segment order is restored by an in-group array_sort
     (no window, no second shuffle). Documents whose every segment was a
     duplicate drop out (zero kept tokens ⇒ no training value).
@@ -251,10 +253,11 @@ def reassemble_segments(segs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             F.expr(
                 "flatten(transform(array_sort(collect_list("
                 "struct(seg_id as s, seg_tokens as t))), x -> x.t))"
-            ).alias("tokens"),
+            ).alias(tokens_col),
         )
         .select(
-            id_col, "tokens", F.size("tokens").cast("int").alias("n_tok")
+            id_col, tokens_col,
+            F.size(tokens_col).cast("int").alias(n_tok_col),
         )
     )
 
@@ -1610,9 +1613,12 @@ def kcore_peel(pairs: DataFrame, ks=(2, 3), rounds: int = 4,
     degree inside its ks[0]-peel subgraph, 0 once peeled).
     """
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    # each round joins the surviving set twice, so an untruncated plan
+    # doubles per round (2^rounds copies of the candidate pipeline, which
+    # stalls AQE re-planning); checkpoint the edge list and every round
     und = edges.union(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    ).localCheckpoint(eager=False)
     nodes = und.select("a").distinct()
     out = nodes.withColumnRenamed("a", "doc_id")
     first_deg = None
@@ -1628,7 +1634,8 @@ def kcore_peel(pairs: DataFrame, ks=(2, 3), rounds: int = 4,
                 .groupBy("a")
                 .agg(F.count(F.lit(1)).cast("long").alias("d"))
             )
-            surv = deg.filter(F.col("d") >= k).select("a")
+            surv = (deg.filter(F.col("d") >= k).select("a")
+                    .localCheckpoint(eager=False))
         flag = surv.select(
             F.col("a").alias("doc_id"), F.lit(1).cast("int").alias(f"core{k}")
         )

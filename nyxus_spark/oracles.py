@@ -40,9 +40,13 @@ def sql_dedup_clusters(jaccard_threshold: float = 0.5) -> str:
     RECURSIVE CTE fixpoint: reach(id, label) closes over the undirected
     edges; min(label) per id = the component's smallest member — the same
     canonical representative the Spark iterative min-label propagation
-    converges to (operators/dedup.py connected_components)."""
+    converges to (operators/dedup.py connected_components).
+
+    `pairs` is MATERIALIZED: the unrolled PageRank and k-core CTEs read it
+    dozens of times, and DuckDB inlines a plain CTE at every reference, so
+    the MinHash pipeline would rerun per reference and spill gigabytes."""
     return f"""
-WITH RECURSIVE pairs AS (
+WITH RECURSIVE pairs AS MATERIALIZED (
 {sql_minhash_pairs(jaccard_threshold)}
 ),
 edges AS (

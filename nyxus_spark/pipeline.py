@@ -51,6 +51,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 @dataclass(frozen=True)
@@ -210,20 +211,23 @@ def clean_corpus(
     if cfg.near_jaccard is not None:
         from nyxus_spark.operators.dedup import minhash_lsh_pairs
 
-        pairs = minhash_lsh_pairs(cur, jaccard_threshold=cfg.near_jaccard)
+        pairs = minhash_lsh_pairs(cur, id_col=id_col, tokens_col=tokens_col,
+                                  jaccard_threshold=cfg.near_jaccard)
         drop_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
         cur = step(cur.join(drop_ids, id_col, "left_anti"), "5_near_dup")
 
     # 5b. semantic dedup — SemDeDup cluster-blocked cosine (Σ|cluster|²
     #     candidates, never all-pairs); drops the higher id of each
-    #     within-threshold cluster pair
+    #     within-threshold cluster pair. Only docs still in the corpus take
+    #     part: a doc must not lose to a near-copy an earlier stage dropped.
     if cfg.semantic_threshold is not None:
         if embeddings_df is None or centroids_df is None:
             raise ValueError(
                 "semantic_threshold needs embeddings_df and centroids_df")
         from nyxus_spark.operators.dedup import semdedup
 
-        sd = semdedup(embeddings_df, centroids_df,
+        live = embeddings_df.join(cur.select(id_col), id_col, "left_semi")
+        sd = semdedup(live, centroids_df,
                       threshold=cfg.semantic_threshold,
                       id_col=id_col, vec_col=emb_vec_col)
         sem_drop = sd.filter(F.col("sd_drop") == 1).select(id_col)
@@ -252,7 +256,9 @@ def clean_corpus(
                     F.when(F.col("bp_flag") == 1, F.lit(0))
                     .otherwise(F.col("seg_kept")),
                 )
-        rebuilt = reassemble_segments(segs, id_col=id_col)
+        rebuilt = reassemble_segments(segs, id_col=id_col,
+                                      tokens_col=tokens_col,
+                                      n_tok_col=n_tok_col)
         # reattach the passthrough columns the segment table does not carry
         side = cur.drop(tokens_col, n_tok_col)
         cur = step(rebuilt.join(side, id_col)
@@ -289,6 +295,6 @@ def clean_corpus(
     if prov:
         provenance = reduce(lambda a, b: a.unionByName(b), prov)
     else:
-        provenance = df.sparkSession.createDataFrame(
-            [], f"{id_col} string, drop_stage string")
+        provenance = df.sparkSession.createDataFrame([], StructType([
+            df.schema[id_col], StructField("drop_stage", StringType())]))
     return CorpusCleanResult(cur, provenance, packs, id_expr)

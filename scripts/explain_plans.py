@@ -57,15 +57,6 @@ def main() -> None:
     sections["feature catalog (narrow — no exchange)"] = plan_of(
         extract_features(v, ["*ALL_INTENSITY*"], keep_tokens=False)
     )
-
-    # Catalyst-native firstorder backend: the zero-Python alternative for
-    # the SQL-expressible statistical family — ONE whole-stage-codegen
-    # projection over the scan (no Arrow crossing, no Python workers)
-    from nyxus_spark.features.sqlback import extract_features_sql
-
-    sections["firstorder via pure Catalyst expressions (zero Python)"] = plan_of(
-        extract_features_sql(tokens_static(spark, sf).select("doc_id", "tokens", "n_tok"))
-    )
     sections["prescan broadcast join"] = plan_of(with_source_range(tokens_static(spark, sf)))
     sections["sessionization (single shuffle + window)"] = plan_of(
         sessionize(spark.read.parquet(f"{sf}/events.parquet")

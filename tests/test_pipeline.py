@@ -190,3 +190,72 @@ def test_pipeline_temperature_mixture(spark):
     assert 0 < by_src.get("small", 0) < 8
     dropped = {r["drop_stage"] for r in res.provenance.collect()}
     assert dropped == {"7_mixture_sample"}
+
+
+def test_pipeline_semantic_dedup_ignores_dropped_docs(spark):
+    """Stage 5b only compares docs still in the corpus: doc_1's one
+    semantic near-copy (doc_0) already fell to the length rule, so doc_1
+    must survive instead of losing to a doc that is gone."""
+    rows = [("doc_0", [1, 2], 2, "web"),
+            ("doc_1", [10, 11, 12, 13, 14, 15], 6, "web"),
+            ("doc_2", [20, 21, 22, 23, 24, 25], 6, "web")]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    emb = spark.createDataFrame(
+        [("doc_0", [0, 100, 50, 0]), ("doc_1", [0, 100, 50, 0]),
+         ("doc_2", [127, 0, 0, 0])],
+        "doc_id string, qvec array<int>")
+    cents = spark.createDataFrame(
+        [(0, [0, 0, 0, 0])], "cent_id int, cent_qvec array<int>")
+    cfg = PipelineConfig(min_tokens=3, exact=False, near_jaccard=None,
+                         semantic_threshold=0.98)
+    res = clean_corpus(df, cfg, embeddings_df=emb, centroids_df=cents)
+    assert {r["doc_id"] for r in res.docs.collect()} == {"doc_1", "doc_2"}
+    prov = {(r["doc_id"], r["drop_stage"]) for r in res.provenance.collect()}
+    assert prov == {("doc_0", "1_length")}
+
+
+def test_pipeline_renamed_columns_integer_ids(spark):
+    """Stages 1, 4, 5 and 6 over renamed columns with integer ids keep the
+    same docs, tokens and provenance as the default-name run (zero-padded
+    string ids sort like the integers, so every lowest-id-wins choice
+    agrees)."""
+    from pyspark.sql.types import LongType
+
+    rows = [(i, [1000 + i * 50 + j for j in range(40)]) for i in range(8)]
+    rows.append((8, [1, 2]))                                # length drop
+    rows.append((9, rows[0][1]))                            # exact dup of 0
+    rows.append((10, rows[1][1][:-1] + [999]))              # near dup of 1
+    rows.append((11, [1, 2, 3, 104, 5, 6, 7]))
+    rows.append((12, [5, 6, 7, 104, 1, 2, 3]))              # all segments dup
+    rows.append((13, [1, 2, 3, 104, 900, 901]))             # one segment dup
+    named = spark.createDataFrame(
+        [(f"doc_{i:02d}", t, len(t), "web") for i, t in rows],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    renamed = spark.createDataFrame(
+        [(i, t, len(t), "web") for i, t in rows],
+        "id bigint, toks array<int>, len int, src string")
+    cfg = PipelineConfig(min_tokens=3, exact=True, near_jaccard=0.5,
+                         segment_delim=104)
+    keys = dict(id_col="id", tokens_col="toks", n_tok_col="len",
+                source_col="src")
+
+    a = clean_corpus(named, cfg)
+    b = clean_corpus(renamed, cfg, **keys)
+    docs_a = {int(r["doc_id"][4:]): (r["tokens"], r["n_tok"])
+              for r in a.docs.collect()}
+    docs_b = {r["id"]: (r["toks"], r["len"]) for r in b.docs.collect()}
+    assert docs_b == docs_a
+    assert docs_a[13] == ([900, 901], 2)
+    prov_a = {(int(r["doc_id"][4:]), r["drop_stage"])
+              for r in a.provenance.collect()}
+    prov_b = {(r["id"], r["drop_stage"]) for r in b.provenance.collect()}
+    assert prov_b == prov_a == {(8, "1_length"), (9, "4_exact_dup"),
+                                (10, "5_near_dup"),
+                                (12, "6_all_segments_dup")}
+
+    # no stage enabled: the empty provenance keeps the integer id type
+    none = clean_corpus(renamed, PipelineConfig(min_tokens=0, exact=False,
+                                                near_jaccard=None), **keys)
+    assert none.provenance.schema["id"].dataType == LongType()
+    assert none.provenance.count() == 0

@@ -14,14 +14,15 @@ import pytest
 from nyxus_spark.streaming.dedup import DEDUP_IN_SCHEMA, dedup_stream
 
 
-def _run_once(spark, src_dir, ckpt, out_dir):
+def _run_once(spark, src_dir, ckpt, out_dir, build=dedup_stream,
+              schema=DEDUP_IN_SCHEMA):
     src = (
-        spark.readStream.schema(DEDUP_IN_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
     q = (
-        dedup_stream(src)
+        build(src)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
@@ -86,40 +87,64 @@ def test_restart_does_not_reprocess_committed_files(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == n1 == 2
 
 
+FEAT_SCHEMA = "doc_id string, tokens array<bigint>, n_tok bigint"
+
+
 def test_featurize_stream_api_matches_batch(spark, tmp_path):
-    """NyxusSpark.featurize_stream == batch featurize(backend='sql') row for
-    row, and survives a checkpointed restart over new files."""
+    """NyxusSpark.featurize_stream == batch featurize bit for bit, before
+    and after a checkpointed restart that picks up a new file, with the
+    engine's settings honoured by both: the default engine requests the
+    kernel-only ENTROPY, the second one a 128-bin IH histogram."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from nyxus_spark.api import NyxusSpark
 
-    src_dir = str(tmp_path / "fsrc")
-    os.makedirs(src_dir)
     docs = [(f"doc_{i}", [(i * 7 + j) % 50 for j in range(20 + i)], 20 + i)
-            for i in range(12)]
-    pd.DataFrame(docs, columns=["doc_id", "tokens", "n_tok"]).to_parquet(
-        os.path.join(src_dir, "p0.parquet"))
+            for i in range(16)]
 
-    nx = NyxusSpark(features=["MEAN", "COUNT", "ENERGY", "MIN", "MAX"])
-    src = (
-        spark.readStream.schema("doc_id string, tokens array<bigint>, n_tok bigint")
-        .parquet(src_dir)
-    )
-    out = nx.featurize_stream(src)
-    q = (
-        out.writeStream.format("memory").queryName("fstream_api")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM fstream_api").toPandas().sort_values(
-        "doc_id").reset_index(drop=True)
-    batch = nx.featurize(
-        spark.createDataFrame(docs, "doc_id string, tokens array<bigint>, n_tok bigint"),
-        backend="sql",
-    ).toPandas().sort_values("doc_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(got[batch.columns], batch)
+    def batch(engine, rows):
+        return engine.featurize(spark.createDataFrame(rows, FEAT_SCHEMA)) \
+            .toPandas().sort_values("doc_id").reset_index(drop=True)
+
+    engines = {
+        "default": NyxusSpark(
+            features=["MEAN", "COUNT", "ENERGY", "MIN", "MAX", "ENTROPY"]),
+        "depth128": NyxusSpark(features=["IH_MEAN_VAL", "MEAN"],
+                               coarse_gray_depth=128),
+    }
+    for tag, nx in engines.items():
+        src_dir = str(tmp_path / tag / "src")
+        ckpt = str(tmp_path / tag / "ckpt")
+        out_dir = str(tmp_path / tag / "out")
+        os.makedirs(src_dir)
+
+        def streamed():
+            return spark.read.parquet(out_dir).toPandas().sort_values(
+                "doc_id").reset_index(drop=True)
+
+        pd.DataFrame(docs[:12], columns=["doc_id", "tokens", "n_tok"]) \
+            .to_parquet(os.path.join(src_dir, "p0.parquet"))
+        _run_once(spark, src_dir, ckpt, out_dir, nx.featurize_stream,
+                  FEAT_SCHEMA)
+        exp = batch(nx, docs[:12])
+        pd.testing.assert_frame_equal(streamed()[exp.columns], exp,
+                                      check_exact=True)
+
+        # restart: a NEW query on the same checkpoint featurizes only the
+        # new file and appends it
+        pd.DataFrame(docs[12:], columns=["doc_id", "tokens", "n_tok"]) \
+            .to_parquet(os.path.join(src_dir, "p1.parquet"))
+        _run_once(spark, src_dir, ckpt, out_dir, nx.featurize_stream,
+                  FEAT_SCHEMA)
+        exp = batch(nx, docs)
+        got = streamed()
+        assert len(got) == len(docs), tag
+        pd.testing.assert_frame_equal(got[exp.columns], exp, check_exact=True)
+
+    # the depth is observable: a 64-bin engine gives other IH values than
+    # the depth-128 stream (`got`, from the last engine)
+    default64 = batch(NyxusSpark(features=["IH_MEAN_VAL"]), docs)
+    assert (default64["IH_MEAN_VAL"] != got["IH_MEAN_VAL"]).any()
 
     with pytest.raises(ValueError, match="streaming"):
-        nx.featurize_stream(spark.createDataFrame(docs[:1],
-            "doc_id string, tokens array<bigint>, n_tok bigint"))
+        nx.featurize_stream(spark.createDataFrame(docs[:1], FEAT_SCHEMA))
