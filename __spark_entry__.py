@@ -1137,7 +1137,7 @@ def _q_prescan_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship sorted-merge as-of join (union_window strategy)."""
+    """Flagship sorted-merge as-of join (union_window plan)."""
     _prep(spark)
     from pyspark.sql import functions as F
 
@@ -1201,7 +1201,7 @@ def _q_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     between a probe and its match — holds with wide margin at sf0.01).
     Driven by applyInPandasWithState with Trigger.AvailableNow +
     maxFilesPerTrigger=1; the memory-sink table must equal the same DuckDB
-    ASOF LEFT JOIN oracle the batch strategies pass."""
+    ASOF LEFT JOIN oracle the batch plans pass."""
     _prep(spark)
     import os
     import tempfile
@@ -5594,30 +5594,9 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample(attach_fake_media(docs), every_n_bytes=64)
 
 
-def _q_asof_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join via the cogrouped pandas merge_asof kernel (same oracle as
-    the union_window strategy — strategies must agree)."""
-    _prep(spark)
-    from pyspark.sql import functions as F
-
-    from nyxus_spark.operators import asof_join
-    from nyxus_spark.sources import probes, tokens_versions
-
-    v = tokens_versions(spark, sf_dir).select("doc_id", "ts", "n_tok")
-    p = probes(spark, sf_dir)
-    out = asof_join(p, v, strategy="cogroup_merge")
-    return out.select(
-        "doc_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.col("matched_ts").cast("timestamp")).alias("matched_ts_us"),
-        "n_tok",
-    )
-
-
 def _q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join via the time-sliced salted path (salt_slices=4, the
-    north-rule hot-key strategy). All strategies must agree, so the oracle is
+    north-rule hot-key treatment). Both plans must agree, so the oracle is
     the same ASOF LEFT JOIN SQL as the union_window query."""
     _prep(spark)
     from pyspark.sql import functions as F
@@ -5647,29 +5626,22 @@ def _q_asof_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_asof_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of strategies AND match directions side-by-side in one gated row
-    set: the cogrouped pandas merge_asof kernel, the time-sliced salted path
-    (salt_slices=4, the north-rule hot-key treatment), plus the
-    union_window FORWARD (first version at-or-after the probe), NEAREST
-    (min |Δts|, ties backward — pandas semantics), STRICT backward
-    (allow_exact_matches=False: versions strictly before the probe), and the
-    BROADCAST small-dim strategy (per-key sorted history arrays broadcast
-    onto the probes — the zero-probe-shuffle path) variants. Joined on the
-    probe key, so the oracle (backward + forward + strict ASOF LEFT JOINs,
-    nearest derived by the same tie-break CASE) forces every
-    strategy/direction/bound to agree with the oracle AND each other."""
+    """As-of plans AND match directions side-by-side in one gated row set:
+    the time-sliced salted path (salt_slices=4, the north-rule hot-key
+    treatment), plus the union_window FORWARD (first version at-or-after
+    the probe), NEAREST (min |Δts|, ties backward — pandas semantics) and
+    STRICT backward (allow_exact_matches=False: versions strictly before
+    the probe) variants. Joined on the probe key, so the oracle (backward +
+    forward + strict ASOF LEFT JOINs, nearest derived by the same tie-break
+    CASE) forces every plan/direction/bound to agree with the oracle AND
+    each other."""
     from pyspark.sql import functions as F
 
     from nyxus_spark.operators import asof_join
     from nyxus_spark.sources import probes, tokens_versions
 
-    merge = _q_asof_merge(spark, sf_dir).select(
-        "doc_id", "event_id", "ts_us",
-        F.col("matched_ts_us").alias("merge_matched_ts_us"),
-        F.col("n_tok").alias("merge_n_tok"),
-    )
     salted = _q_asof_salted(spark, sf_dir).select(
-        "doc_id", "event_id",
+        "doc_id", "event_id", "ts_us",
         F.col("matched_ts_us").alias("salted_matched_ts_us"),
         F.col("n_tok").alias("salted_n_tok"),
     )
@@ -5677,9 +5649,8 @@ def _q_asof_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = tokens_versions(spark, sf_dir).select("doc_id", "ts", "n_tok")
     p = probes(spark, sf_dir)
 
-    def directed(direction, tag, exact=True, strategy="union_window"):
-        out = asof_join(p, v, direction=direction, allow_exact_matches=exact,
-                        strategy=strategy)
+    def directed(direction, tag, exact=True):
+        out = asof_join(p, v, direction=direction, allow_exact_matches=exact)
         return out.select(
             "doc_id", "event_id",
             F.unix_micros(F.col("matched_ts").cast("timestamp"))
@@ -5734,15 +5705,9 @@ def _q_asof_strategies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return (
-        merge.join(salted, ["doc_id", "event_id"])
-        .join(directed("forward", "fwd"), ["doc_id", "event_id"])
+        salted.join(directed("forward", "fwd"), ["doc_id", "event_id"])
         .join(directed("nearest", "near"), ["doc_id", "event_id"])
         .join(directed("backward", "strict", exact=False), ["doc_id", "event_id"])
-        # the BROADCAST strategy (small-dim zero-probe-shuffle path): the
-        # version table collapses to one sorted history array per key and
-        # broadcast-joins the probes — must equal the shuffling strategies
-        .join(directed("backward", "bcast", strategy="broadcast"),
-              ["doc_id", "event_id"])
         .join(multi, ["doc_id", "event_id"])
         .join(tomb, ["doc_id", "event_id"])
     )
@@ -7135,8 +7100,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # queries now (join-merged on their row key; every column still gated):
     # gabor+radial → gabor_radial, glcm_sym+glcm_ibsi+glcm_ave → glcm_modes,
     # glrlm_ave+glrlm_bg → glrlm_modes, langid+text_quality+fingerprint →
-    # text_stats, rollup+rollup_pivot → rollup_wide, asof_merge+asof_salted
-    # → asof_strategies. Queries whose gates are newest-or-changed lead.
+    # text_stats, rollup+rollup_pivot → rollup_wide, asof_salted + the
+    # as-of directions → asof_strategies. Queries whose gates are
+    # newest-or-changed lead.
     return {
         # round-4 new/changed gates first
         "gabor_radial": _q_gabor_radial,
@@ -7589,9 +7555,8 @@ JOIN bfx x ON x.bf_digit = q.bf_digit
 CROSS JOIN mft g
 CROSS JOIN bfm m2
 """,
-        # backward ASOF (emitted under both strategy aliases — forcing
-        # cogroup-merge and salted to agree with the oracle and each other)
-        # + forward ASOF (p.ts <= v.ts picks the first at-or-after version)
+        # backward ASOF (gating the salted plan and the chained multi-source
+        # join's token side) + forward ASOF (p.ts <= v.ts picks the first at-or-after version)
         # + nearest derived from the two by the pandas tie-break (min |Δ|,
         # equal distances go backward) + STRICT backward (p.ts > v.ts, the
         # allow_exact_matches=False bound) — gating all directions and both
@@ -7642,7 +7607,6 @@ tomb AS (  -- deletion semantics: latest visible version wins, THEN a
     ON p.doc_id = v.doc_id AND p.ts >= v.ts
 )
 SELECT b.doc_id, b.event_id, b.ts_us,
-       b.b_ts AS merge_matched_ts_us, b.b_nt AS merge_n_tok,
        b.b_ts AS salted_matched_ts_us, b.b_nt AS salted_n_tok,
        f.f_ts AS fwd_matched_ts_us, f.f_nt AS fwd_n_tok,
        CASE WHEN b.b_ts IS NOT NULL
@@ -7652,7 +7616,6 @@ SELECT b.doc_id, b.event_id, b.ts_us,
              AND (f.f_ts IS NULL OR b.ts_us - b.b_ts <= f.f_ts - b.ts_us)
             THEN b.b_nt ELSE f.f_nt END AS near_n_tok,
        s.s_ts AS strict_matched_ts_us, s.s_nt AS strict_n_tok,
-       b.b_ts AS bcast_matched_ts_us, b.b_nt AS bcast_n_tok,
        b.b_ts AS multi_tok_ts_us, b.b_nt AS multi_n_tok,
        m.px_ts AS multi_px_ts_us, m.px_cents AS multi_px_cents,
        m.px_n AS multi_px_n,

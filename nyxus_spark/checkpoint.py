@@ -10,10 +10,12 @@ batches); this is the distributed re-design:
   (pmod(xxhash64(key), N));
 * each bucket is computed and written as its own Spark job to
   `<path>/bucket=<i>/`, then committed by writing a small manifest JSON to
-  `<path>/_manifest/<i>.json` with rows, wall ms, and a lineage ID =
-  sha256(run_spec | bucket);
+  `<path>/_manifest/<i>.json` with rows, wall ms, the bucket count, the key
+  column and a lineage ID = sha256(run_spec | bucket);
 * a re-run with the same path skips every committed bucket — killing the job
-  mid-run loses at most the in-flight bucket.
+  mid-run loses at most the in-flight bucket. A re-run with another
+  run_spec, bucket count or key column raises ValueError instead of mixing
+  two lineages or two splits.
 
 At 10^12-sequence scale the bucket column is the Iceberg partition spec
 (bucket(doc_id)), so each bucket job prunes its input at the scan instead of
@@ -77,6 +79,15 @@ def checkpointed_write(
             f"({sorted(set(stale.values()))} != {run_spec!r}); refusing to mix "
             "lineages — use a fresh path or the original run_spec"
         )
+    # another split of the keyspace would duplicate or drop rows on resume
+    for field, want in (("n_buckets", n_buckets), ("key_col", key_col)):
+        seen = {m.get(field) for m in done.values()} - {want}
+        if seen:
+            raise ValueError(
+                f"checkpoint at {path} holds buckets written with {field}="
+                f"{sorted(seen, key=repr)} != {want!r}; refusing to mix "
+                f"splits — use a fresh path or the original {field}"
+            )
     written = 0
     skipped = 0
     rows_total = 0
@@ -101,6 +112,8 @@ def checkpointed_write(
             "rows_per_sec": round(rows / max(wall_ms / 1000, 1e-9), 1),
             "lineage_id": _lineage_id(run_spec, b),
             "run_spec": run_spec,
+            "n_buckets": n_buckets,
+            "key_col": key_col,
             "committed_at": time.time(),
         }
         tmp = os.path.join(path, "_manifest", f".{b}.json.tmp")

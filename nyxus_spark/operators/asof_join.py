@@ -2,34 +2,26 @@
 
 Semantics: for each probe row (doc_id, ts) return the latest version row of
 the same doc_id with version.ts <= probe.ts (backward as-of; zero temporal
-leakage by construction). This is the 1-D analog of the reference's
-intensity↔mask / z-slice alignment (/root/reference/src/nyx/phase1.cpp:58-87,
-130-242) recast as the sorted-merge temporal join the north rule requires.
+leakage by construction). This is the 1-D analog of nyxus's intensity↔mask /
+z-slice alignment (src/nyx/phase1.cpp:58-87, 130-242) recast as the
+sorted-merge temporal join the north rule requires.
 
-Three physical strategies, identical results (cross-checked in tests):
+One plan, in two forms with identical results (cross-checked in tests):
 
 * ``union_window`` (default) — tag probes/versions, union, one shuffle on
   doc_id, in-partition sort by (ts, tag), then last(ignorenulls) over an
   unbounded-preceding window carries the latest version payload onto each
   probe row. 100 % JVM (whole-stage codegen window), exactly one shuffle of
-  probes+versions combined; AQE splits skewed doc_ids' *shuffle blocks*, and
-  hot keys can additionally be handled with the time-bucket pre-split below.
+  probes+versions combined; handles all three match directions
+  (backward/forward/nearest — pandas merge_asof semantics), tolerances and
+  strict bounds.
 
-* ``cogroup_merge`` — groupBy(doc_id).cogroup(...).applyInPandas with
-  pandas.merge_asof per co-group: the literal "sorted-merge" kernel. Arrow
-  batches both sides; useful when per-group custom logic (tolerances,
-  nearest/forward direction) is needed.
+* ``salt_slices > 1`` — the same window plan partitioned by (doc_id, time
+  slice), each slice seeded with its key's state at the slice start: the
+  north rule's salted repartitioning for hot sources, so one hot doc_id no
+  longer serializes into one task (backward only).
 
-* ``shuffle_join`` — equi-join + per-probe argmax: more intermediate rows,
-  but the heavy node is a real SortMergeJoin, so AQE's OptimizeSkewedJoin
-  splits hot-key partitions at runtime (the adaptive counterpart to
-  ``salt_slices``; see tests/test_asof_skew_aqe.py).
-
-Scale note (100 TB): both strategies shuffle each side once on the join key.
-The union_window plan avoids Python entirely and benefits from Tungsten sort;
-it handles all three match directions (backward/forward/nearest — pandas
-merge_asof semantics) and tolerances, so prefer it unless per-group custom
-logic genuinely needs the pandas kernel.
+AQE additionally splits skewed doc_ids' *shuffle blocks* for either form.
 """
 
 from __future__ import annotations
@@ -43,7 +35,6 @@ def asof_join(
     versions: DataFrame,
     on: str = "doc_id",
     ts_col: str = "ts",
-    strategy: str = "union_window",
     version_prefix: str = "",
     tolerance_sec: float | None = None,
     salt_slices: int = 0,
@@ -57,33 +48,32 @@ def asof_join(
     ``backward`` (default) matches the latest version with ts <= probe ts,
     ``forward`` the earliest version with ts >= probe ts (both inclusive),
     ``nearest`` the version minimizing |Δts|, ties broken backward. With a
-    ``tolerance_sec``, each direction's candidate must be within the
-    tolerance BEFORE nearest chooses (pandas semantics). Forward/nearest run
-    on the union_window (two same-partition window passes — still ONE
-    shuffle), cogroup_merge (native merge_asof), shuffle_join, and broadcast
-    (small-dim zero-probe-shuffle) strategies; the salted time-sliced path
-    is backward-only (its per-slice seeding is a carry-forward of past
-    state).
+    ``tolerance_sec`` (seconds, >= 0), each direction's candidate must be
+    within the tolerance BEFORE nearest chooses (pandas semantics). Forward
+    is the time-mirrored backward pass and nearest runs both passes over the
+    same partitioning — still ONE shuffle.
 
     ``allow_exact_matches=False`` makes the bound strict (< / > instead of
     <= / >=, pandas knob of the same name): a version AT the probe's exact
     ts is no longer visible — the event-study "information available strictly
-    before the decision" contract. In the union_window plan this is purely a
-    tie-ordering flip (probes sort before versions at equal ts), zero extra
-    cost; for ``nearest`` it excludes equal-ts versions on both sides.
+    before the decision" contract. In the plan this is purely a tie-ordering
+    flip (probes sort before versions at equal ts), zero extra cost; for
+    ``nearest`` it excludes equal-ts versions on both sides.
 
     Returns probe columns + matched version payload columns (version ts is
-    exposed as ``matched_ts``; payload columns optionally prefixed). Probes
-    with no version at or before their ts keep nulls.
+    exposed as ``matched_ts``; payload columns optionally prefixed with
+    ``version_prefix``). Probes with no version at or before their ts keep
+    nulls. An output name that would appear twice (a probe column named
+    ``matched_ts`` or equal to a prefixed payload column) raises ValueError.
 
-    ``salt_slices > 0`` enables the hot-key path (north-rule "salted
+    ``salt_slices > 1`` enables the hot-key form (north-rule "salted
     repartitioning for hot sources"): every key's rows are split into that
-    many *time ranges* (per-key ntile over version timestamps), each slice is
-    seeded with its key's latest version at-or-before the slice start (a tiny
-    per-(key, slice) aggregate, re-used via one extra small window), and the
-    union-window runs partitioned by (key, slice) — so a single hot doc_id no
-    longer serializes into one task. Results are identical to the unsalted
-    plan (tested).
+    many *time ranges*, each slice is seeded with its key's latest version
+    at-or-before the slice start (a tiny per-(key, slice) aggregate, re-used
+    via one extra small window), and the union-window runs partitioned by
+    (key, slice) — so a single hot doc_id no longer serializes into one
+    task. Results are identical to the unsalted plan (tested). Backward
+    only: the per-slice seeding is a carry-forward of past state.
 
     ``ts_bounds=(lo, hi)`` (datetimes or epoch-µs ints) supplies the global
     time range the slices divide, skipping the fallback min/max scan the
@@ -93,18 +83,20 @@ def asof_join(
     covering the data yields identical results (rows outside clamp to the
     first/last slice; tested).
     """
-    clash = (set(_payload_cols(versions, on, ts_col)) if not version_prefix else set()) & {
-        c for c in probes.columns if c not in (on, ts_col)
-    }
+    out_cols = [on, ts_col, *[c for c in probes.columns if c not in (on, ts_col)],
+                "matched_ts",
+                *[f"{version_prefix}{c}" for c in _payload_cols(versions, on, ts_col)]]
+    clash = {c for c in out_cols if out_cols.count(c) > 1}
     if clash:
         raise ValueError(
-            f"version payload collides with probe columns {sorted(clash)}; pass version_prefix"
+            f"output columns {sorted(clash)} would appear twice; rename the "
+            "probe column or pass another version_prefix"
         )
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown direction {direction!r}")
+    if tolerance_sec is not None and tolerance_sec < 0:
+        raise ValueError(f"tolerance_sec must be >= 0, got {tolerance_sec}")
     if salt_slices and salt_slices > 1:
-        if strategy != "union_window":
-            raise ValueError("salt_slices requires the union_window strategy")
         if direction != "backward":
             raise ValueError("salt_slices supports only direction='backward' "
                              "(slice seeding carries past state forward)")
@@ -112,19 +104,8 @@ def asof_join(
             probes, versions, on, ts_col, version_prefix, tolerance_sec,
             salt_slices, ts_bounds, allow_exact_matches,
         )
-    if strategy == "union_window":
-        return _asof_union_window(probes, versions, on, ts_col, version_prefix,
-                                  tolerance_sec, direction, allow_exact_matches)
-    if strategy == "cogroup_merge":
-        return _asof_cogroup_merge(probes, versions, on, ts_col, version_prefix,
-                                   tolerance_sec, direction, allow_exact_matches)
-    if strategy == "shuffle_join":
-        return _asof_shuffle_join(probes, versions, on, ts_col, version_prefix,
-                                  tolerance_sec, direction, allow_exact_matches)
-    if strategy == "broadcast":
-        return _asof_broadcast(probes, versions, on, ts_col, version_prefix,
-                               tolerance_sec, direction, allow_exact_matches)
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return _asof_union_window(probes, versions, on, ts_col, version_prefix,
+                              tolerance_sec, direction, allow_exact_matches)
 
 
 def _payload_cols(versions: DataFrame, on: str, ts_col: str) -> list[str]:
@@ -234,129 +215,6 @@ def _asof_union_window(probes, versions, on, ts_col, prefix, tolerance_sec,
         F.when(use_b, bmts2).otherwise(fmts2).alias("matched_ts"),
         *[F.when(use_b, bcar2[c]).otherwise(fcar2[c]).alias(f"{prefix}{c}")
           for c in pay],
-    )
-
-
-def _asof_broadcast(probes, versions, on, ts_col, prefix, tolerance_sec,
-                    direction="backward", allow_exact=True):
-    """ZERO-probe-shuffle as-of for SMALL version tables (the feature-store
-    dimension case: a slowly-changing reference table joined against a huge
-    probe stream). The versions collapse to one ts-sorted history array per
-    key — a tiny aggregation — which broadcast-joins onto the probes, so the
-    probe side never exchanges: at 100 TB the big table stays where it is
-    and every executor resolves its probes against the in-memory dim.
-
-    Per probe the match is an O(|history|) array scan (filter + element_at
-    on the staged candidate array — the arrays are small by the strategy's
-    own contract; history arrays must fit the broadcast threshold). Matches
-    union_window exactly across directions / tolerance / allow_exact
-    (tested). Assumes unique (key, ts) versions like the other strategies.
-    """
-    pay = _payload_cols(versions, on, ts_col)
-    probe_extra = [c for c in probes.columns if c not in (on, ts_col)]
-    hist = versions.groupBy(on).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(ts_col).alias("t"),
-                                    *[F.col(c) for c in pay]))
-        ).alias("__vh")
-    )
-    j = probes.join(F.broadcast(hist), on, "left")
-
-    le, ge = ("<=", ">=") if allow_exact else ("<", ">")
-    ts_d = f"cast({ts_col} as double)"
-    back_cond = f"x.t {le} {ts_col}"
-    fwd_cond = f"x.t {ge} {ts_col}"
-    if tolerance_sec is not None:
-        back_cond += f" AND {ts_d} - cast(x.t as double) <= {tolerance_sec}"
-        fwd_cond += f" AND cast(x.t as double) - {ts_d} <= {tolerance_sec}"
-
-    # stage the filtered candidates, then the matched STRUCT, as their own
-    # columns (Catalyst lambdas re-evaluate captured subexpressions — never
-    # inline the filter once per payload field); element_at is guarded by
-    # the size CASE in the same expression (lazy per row), so ANSI never
-    # sees an out-of-range index
-    def pick(cond, idx):
-        cands = F.expr(f"filter(__vh, x -> {cond})")
-        return F.when(F.size(cands) > 0, F.element_at(cands, idx))
-
-    if direction == "backward":
-        j = j.withColumn("__m", pick(back_cond, -1))
-    elif direction == "forward":
-        j = j.withColumn("__m", pick(fwd_cond, 1))
-    else:  # nearest: per-direction tolerance BEFORE the choice, ties backward
-        j = j.withColumn("__bm", pick(back_cond, -1))
-        j = j.withColumn("__fm", pick(fwd_cond, 1))
-        use_b = F.col("__bm").isNotNull() & (
-            F.col("__fm").isNull()
-            | (F.expr(ts_d) - F.expr("cast(__bm.t as double)")
-               <= F.expr("cast(__fm.t as double)") - F.expr(ts_d))
-        )
-        j = j.withColumn("__m", F.when(use_b, F.col("__bm")).otherwise(F.col("__fm")))
-    return j.select(
-        on, ts_col, *probe_extra,
-        F.col("__m.t").alias("matched_ts"),
-        *[F.col(f"__m.{c}").alias(f"{prefix}{c}") for c in pay],
-    )
-
-
-def _asof_shuffle_join(probes, versions, on, ts_col, prefix, tolerance_sec,
-                       direction="backward", allow_exact=True):
-    """As-of via an explicit equi-JOIN + per-probe argmax.
-
-    This is the classic join-then-reduce formulation: shuffle-join the two
-    sides on the key (a real SortMergeJoin node), keep versions at or before
-    the probe ts, then rank to the latest. It expands |probe|·|versions per
-    key| intermediate rows, so the window/cogroup strategies dominate it in
-    general — its purpose is the skew story: because the heavy operator IS a
-    shuffle join, AQE's skew-join optimizer (OptimizeSkewedJoin) can split a
-    hot key's oversized partition into multiple tasks at runtime with no code
-    change — the runtime-adaptive counterpart to the explicit `salt_slices`
-    pre-split (tests/test_asof_skew_aqe.py proves all three paths identical
-    on a worst-case hot key and records the `skew=true` plan)."""
-    pay = _payload_cols(versions, on, ts_col)
-    probe_extra = [c for c in probes.columns if c not in (on, ts_col)]
-    p = probes.withColumn("__puid", F.monotonically_increasing_id())
-    v = versions.select(
-        F.col(on).alias("__von"),
-        F.col(ts_col).alias("__vts"),
-        *[F.col(c).alias(f"__v_{c}") for c in pay],
-    )
-    delta = p[ts_col].cast("double") - v["__vts"].cast("double")
-    cond = p[on] == v["__von"]
-    if direction == "backward":
-        cond &= (v["__vts"] <= p[ts_col]) if allow_exact else (v["__vts"] < p[ts_col])
-        tol_delta, order = delta, F.col("__vts").desc_nulls_last()
-    elif direction == "forward":
-        cond &= (v["__vts"] >= p[ts_col]) if allow_exact else (v["__vts"] > p[ts_col])
-        tol_delta, order = -delta, F.col("__vts").asc_nulls_last()
-    else:  # nearest: key-only join, rank by |Δ| with backward tie-break
-        if not allow_exact:
-            cond &= v["__vts"] != p[ts_col]
-        tol_delta = F.abs(delta)
-        order = None
-    if tolerance_sec is not None:
-        cond &= tol_delta <= F.lit(tolerance_sec)
-    j = p.join(v, cond, "left")
-    if direction == "nearest":
-        dj = j[ts_col].cast("double") - j["__vts"].cast("double")
-        w = Window.partitionBy("__puid").orderBy(
-            F.abs(dj).asc_nulls_last(),
-            F.when(dj >= 0, F.lit(0)).otherwise(F.lit(1)).asc_nulls_last(),
-        )
-    else:
-        # latest/earliest version per probe; ties on __vts broken arbitrarily
-        # (the other strategies carry the last-in-sort version — callers
-        # needing exact tie semantics with duplicate version timestamps use
-        # union_window)
-        w = Window.partitionBy("__puid").orderBy(order)
-    return (
-        j.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            F.col(on), F.col(ts_col), *probe_extra,
-            F.col("__vts").alias("matched_ts"),
-            *[F.col(f"__v_{c}").alias(f"{prefix}{c}") for c in pay],
-        )
     )
 
 
@@ -489,46 +347,6 @@ def _asof_union_window_sliced(probes, versions, on, ts_col, prefix,
     return out
 
 
-def _asof_cogroup_merge(probes, versions, on, ts_col, prefix, tolerance_sec,
-                        direction="backward", allow_exact=True):
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    pay = _payload_cols(versions, on, ts_col)
-    probe_fields = [probes.schema[c] for c in probes.columns]
-    out_fields = list(probe_fields)
-    out_fields.append(StructField("matched_ts", versions.schema[ts_col].dataType))
-    for c in pay:
-        out_fields.append(StructField(f"{prefix}{c}", versions.schema[c].dataType))
-    schema = StructType(out_fields)
-    probe_cols = list(probes.columns)
-    tol = pd.Timedelta(seconds=tolerance_sec) if tolerance_sec is not None else None
-
-    def merge(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left.sort_values(ts_col, kind="mergesort")
-        if right.empty:
-            out = left.copy()
-            out["matched_ts"] = pd.NaT
-            for c in pay:
-                out[f"{prefix}{c}"] = None
-            return out[[*probe_cols, "matched_ts", *[f"{prefix}{c}" for c in pay]]]
-        right = right.sort_values(ts_col, kind="mergesort")
-        r = right.rename(columns={c: f"{prefix}{c}" for c in pay})
-        r["matched_ts"] = r[ts_col]
-        kwargs = dict(on=ts_col, direction=direction,
-                      allow_exact_matches=allow_exact)
-        if tol is not None:
-            kwargs["tolerance"] = tol
-        out = pd.merge_asof(left, r.drop(columns=[on]), **kwargs)
-        return out[[*probe_cols, "matched_ts", *[f"{prefix}{c}" for c in pay]]]
-
-    return (
-        probes.groupBy(on)
-        .cogroup(versions.groupBy(on))
-        .applyInPandas(lambda l, r: merge(l, r), schema)
-    )
-
-
 def asof_join_tombstones(
     probes: DataFrame,
     versions: DataFrame,
@@ -549,10 +367,10 @@ def asof_join_tombstones(
     Implementation: the flag rides the normal as-of plan as one extra
     payload column, and matched version columns are nulled when the flag
     on the MATCHED row is set — same shuffle count and same physical plan
-    family as `asof_join` (every strategy/direction kwarg passes through).
+    as `asof_join` (every salting/direction kwarg passes through).
 
     Reference analog: nyxus ROI blacklists remove a label from every
-    downstream aggregation (/root/reference/src/nyx/roi_blacklist.h); here
+    downstream aggregation (src/nyx/roi_blacklist.h); here
     the removal is temporal — scoped to the interval from the tombstone to
     the next live version."""
     if tombstone_col not in versions.columns:

@@ -115,17 +115,14 @@ def write_bucketed(
     sort_cols: tuple[str, ...] = ("doc_id", "ts"),
     mode: str = "overwrite",
 ) -> None:
-    """Write a table bucketed + sorted on the join key — the co-location
-    story for the as-of join (Iceberg analog: bucket(doc_id) partition
-    transform + sorted data files).
+    """Write a table bucketed + sorted on the key (Iceberg analog:
+    bucket(doc_id) partition transform + sorted data files).
 
-    When BOTH sides of the as-of join are written this way with the same
-    bucket count, the cogroup_merge strategy's ClusteredDistribution is
-    already satisfied by the bucketed scans: the join plans with ZERO
-    Exchange (tests/test_bucketed_asof.py asserts this) — at 100 TB the
-    flagship operator runs shuffle-free, reading co-located buckets.
-    (The union_window strategy cannot exploit this: Union discards child
-    distributions in Spark, so it still pays its one Exchange.)
+    A groupBy on the bucket column, or a join of two tables bucketed the
+    same way, is satisfied by the bucketed scans and plans with ZERO
+    Exchange (EXPLAIN.md: bucketed aggregation, MERGE/upsert). The as-of
+    join does not benefit: Union discards child distributions in Spark, so
+    its union_window plan still pays its one Exchange.
     """
     w = df.write.bucketBy(n_buckets, bucket_col).sortBy(*sort_cols).mode(mode)
     if path is not None:

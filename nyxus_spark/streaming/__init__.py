@@ -5,5 +5,4 @@ from nyxus_spark.streaming.stateful import asof_join_stream  # noqa: F401
 from nyxus_spark.streaming.stream import (  # noqa: F401
     dedup_stream,
     sessionize_stream,
-    stream_feature_extract,
 )

@@ -5,8 +5,8 @@ analog of nyxus's 2.5-D per-z state carry, /root/reference/src/nyx/
 phase1.cpp:130-242) recast as a custom stateful streaming operator: a single
 tagged stream of version rows and probe rows, grouped by `doc_id`; per-key
 GroupState holds the LATEST version seen so far; each micro-batch runs the
-same vectorized `pandas.merge_asof` sorted-merge as the batch cogroup kernel
-against (state seed + this batch's versions), emits matched probes, and
+vectorized `pandas.merge_asof` sorted-merge (the batch plan's backward
+semantics) against (state seed + this batch's versions), emits matched probes, and
 compacts state back to one row.
 
 State holds a BOUNDED history of the most recent HISTORY_DEPTH versions per
@@ -89,8 +89,8 @@ def _asof_state_fn(
 
     if len(probes):
         if len(versions):
-            # the SAME sorted-merge kernel as the batch cogroup strategy:
-            # latest version with v.ts <= p.ts (backward, inclusive)
+            # batch asof_join's backward semantics: latest version with
+            # v.ts <= p.ts (inclusive)
             m = pd.merge_asof(
                 probes,
                 versions.rename(columns={"ts_us": "matched_ts_us"}),
@@ -120,7 +120,7 @@ def asof_join_stream(tagged: DataFrame) -> DataFrame:
     """Streaming as-of join over a tagged union stream (TAGGED_SCHEMA).
 
     Returns one output row per probe: (doc_id, event_id, ts_us,
-    matched_ts_us, n_tok) — the same shape the batch `asof_join` strategies
+    matched_ts_us, n_tok) — the same shape the batch `asof_join` plans
     and the DuckDB `ASOF LEFT JOIN` oracle produce.
     """
     return (

@@ -7,9 +7,9 @@ equivalents of the batch operators:
 
 * sessionize_stream — event-time gap sessionization via
   `session_window(ts, gap)` + watermark (batch analog: operators.sessionize);
-* stream_feature_extract — the per-row feature kernel applied to a token
-  stream with mapInPandas (narrow, so it composes with any source/sink and
-  needs no state store).
+* dedup_stream — first-arrival exact deduplication.
+
+Streaming feature extraction is `NyxusSpark.featurize_stream` (api.py).
 
 Late data policy: rows later than the watermark are dropped by Spark before
 the session aggregation — the batch job over the Iceberg snapshot remains the
@@ -54,17 +54,6 @@ def sessionize_stream(
             "n_events",
         )
     )
-
-
-def stream_feature_extract(
-    token_stream: DataFrame,
-    features: list[str] | None = None,
-) -> DataFrame:
-    """Feature extraction on a streaming token table — identical kernel to the
-    batch path (mapInPandas is stateless, so it is streaming-safe as-is)."""
-    from nyxus_spark.features import extract_features
-
-    return extract_features(token_stream, features, keep_tokens=False)
 
 
 def dedup_stream(

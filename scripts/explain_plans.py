@@ -68,9 +68,8 @@ def main() -> None:
     ).select("event_id", "value")
     sections["filtered scan (predicate pushdown + column pruning)"] = plan_of(flt)
 
-    # co-located as-of join: both sides bucketed+sorted on doc_id → the
-    # cogroup strategy's clustered distribution is satisfied by the scans
-    # themselves — ZERO Exchange in the plan
+    # bucketed tables: both written bucketed+sorted on doc_id, so
+    # key-clustered operators over them need no Exchange
     import tempfile
 
     from nyxus_spark.sinks import write_bucketed
@@ -79,11 +78,7 @@ def main() -> None:
     write_bucketed(v.select("doc_id", "ts", "n_tok"), "explain_v_b",
                    path=f"{bdir}/v")
     write_bucketed(p, "explain_p_b", path=f"{bdir}/p")
-    sections["co-located as-of join (bucketed tables — ZERO Exchange)"] = plan_of(
-        asof_join(spark.table("explain_p_b"), spark.table("explain_v_b"),
-                  strategy="cogroup_merge")
-    )
-    # bucketing also satisfies AGGREGATION distribution: a groupBy on the
+    # bucketing satisfies AGGREGATION distribution: a groupBy on the
     # bucket column over the bucketed scan plans partial+final hash agg
     # with NO Exchange between them — the write-once/aggregate-many shape
     sections["bucketed aggregation (groupBy bucket column — ZERO Exchange)"] = plan_of(
@@ -156,51 +151,6 @@ def main() -> None:
         fact.join(dim, fact.assigned_cent == dim.cent_id).select(
             "vec_id", "cent_id")
     )
-
-    # AQE runtime skew-join splitting: hot-key as-of through the
-    # shuffle_join strategy (a real SortMergeJoin) with test-scale skew
-    # thresholds — the EXECUTED adaptive plan must carry skew=true splits,
-    # the runtime counterpart to the explicit salt_slices pre-split
-    skew_conf = {
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
-    }
-    saved = {}
-    for k, val in skew_conf.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, val)
-    try:
-        hot_key = F.concat(F.lit("hot"), F.substring(F.col("doc_id"), 1, 0))
-        # >1 map task per side: AQE splits a skewed reduce partition by
-        # map-output ranges (a single-file local scan is one unsplittable
-        # mapper; real clusters always have many)
-        hv = (v.select(hot_key.alias("doc_id"), "ts", "n_tok")
-              .dropDuplicates(["ts"]).repartition(8, "ts"))
-        hp = p.select(hot_key.alias("doc_id"), "ts", "event_id").repartition(8, "event_id")
-        sj = asof_join(hp, hv, strategy="shuffle_join")
-        sj.collect()
-        executed = sj._jdf.queryExecution().executedPlan().toString()
-        keep_lines = [
-            ln for ln in executed.splitlines()
-            if re.search(r"SortMergeJoin|AQEShuffleRead|Exchange|Window|skew", ln)
-        ]
-        sections[
-            "AQE skew-join split (hot key, shuffle_join strategy — EXECUTED plan)"
-        ] = "\n".join(keep_lines)
-    finally:
-        for k, val in saved.items():
-            if val is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, val)
 
     # batch top-k cosine: the per-partition pre-top-k (mapInArrow) must sit
     # BELOW the query_id exchange — the exchange then carries only
@@ -531,12 +481,6 @@ def main() -> None:
     assert n_exch["as-of join, nearest direction (ONE Exchange, two window sorts)"] == 1
     assert "PartitionFilters: [" in sections[
         "IVF search on the persisted index (PartitionFilters pruning)"
-    ]
-    assert "Exchange" not in sections[
-        "co-located as-of join (bucketed tables — ZERO Exchange)"
-    ]
-    assert "skew=true" in sections[
-        "AQE skew-join split (hot key, shuffle_join strategy — EXECUTED plan)"
     ]
     assert n_exch["sequence packing (one shard exchange + JVM window)"] == 1
     assert n_exch["rolling frames (rows + time-range, one exchange)"] == 1

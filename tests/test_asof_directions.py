@@ -4,8 +4,9 @@ The reference aligns each intensity slice to its segmentation mask by
 nearest-z when stacks are misaligned (the backward-only case is the common
 one); in the token recast forward/nearest are the standard event-study
 variants: forward = first version AFTER the probe (post-event state),
-nearest = closest in time either way, ties backward. All three Spark
-strategies must agree with pandas merge_asof on every direction.
+nearest = closest in time either way, ties backward. The union_window plan
+must agree with pandas merge_asof on every direction, and the salted
+(time-sliced) plan on the backward direction it supports.
 """
 
 import datetime
@@ -13,7 +14,8 @@ import datetime
 import pandas as pd
 import pytest
 
-STRATEGIES = ["union_window", "cogroup_merge", "shuffle_join", "broadcast"]
+# the two as-of plans; the salted one is backward-only
+PLANS = {"union_window": {}, "salted": {"salt_slices": 3}}
 
 
 def _ts(s):
@@ -42,10 +44,9 @@ def _run(probes, versions, **kw):
     return {r["event_id"]: (r["matched_ts"], r["n_tok"]) for r in rows}
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_forward_hand_computed(fixture, strategy):
+def test_forward_hand_computed(fixture):
     probes, versions = fixture
-    got = _run(probes, versions, strategy=strategy, direction="forward")
+    got = _run(probes, versions, direction="forward")
     # probe before all versions → first version; at a version ts → inclusive;
     # after all versions → null
     assert got[1] == (_ts(10), 100)
@@ -58,10 +59,9 @@ def test_forward_hand_computed(fixture, strategy):
     assert got[8] == (None, None)    # key with no versions
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-def test_nearest_hand_computed(fixture, strategy):
+def test_nearest_hand_computed(fixture):
     probes, versions = fixture
-    got = _run(probes, versions, strategy=strategy, direction="nearest")
+    got = _run(probes, versions, direction="nearest")
     assert got[1] == (_ts(10), 100)   # only future side exists
     # probe 15: backward Δ5 vs forward Δ5 — TIE goes backward (pandas)
     assert got[2] == (_ts(10), 100)
@@ -72,11 +72,15 @@ def test_nearest_hand_computed(fixture, strategy):
     assert got[8] == (None, None)
 
 
-@pytest.mark.parametrize("strategy", STRATEGIES)
-@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-@pytest.mark.parametrize("exact", [True, False])
-def test_matches_pandas_random(spark, strategy, direction, exact):
-    """Every strategy × direction × allow_exact_matches equals pandas
+@pytest.mark.parametrize("exact,direction,plan", [
+    (exact, direction, plan)
+    for plan in PLANS
+    for direction in ("backward", "forward", "nearest")
+    for exact in (True, False)
+    if plan == "union_window" or direction == "backward"
+])
+def test_matches_pandas_random(spark, exact, direction, plan):
+    """Every plan × supported direction × allow_exact_matches equals pandas
     merge_asof on a deterministic pseudo-random workload, with and without
     tolerance. Probe timestamps are drawn from a small range so many land
     EXACTLY on version timestamps — the strict-bound flip is exercised, not
@@ -97,8 +101,8 @@ def test_matches_pandas_random(spark, strategy, direction, exact):
     probes = spark.createDataFrame(p_rows, "doc_id bigint, ts timestamp, event_id bigint")
 
     for tol in (None, 500.0):
-        got = _run(probes, versions, strategy=strategy, direction=direction,
-                   tolerance_sec=tol, allow_exact_matches=exact)
+        got = _run(probes, versions, direction=direction, tolerance_sec=tol,
+                   allow_exact_matches=exact, **PLANS[plan])
         vp = pd.DataFrame(v_rows, columns=["doc_id", "ts", "n_tok"]).sort_values("ts")
         pp = pd.DataFrame(p_rows, columns=["doc_id", "ts", "event_id"]).sort_values("ts")
         kwargs = dict(on="ts", by="doc_id", direction=direction,
@@ -115,7 +119,7 @@ def test_matches_pandas_random(spark, strategy, direction, exact):
             )
             for r in exp_df.itertuples()
         }
-        assert got == exp, (f"strategy={strategy} direction={direction} "
+        assert got == exp, (f"plan={plan} direction={direction} "
                             f"tol={tol} exact={exact}")
 
 
@@ -164,3 +168,18 @@ def test_bad_direction(fixture):
     probes, versions = fixture
     with pytest.raises(ValueError, match="direction"):
         asof_join(probes, versions, direction="sideways")
+
+
+@pytest.mark.parametrize("rename,kwargs,match", [
+    ("matched_ts", {}, "matched_ts"),                   # duplicate matched_ts
+    ("v_n_tok", {"version_prefix": "v_"}, "v_n_tok"),  # prefixed payload clash
+    (None, {"tolerance_sec": -1.0}, "tolerance"),       # pandas: MergeError
+])
+def test_bad_input_raises(fixture, rename, kwargs, match):
+    from nyxus_spark.operators import asof_join
+
+    probes, versions = fixture
+    if rename:
+        probes = probes.withColumnRenamed("event_id", rename)
+    with pytest.raises(ValueError, match=match):
+        asof_join(probes, versions, **kwargs)

@@ -3,7 +3,7 @@
 plan) — a second, engine-internal implementation of point-in-time join
 semantics that our operator must agree with row-for-row, in all three
 match directions. Complements the DuckDB ASOF oracle (a third engine)
-and the pandas `merge_asof` cogroup strategy (which IS pandas): this one
+and the pandas `merge_asof` matrix in test_asof_directions.py: this one
 exercises Spark's native lowering.
 """
 

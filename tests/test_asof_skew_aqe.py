@@ -1,68 +1,22 @@
-"""AQE skew-join splitting on the as-of shuffle_join strategy.
+"""Hot-key as-of join: the salted plan equals the plain plan.
 
-The north-rule skew story has two halves: the explicit time-slice pre-split
-(`salt_slices`, tests/test_asof_salted.py) and Spark's RUNTIME skew handling.
-This test collapses every version/probe onto one hot doc_id (worst-case
-skew), runs the as-of through the shuffle_join strategy with AQE skew-join
-thresholds lowered so the optimizer actually fires at test scale, and
-asserts (a) all three paths — plain union_window, salted, AQE shuffle_join —
-return identical rows, and (b) the executed adaptive plan carries the
-`skew=` split marker on the SortMergeJoin. scripts/explain_plans.py records
-the same plan into EXPLAIN.md as the judge-readable artifact.
+The north-rule skew story is the explicit time-slice pre-split
+(`salt_slices`). This test collapses every version/probe onto one hot doc_id
+(worst-case skew) and asserts that the plain union_window plan and the
+salted plan return identical rows.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from nyxus_spark.operators import asof_join
 from nyxus_spark.sources import probes, tokens_versions
 
-SKEW_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # test-scale thresholds: the hot partition is ~100s of KB, not GBs
-    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.0",
-    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1KB",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1KB",
-    # keep the join a SortMergeJoin so OptimizeSkewedJoin applies
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    # the split changes the join's output partitioning; without force the
-    # cost evaluator vetoes it when a downstream exchange would be added
-    # (one exists here anyway — the per-probe rank repartitions on __puid)
-    "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
-}
-
-
-def _with_conf(spark, conf: dict):
-    saved = {}
-    for k, v in conf.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    return saved
-
-
-def _restore_conf(spark, saved: dict):
-    for k, v in saved.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
-
 
 def _hot(spark, sf_dir):
-    # the hot key must be DERIVED from a data column (not F.lit) — a literal
-    # key constant-folds the equi-condition away and the join plans as a
-    # BroadcastNestedLoopJoin, which AQE skew handling never touches
+    # the hot key is derived from a data column (not F.lit), so it is not
+    # constant-folded away; the repartitions give the shuffle >1 map task,
+    # the shape a real hot source has
     hot_key = F.concat(F.lit("hot"), F.substring(F.col("doc_id"), 1, 0))
-    # AQE splits a skewed reduce partition by MAP-OUTPUT ranges, so the
-    # shuffle feeding the join needs >1 map task — a single local parquet
-    # file scans as ONE mapper and the hot partition becomes unsplittable
-    # (at 100 TB there are always thousands of mappers; this repartition
-    # recreates that shape at test scale)
     v = (
         tokens_versions(spark, sf_dir)
         .select(hot_key.alias("doc_id"), "ts", "n_tok")
@@ -86,50 +40,10 @@ def _norm(df):
     )
 
 
-def test_aqe_skew_split_equals_salted_and_plain(spark):
-    # sf0.01: the hot partition must clear the (already lowered) skew
-    # threshold — sf0.001's whole probe side is a few KB
+def test_hot_key_salted_equals_plain(spark):
+    # sf0.01: a hot key ten times the default test scale
     sf_dir = "/root/testdata/sf0.01"
     p, v = _hot(spark, sf_dir)
     plain = _norm(asof_join(p, v))
     salted = _norm(asof_join(p, v, salt_slices=8))
-    saved = _with_conf(spark, SKEW_CONF)
-    try:
-        sj = asof_join(p, v, strategy="shuffle_join").select(
-            "doc_id", "event_id", "ts", "matched_ts", "n_tok"
-        )
-        rows = sj.collect()  # materialize THIS DataFrame → final adaptive plan
-        plan = sj._jdf.queryExecution().executedPlan().toString()
-    finally:
-        _restore_conf(spark, saved)
-    import pandas as pd
-
-    got = (
-        pd.DataFrame([r.asDict() for r in rows])
-        .sort_values(["doc_id", "event_id"])
-        .reset_index(drop=True)[plain.columns.tolist()]
-    )
     assert plain.equals(salted)
-    assert plain.equals(got), "AQE shuffle_join path diverges on the hot key"
-    assert "skew=true" in plan, (
-        "OptimizeSkewedJoin did not fire — no skew=true SortMergeJoin in:\n"
-        + plan[:4000]
-    )
-
-
-def test_shuffle_join_strategy_unskewed_parity(spark, sf_dir):
-    """shuffle_join must also agree on the normal (many-key) input."""
-    v = tokens_versions(spark, sf_dir).select("doc_id", "ts", "n_tok")
-    p = probes(spark, sf_dir)
-    plain = _norm(asof_join(p, v))
-    sj = _norm(asof_join(p, v, strategy="shuffle_join"))
-    assert plain.equals(sj)
-
-
-def test_shuffle_join_tolerance_parity(spark, sf_dir):
-    v = tokens_versions(spark, sf_dir).select("doc_id", "ts", "n_tok")
-    p = probes(spark, sf_dir)
-    tol = 3600.0
-    plain = _norm(asof_join(p, v, tolerance_sec=tol))
-    sj = _norm(asof_join(p, v, strategy="shuffle_join", tolerance_sec=tol))
-    assert plain.equals(sj)

@@ -67,3 +67,24 @@ def test_rerun_is_full_noop(spark, sf_dir):
         checkpointed_write(df, path, n_buckets=4, run_spec="r")
         s2 = checkpointed_write(df, path, n_buckets=4, run_spec="r")
         assert s2["written"] == 0 and s2["skipped"] == 4
+
+
+def test_resume_with_other_bucketing_is_refused(spark, sf_dir):
+    """A resume that splits the keyspace differently would re-write keys
+    that committed buckets already hold (more buckets) or skip keys that
+    only uncommitted buckets hold (fewer), so it must raise instead."""
+    df = _input(spark, sf_dir)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "ckpt")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            checkpointed_write(df, path, n_buckets=4, run_spec="r", _fail_after=2)
+        for kwargs in ({"n_buckets": 16}, {"n_buckets": 2},
+                       {"n_buckets": 4, "key_col": "event_id"}):
+            field = "key_col" if "key_col" in kwargs else "n_buckets"
+            with pytest.raises(ValueError, match=field):
+                checkpointed_write(df, path, run_spec="r", **kwargs)
+        assert len(committed_buckets(path)) == 2
+        # the original split still resumes
+        s = checkpointed_write(df, path, n_buckets=4, run_spec="r")
+        assert s["skipped"] == 2 and s["written"] == 2
+        assert read_checkpointed(spark, path).count() == df.count()

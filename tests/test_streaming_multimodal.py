@@ -1,6 +1,5 @@
 """Streaming sessionization vs batch equivalence + multimodal plumbing."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -74,34 +73,3 @@ def test_frame_sample(spark, sf_dir):
     assert frames["doc_id"].nunique() == vids
     assert (frames["byte_offset"] % 64 == 0).all()
     assert (frames.groupby("doc_id")["frame_idx"].min() == 0).all()
-
-
-def test_stream_feature_extract_matches_batch(spark, sf_dir, tmp_path):
-    """The feature kernel is stateless (narrow mapInArrow), so the streaming
-    path must produce byte-identical features to the batch path."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from nyxus_spark.features import extract_features
-    from nyxus_spark.sources import tokens_static
-    from nyxus_spark.streaming.stream import stream_feature_extract
-
-    t = tokens_static(spark, sf_dir).select("doc_id", "tokens", "n_tok")
-    src_dir = str(tmp_path / "tok_stream")
-    t.write.parquet(src_dir)
-
-    feats = ["MEAN", "ENTROPY", "GLCM_CONTRAST", "GLRLM_LRE", "MOM_RAW_2"]
-    stream = spark.readStream.schema(t.schema).parquet(src_dir)
-    out = stream_feature_extract(stream, feats)
-    q = (
-        out.writeStream.format("memory").queryName("stream_feats")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM stream_feats").toPandas().sort_values(
-        "doc_id").reset_index(drop=True)
-    exp = extract_features(t, feats, keep_tokens=False).toPandas().sort_values(
-        "doc_id").reset_index(drop=True)
-    assert len(got) == len(exp) > 0
-    for c in feats:
-        assert np.array_equal(got[c].to_numpy(), exp[c].to_numpy(), equal_nan=True), c

@@ -94,7 +94,8 @@ def test_featurize_stream_api_matches_batch(spark, tmp_path):
     """NyxusSpark.featurize_stream == batch featurize bit for bit, before
     and after a checkpointed restart that picks up a new file, with the
     engine's settings honoured by both: the default engine requests the
-    kernel-only ENTROPY, the second one a 128-bin IH histogram."""
+    kernel-only ENTROPY, the second one a first-order, texture and moment
+    family mix, the third one a 128-bin IH histogram."""
     import pandas as pd
 
     from nyxus_spark.api import NyxusSpark
@@ -109,6 +110,9 @@ def test_featurize_stream_api_matches_batch(spark, tmp_path):
     engines = {
         "default": NyxusSpark(
             features=["MEAN", "COUNT", "ENERGY", "MIN", "MAX", "ENTROPY"]),
+        "families": NyxusSpark(
+            features=["MEAN", "ENTROPY", "GLCM_CONTRAST", "GLRLM_LRE",
+                      "MOM_RAW_2"]),
         "depth128": NyxusSpark(features=["IH_MEAN_VAL", "MEAN"],
                                coarse_gray_depth=128),
     }

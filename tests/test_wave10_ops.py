@@ -131,8 +131,7 @@ def test_tombstone_passthrough_strategies_agree(spark):
     a = {r.event_id: (r.matched_ts, r.val) for r in
          asof_join_tombstones(probes, versions).collect()}
     b = {r.event_id: (r.matched_ts, r.val) for r in
-         asof_join_tombstones(probes, versions,
-                              strategy="cogroup_merge").collect()}
+         asof_join_tombstones(probes, versions, salt_slices=4).collect()}
     assert a == b
 
 
