@@ -33,13 +33,24 @@ def test_sliced_with_hot_key(spark, sf_dir):
     ).dropDuplicates(["ts"])
     p = probes(spark, sf_dir).select(F.lit("hot").alias("doc_id"), "ts", "event_id")
     plain = _norm(asof_join(p, v))
-    sliced = _norm(asof_join(p, v, salt_slices=8))
-    assert plain.equals(sliced)
-    # the sliced plan must actually fan the hot key over several partitions:
-    # count distinct (key, slice) groups used
-    from nyxus_spark.operators.asof_join import _asof_union_window_sliced  # noqa
+    assert len(plain) > 0 and plain.equals(_norm(asof_join(p, v, salt_slices=8)))
+    # the sliced plan must fan the hot key out over several window
+    # partitions, where the plain plan keeps it in one. The steps after the
+    # window are narrow, so each output row's partition id is its window
+    # partition (matched_ts is selected so the window is not pruned away);
+    # coalescing would fold the few small partitions into one.
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        def n_parts(df):
+            pids = df.select(F.spark_partition_id().alias("pid"), "matched_ts")
+            return pids.toPandas()["pid"].nunique()
 
-    assert len(plain) > 0
+        assert n_parts(asof_join(p, v)) == 1
+        assert n_parts(asof_join(p, v, salt_slices=8)) >= 2
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_sliced_with_explicit_bounds(spark, sf_dir):

@@ -88,3 +88,95 @@ def test_resume_with_other_bucketing_is_refused(spark, sf_dir):
         s = checkpointed_write(df, path, n_buckets=4, run_spec="r")
         assert s["skipped"] == 2 and s["written"] == 2
         assert read_checkpointed(spark, path).count() == df.count()
+
+
+def _counted(spark, df):
+    """`df` behind a pass-through mapInArrow that counts the rows it sees:
+    how many upstream rows a write computed."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def passthrough(batches):
+        for rb in batches:
+            acc.add(rb.num_rows)
+            yield rb
+
+    return df.mapInArrow(passthrough, df.schema), acc
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_upstream_computed_once_per_run(spark, sf_dir):
+    """Each bucket job filters one cached computation of the input instead of
+    re-running the upstream plan (kernels included) once per bucket."""
+    base = _input(spark, sf_dir)
+    n = base.count()
+    spark.catalog.clearCache()
+    with tempfile.TemporaryDirectory() as d:
+        for nb in (1, 4, 16):
+            df, acc = _counted(spark, base)
+            path = os.path.join(d, f"ckpt{nb}")
+            s = checkpointed_write(df, path, n_buckets=nb, run_spec="r")
+            assert acc.value == n, f"n_buckets={nb}: {acc.value} upstream rows for {n}"
+            assert s["rows_written"] == n == sum(
+                m["rows"] for m in committed_buckets(path).values())
+            assert _cache_empty(spark)
+        # a killed run and its resume each compute the upstream at most once
+        df, acc = _counted(spark, base)
+        path = os.path.join(d, "killed")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            checkpointed_write(df, path, n_buckets=4, run_spec="r", _fail_after=2)
+        assert acc.value <= n
+        assert _cache_empty(spark)
+        df, acc = _counted(spark, base)
+        s = checkpointed_write(df, path, n_buckets=4, run_spec="r")
+        assert s["skipped"] == 2 and s["written"] == 2
+        assert acc.value <= n
+        assert _cache_empty(spark)
+        assert read_checkpointed(spark, path).count() == n
+        # nothing pending: no plan is run at all
+        df, acc = _counted(spark, base)
+        assert checkpointed_write(df, path, n_buckets=4, run_spec="r")["written"] == 0
+        assert acc.value == 0
+
+
+def test_empty_run_spec_is_refused(spark, sf_dir):
+    df = _input(spark, sf_dir).limit(20)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "ckpt")
+        with pytest.raises(ValueError, match="run_spec"):
+            checkpointed_write(df, path, n_buckets=2, run_spec="")
+        assert not os.path.exists(path)
+
+
+def test_non_local_path_is_refused(spark, sf_dir, monkeypatch):
+    """Manifests are written with driver-local file calls, so a cluster URI
+    must raise before any Spark job instead of creating a local `hdfs:`
+    directory while the data goes elsewhere; `file:` URIs work."""
+    df = _input(spark, sf_dir).limit(20)
+    sc = spark.sparkContext
+    with tempfile.TemporaryDirectory() as d:
+        monkeypatch.chdir(d)
+        sc.setJobGroup("ckpt-non-local", "non-local checkpoint paths")
+        try:
+            for uri, scheme in (("hdfs://nn:8020/ckpt", "hdfs"),
+                                ("s3a://bucket/ckpt", "s3a"),
+                                ("file://otherhost/tmp/ckpt", "file")):
+                with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+                    checkpointed_write(df, uri, n_buckets=2, run_spec="r")
+                with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+                    committed_buckets(uri)
+                with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+                    read_checkpointed(spark, uri)
+            assert list(sc.statusTracker().getJobIdsForGroup("ckpt-non-local")) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert os.listdir(d) == []
+        path = os.path.join(d, "ckpt")
+        s = checkpointed_write(df, "file://" + path, n_buckets=2, run_spec="r")
+        assert s["written"] == 2
+        assert sorted(os.listdir(os.path.join(path, "_manifest"))) == ["0.json", "1.json"]
+        assert set(committed_buckets("file://" + path)) == set(committed_buckets(path)) == {0, 1}
+        assert read_checkpointed(spark, "file:" + path).count() == df.count()
