@@ -5759,14 +5759,17 @@ def _q_glrlm_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-analysis composition: language-ID, quality scoring + token
-    counting, the order-sensitive token fingerprint, Gopher-style n-gram
-    repetition stats (duplicate-3-gram surplus/ratio/top multiplicity —
-    two-phase (doc, gram) agg), and a benchmark-decontamination scan
-    (8-gram occurrences hitting the broadcast benchmark gram set, benchmark
-    = docs with doc_id % 97 == 0), one row per doc. Token-table sub-queries
-    are keyed 'doc_<id>' — stripped back to the numeric documents key for
-    the join, identically in SQL."""
+    """Text-analysis composition, one row per doc: language-ID, quality
+    scoring + token counting, the order-sensitive token fingerprint,
+    Gopher-style n-gram repetition stats (duplicate-3-gram surplus/ratio/top
+    multiplicity — two-phase (doc, gram) agg) and the Gopher rule over them,
+    a benchmark-decontamination scan (8-gram occurrences hitting the
+    benchmark gram set, benchmark = docs with doc_id % 97 == 0), PII
+    scrubbing, cross-doc duplicate spans, DSIR weights, BM25 and MaxSim
+    scores, LZ78 complexity, curriculum bucket + pacing, the langid
+    confusion audit and the canary memorization audit. Token-table
+    sub-queries are keyed 'doc_<id>' — stripped back to the numeric
+    documents key for the join, identically in SQL."""
     from pyspark.sql import functions as F
 
     from nyxus_spark.functions import repetition_stats
@@ -5795,57 +5798,6 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cont = contamination_bloom(toks, bench, n=8).select(
         nid.alias("doc_id"), "contam_hits", "contam_distinct", "is_contaminated",
     )
-    # Bloom-prefilter FPR audit with ENGINE-REPRODUCIBLE probes
-    # (base-131/257 polynomial gram hashes): the bitset construction and
-    # its measured selectivity become oracle-checked artifacts —
-    # bloom_cand = positions passing the prefilter, bloom_fp = the wasted
-    # verify work (cand − exact hits, ≥ 0 by the Bloom no-false-negative
-    # guarantee).
-    from nyxus_spark.functions import bloom_fpr_audit
-
-    bfa = bloom_fpr_audit(toks, bench, n=8).select(
-        nid.alias("doc_id"), "bloom_cand",
-    )
-    # n-gram NOVELTY (memorization-risk monitor: distinct 8-grams appearing
-    # in no other doc) + deterministic MLM MASKING (rate 0.15, position-hash
-    # re-derivable — n_masked + the position checksum pin every decision)
-    from nyxus_spark.functions import mask_tokens, ngram_novelty
-
-    nov = ngram_novelty(toks, n=8).select(
-        nid.alias("doc_id"), "grams_distinct", "grams_novel", "novelty",
-    )
-    msk = mask_tokens(toks, 0.15).select(
-        nid.alias("doc_id"), "n_masked", "mask_checksum",
-    )
-    # TF-IDF keyword extraction (log-free: tf·N/df — exact product + ONE
-    # division, argmax per doc with ties to the lowest token id)
-    from nyxus_spark.functions import tfidf_top_term
-
-    tfi = tfidf_top_term(toks).select(
-        nid.alias("doc_id"), "top_tfidf_token", "top_tf", "top_df", "tfidf4",
-    )
-    # degenerate-repetition periodicity (stuck-generation filter; exact
-    # cross-multiplied rational argmax over periods 1..8) + blocklist
-    # sequence matcher (overlapping occurrence counts of broadcast-tiny
-    # banned token runs) — both pure column expressions, zero shuffle
-    from nyxus_spark.functions import banned_sequence_hits, periodicity_exprs
-
-    pe = periodicity_exprs()
-    blx = banned_sequence_hits([[104, 117], [104, 104, 104]])
-    pb = toks.select(nid.alias("doc_id"),
-                     *[v.alias(k) for k, v in {**pe, **blx}.items()])
-    # bigram-LM next-token top-1 accuracy: the perplexity-filter analog on
-    # exact integers (corpus model two-phase agg + broadcast join)
-    from nyxus_spark.functions import bigram_accuracy
-
-    big = bigram_accuracy(toks).withColumn(
-        "doc_id", F.expr("CAST(substring(doc_id, 5) AS BIGINT)"))
-    # hashed-bigram linear scorer (fastText/DSIR-style quality classifier):
-    # exact BIGINT weight sum + ONE final division — zero shuffle, pure map
-    from nyxus_spark.functions import hashed_bigram_score
-
-    hb_score, hb_rate = hashed_bigram_score(toks)
-    hb = toks.select(nid.alias("doc_id"), hb_score, hb_rate)
     # PII-style scrubbing over deterministically-augmented text: docs with
     # id % 7 == 0 carry a synthetic contact suffix (email + long number +
     # URL, derived from the id the same way in SQL), so the scrubber has
@@ -5883,15 +5835,6 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 5 == 0),
     )
     dsw = dsir.select("doc_id", "dsir_pairs", "dsir_w4", "dsir_keep")
-    # corpus bigram-LM likelihood probe (CCNet perplexity-filter analog):
-    # add-1 smoothed p(w|v) and its gain over unigram, position-order
-    # multiply folds over the first 32 positions (bounded-range doubles —
-    # no cross-engine under/overflow edge), replayed by list_reduce
-    from nyxus_spark.functions import bigram_lm_score
-
-    lm = bigram_lm_score(
-        toks.select(nid.alias("doc_id"), "tokens", "n_tok")
-    )
     # Okapi BM25 lexical relevance with the LOG-FREE rational idf (the
     # retrieval/quality-ranking primitive): per-term contributions are ONE
     # IEEE division of exact BIGINTs, the score a token-id-ordered fold the
@@ -5917,24 +5860,10 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(substring(doc_id, 5) AS BIGINT)").alias("doc_id"),
         "cb_18", "cb_55", "cb_89", "cb_138", "cb_216", "colbert4",
     )
-    # Query-likelihood LM retrieval (Dirichlet smoothing, mu=2000) on the
-    # SAME query — the third classical ranking family beside BM25 and
-    # MaxSim, gated as the exact gain over the background model (every
-    # factor one division of exact BIGINTs, zero-tf terms contribute 1,
-    # term-order multiply fold replayed by the oracle)
-    from nyxus_spark.functions import ql_lm_scores
-
-    ql = ql_lm_scores(toks, [18, 55, 89, 138, 216]).select(
-        F.expr("CAST(substring(doc_id, 5) AS BIGINT)").alias("doc_id"),
-        "ql_terms", "ql_gain4",
-    )
     out = lid.join(tq, "doc_id").join(fp, "doc_id").join(rep, "doc_id", "left")
-    out = out.join(cont, "doc_id").join(nov, "doc_id", "left").join(msk, "doc_id")
-    out = out.join(hb, "doc_id").join(scr, "doc_id").join(tfi, "doc_id", "left")
-    out = out.join(pb, "doc_id").join(big, "doc_id", "left")
-    out = out.join(ds, "doc_id", "left").join(bfa, "doc_id")
-    out = out.join(dsw, "doc_id").join(lm, "doc_id", "left")
-    out = out.join(bm, "doc_id", "left").join(cb, "doc_id").join(ql, "doc_id")
+    out = out.join(cont, "doc_id").join(scr, "doc_id")
+    out = out.join(ds, "doc_id", "left").join(dsw, "doc_id")
+    out = out.join(bm, "doc_id", "left").join(cb, "doc_id")
     zero = F.lit(0).cast("long")
     out = out.select(
         "doc_id", "lang_pred", "n_words", "n_chars_derived", "re_tokens",
@@ -5946,55 +5875,19 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("rep_top_ngram_count", zero).alias("rep_top_ngram_count"),
         F.coalesce("rep_dup_ratio", F.lit(0.0)).alias("rep_dup_ratio"),
         "contam_hits", "contam_distinct", "is_contaminated",
-        F.coalesce("grams_distinct", zero).alias("grams_distinct"),
-        F.coalesce("grams_novel", zero).alias("grams_novel"),
-        F.coalesce("novelty", F.lit(0.0)).alias("novelty"),
-        "n_masked", "mask_checksum",
-        "hb_score", "hb_rate",
         "n_url", "n_email", "n_longnum", "scrub_len",
-        F.coalesce("top_tfidf_token", F.lit(-1).cast("long"))
-        .alias("top_tfidf_token"),
-        F.coalesce("top_tf", zero).alias("top_tf"),
-        F.coalesce("top_df", zero).alias("top_df"),
-        F.coalesce("tfidf4", F.lit(0.0)).alias("tfidf4"),
-        "period_best", "period_matches", "period_frac4",
-        "bl_hits_0", "bl_hits_1", "bl_blocked",
-        F.coalesce("bigram_positions", zero).alias("bigram_positions"),
-        F.coalesce("bigram_hits", zero).alias("bigram_hits"),
-        F.coalesce("bigram_acc4", F.lit(0.0)).alias("bigram_acc4"),
         F.coalesce("ds_hits", zero).alias("ds_hits"),
         F.coalesce("ds_spans", zero).alias("ds_spans"),
         F.coalesce("ds_cover", zero).alias("ds_cover"),
         F.coalesce("ds_first", F.lit(-1).cast("long")).alias("ds_first"),
-        "bloom_cand",
-        (F.col("bloom_cand") - F.col("contam_hits")).cast("long")
-        .alias("bloom_fp"),
         "dsir_pairs", "dsir_w4", "dsir_keep",
-        F.coalesce("lm_terms", zero).alias("lm_terms"),
-        F.coalesce("lm_p32", F.lit(1.0)).alias("lm_p32"),
-        F.coalesce("lm_gain32", F.lit(1.0)).alias("lm_gain32"),
-        F.coalesce("lm_keep", zero).alias("lm_keep"),
         F.coalesce("bm25_terms", zero).alias("bm25_terms"),
         F.coalesce("bm25_tf", zero).alias("bm25_tf"),
         F.coalesce("bm25_score4", F.lit(0.0)).alias("bm25_score4"),
         "cb_18", "cb_55", "cb_89", "cb_138", "cb_216", "colbert4",
-        "ql_terms", "ql_gain4",
     )
     # Gopher-style quality rule: pure boolean algebra over the gated stats
     out = out.withColumn("gopher_pass", gopher_pass_expr())
-    # WEAK-SUPERVISION combiner (Snorkel-style majority vote): the shipped
-    # keep decision is the ensemble of independent labeling functions
-    # already gated above — Gopher rules, the bigram-LM probe, DSIR, and
-    # non-contamination — votes and the ≥3 majority both exact integers
-    out = out.withColumn(
-        "ws_votes",
-        (
-            F.col("gopher_pass").cast("long")
-            + F.col("lm_keep")
-            + F.col("dsir_keep").cast("long")
-            + (F.col("is_contaminated") == 0).cast("long")
-        ).cast("long"),
-    ).withColumn("ws_keep", (F.col("ws_votes") >= 3).cast("long"))
     # curriculum bucketing: quality quartiles per language (ntile under a
     # TOTAL order — quality_score ties broken by doc_id — so the bucket
     # boundaries are engine-deterministic); partitioned window = scale-safe
@@ -6022,10 +5915,6 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("__cr", "__cn")
     )
-    # The eval/conformal/per-source blocks below each AGGREGATE over this
-    # frame — persist once so the text pipeline is derived once, not once
-    # per metric (7 re-derivations measured ~2.5× the gate wall).
-    out = out.persist()
     # LZ78 COMPRESSION COMPLEXITY (the compression-ratio quality filter):
     # the incremental-parse phrase count as ONE Catalyst struct-state fold
     # (functions.lz78_phrases, zero Python), lz_ratio = phrases/n_tok the
@@ -6043,145 +5932,6 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_tok") > 0, _r4(F.col("lz_phrases") / F.col("n_tok"))
         ).otherwise(F.lit(0.0)).alias("lz_ratio4"),
     )
-    # CLASSIFIER EVALUATION block (functions/evalmetrics.py): exact ROC-AUC
-    # (Mann–Whitney with midrank ties, value-grain agg + dim-sized
-    # cumulative window — the sklearn number, engine-exact) of the
-    # hashed-bigram quality score against the Gopher rule label, plus the
-    # shipped ws_keep decision's confusion counts and precision/recall/F1
-    from nyxus_spark.functions.evalmetrics import (
-        binary_auc,
-        calibration_table,
-        prf_counts,
-    )
-
-    auc = binary_auc(out, "hb_score", "gopher_pass")
-    prf = prf_counts(out, "ws_keep", "gopher_pass")
-    # RELIABILITY table (calibration audit beside AUC): score deciles under
-    # a total order, each row carrying its bin's exact size and empirical
-    # pass rate
-    out = calibration_table(out, "hb_score", "gopher_pass", bins=10)
-    # wave 78 — SPLIT-CONFORMAL quality gate (Vovk; the finite-sample-valid
-    # quantile filter): calibration = the deterministic holdout val split
-    # (rate 0.2, mixer 1566083941 — re-derivable on any engine forever);
-    # per doc, conf_le = #{calib: hb_score <= this doc's score} via ONE
-    # suffix-cumulative window over the VALUE-GRAIN score dim (same shape
-    # as binary_auc — dim-sized, not row-sized), conformal p-value
-    # p = (conf_le+1)/(n+1) one exact-int division, and the keep flag at
-    # alpha = 0.1 decided by the CROSS-MULTIPLIED integer inequality
-    # 10·(conf_le+1) > (n+1) — no float enters the decision.
-    from nyxus_spark.functions import holdout_split
-
-    out = out.withColumn(
-        "__calib",
-        (holdout_split(F.col("doc_id"), 0.2, 0.0) == 1).cast("long"),
-    )
-    vals = out.groupBy("hb_score").agg(
-        F.sum("__calib").cast("long").alias("__cn"))
-    wle = Window.orderBy(F.col("hb_score").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    vals = vals.withColumn("conf_le", F.sum("__cn").over(wle).cast("long"))
-    ncal = out.agg(F.sum("__calib").cast("long").alias("conf_n"))
-    out = (
-        out.join(vals.select("hb_score", "conf_le"), "hb_score")
-        .crossJoin(F.broadcast(ncal))
-        .withColumn(
-            "conf_p4",
-            _r4((F.col("conf_le") + 1) / (F.col("conf_n") + 1)),
-        )
-        .withColumn(
-            "conf_keep",
-            ((F.col("conf_le") + 1) * 10 > (F.col("conf_n") + 1))
-            .cast("long"),
-        )
-        .drop("__calib")
-    )
-    # wave 87 — PER-SOURCE F1 + MACRO-F1 of the shipped ws_keep decision
-    # (the macro/micro aggregation split every multi-domain eval reports:
-    # micro weights docs, macro weights DOMAINS — a small source tanking
-    # is invisible to micro-F1, loud in macro): per-source confusion
-    # counts exact ints, f1 one IEEE chain; the macro mean is an ORDERED
-    # fold of the 5 per-source doubles (source ASC) the oracle replays
-    # with list_reduce — the pure-add safe class — then ONE division.
-    from nyxus_spark.sources import load_table as _lt
-
-    srcdim = _lt(spark, sf_dir, "documents").select("doc_id", "source")
-    sprf = (
-        out.join(srcdim, "doc_id")
-        .groupBy("source")
-        .agg(
-            F.sum(F.col("ws_keep") * F.col("gopher_pass")).cast("long")
-            .alias("src_tp"),
-            F.sum(F.col("ws_keep") * (1 - F.col("gopher_pass"))).cast("long")
-            .alias("src_fp"),
-            F.sum((1 - F.col("ws_keep")) * F.col("gopher_pass")).cast("long")
-            .alias("src_fn"),
-        )
-        .withColumn(
-            "__f1raw",
-            F.when(
-                2 * F.col("src_tp") + F.col("src_fp") + F.col("src_fn") > 0,
-                (2 * F.col("src_tp"))
-                / (2 * F.col("src_tp") + F.col("src_fp") + F.col("src_fn")),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("src_f14", _r4(F.col("__f1raw")))
-    )
-    mac = sprf.agg(
-        F.sort_array(F.collect_list(F.struct("source", "__f1raw")))
-        .alias("__arr")
-    ).select(
-        _r4(
-            F.expr("aggregate(transform(__arr, x -> x.__f1raw),"
-                   " 0D, (a, v) -> a + v)")
-            / F.size("__arr")
-        ).alias("macro_f14")
-    )
-    out = (
-        out.join(srcdim, "doc_id")
-        .join(F.broadcast(sprf.drop("__f1raw")), "source")
-        .crossJoin(F.broadcast(mac))
-        .drop("source")
-    )
-    # wave 95 — exact SPEARMAN rank correlation between the hashed-bigram
-    # quality score and document length (does the cheap score just measure
-    # length?): Pearson over MIDRANKS, with 2·midrank = 2·rank + ties − 1
-    # an EXACT integer (no .5s ever materialize), then the N·Σuv − ΣuΣv
-    # integer discipline and one sqrt·sqrt chain. The doubled-rank sums
-    # stay in int64 to ~10⁶ docs; shard + merge the integer sums beyond.
-    spx = out.select("doc_id", "hb_score").join(
-        _lt(spark, sf_dir, "documents").select("doc_id", "n_chars"),
-        "doc_id",
-    )
-    wru = Window.orderBy("hb_score")
-    wrv = Window.orderBy("n_chars")
-    sp2 = spx.select(
-        (2 * F.rank().over(wru)
-         + F.count("*").over(Window.partitionBy("hb_score")) - 1)
-        .cast("long").alias("u"),
-        (2 * F.rank().over(wrv)
-         + F.count("*").over(Window.partitionBy("n_chars")) - 1)
-        .cast("long").alias("v"),
-    )
-    sps = sp2.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("u").cast("long").alias("__su"),
-        F.sum("v").cast("long").alias("__sv"),
-        F.sum(F.col("u") * F.col("u")).cast("long").alias("__suu"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("__svv"),
-        F.sum(F.col("u") * F.col("v")).cast("long").alias("__suv"),
-    )
-    spnum = (F.col("__n") * F.col("__suv") - F.col("__su") * F.col("__sv"))
-    spdu = (F.col("__n") * F.col("__suu") - F.col("__su") * F.col("__su"))
-    spdv = (F.col("__n") * F.col("__svv") - F.col("__sv") * F.col("__sv"))
-    sprho = sps.select(
-        spnum.cast("long").alias("sp_num"),
-        F.when(
-            (spdu > 0) & (spdv > 0),
-            _r4(spnum.cast("double")
-                / (F.sqrt(spdu.cast("double")) * F.sqrt(spdv.cast("double")))),
-        ).otherwise(F.lit(0.0)).alias("spearman4"),
-    )
-    out = out.crossJoin(F.broadcast(sprho))
     # wave 102 — LANGUAGE-ID CONFUSION audit (the eval loop closed over
     # the langid heuristic itself: documents carry ground-truth `lang`):
     # per-doc correct flag, per-true-language class size + recall, corpus
@@ -6272,82 +6022,7 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "can_id", "can_caught",
         )
     )
-    out2 = (
-        out.join(lzc, "doc_id")
-        .crossJoin(F.broadcast(auc))
-        .crossJoin(F.broadcast(prf))
-        .join(can, "doc_id")
-    )
-    # wave 119 — FILTER-CASCADE sole-killer ATTRIBUTION (the ablation a
-    # pipeline owner reads before tuning any one filter): a doc is
-    # "sole-killed" by filter f when f alone drops it and the other three
-    # pass — per-doc 0/1 flags over the four ws_votes components plus the
-    # corpus-wide sole-kill counts (what each filter UNIQUELY removes;
-    # docs killed by ≥ 2 filters are redundant kills no single tweak
-    # recovers). Pure column exprs + one broadcast count row.
-    gp, lm_, dk, ct_ = (F.col("gopher_pass"), F.col("lm_keep"),
-                        F.col("dsir_keep"), 1 - F.col("is_contaminated"))
-    out2 = (
-        out2.withColumn(
-            "sole_gopher", ((1 - gp) * lm_ * dk * ct_).cast("long"))
-        .withColumn("sole_lm", (gp * (1 - lm_) * dk * ct_).cast("long"))
-        .withColumn("sole_dsir", (gp * lm_ * (1 - dk) * ct_).cast("long"))
-        .withColumn(
-            "sole_contam", (gp * lm_ * dk * (1 - ct_)).cast("long"))
-    )
-    solec = out2.agg(
-        F.sum("sole_gopher").cast("long").alias("sole_gopher_n"),
-        F.sum("sole_lm").cast("long").alias("sole_lm_n"),
-        F.sum("sole_dsir").cast("long").alias("sole_dsir_n"),
-        F.sum("sole_contam").cast("long").alias("sole_contam_n"),
-    )
-    # wave 123 — exact AVERAGE PRECISION of hb_score vs the Gopher label
-    # (the PR-side ranking metric beside the wave-73 ROC-AUC): under the
-    # deterministic (score DESC, doc_id ASC) total order, AP = (1/P)·
-    # Σ_{positives} cum_pos/rank. Each term is ONE IEEE division of exact
-    # ints; the sum is a RANK-ORDERED pure-add fold (sort_array →
-    # aggregate — the list_reduce-safe class the oracle replays
-    # addition-for-addition), then ONE final division by P. An eval-set-
-    # sized global reduction by nature (like any ranking metric).
-    from pyspark.sql import Window as _Wap
-
-    wap = _Wap.orderBy(F.desc("hb_score"), F.asc("doc_id"))
-    apt = (
-        out2.select("doc_id", "hb_score", "gopher_pass")
-        .withColumn("__rk", F.row_number().over(wap).cast("long"))
-        .withColumn(
-            "__cp",
-            F.sum("gopher_pass").over(
-                wap.rowsBetween(_Wap.unboundedPreceding, 0)).cast("long"),
-        )
-        .filter(F.col("gopher_pass") == 1)
-        .select(
-            F.struct(F.col("__rk"),
-                     (F.col("__cp").cast("double")
-                      / F.col("__rk").cast("double")).alias("t"))
-            .alias("s"))
-    )
-    apx = apt.agg(
-        F.sort_array(F.collect_list("s")).alias("__a"),
-        F.count("*").cast("long").alias("ap_pos"),
-        # wave 125 — MRR (1/rank of the first positive) and precision@10,
-        # completing the ranking family: both exact (one division each)
-        F.min("s.__rk").cast("long").alias("ap_r1"),
-        F.sum((F.col("s.__rk") <= 10).cast("long")).cast("long")
-        .alias("p10_hits"),
-    ).select(
-        "ap_pos",
-        _r4(
-            F.expr("aggregate(transform(__a, x -> x.t), 0D,"
-                   " (p, q) -> p + q)") / F.col("ap_pos")
-        ).alias("ap4"),
-        "ap_r1",
-        _r4(F.lit(1.0) / F.col("ap_r1").cast("double")).alias("mrr4"),
-        "p10_hits",
-        _r4(F.col("p10_hits").cast("double") / F.lit(10.0)).alias("p10_4"),
-    )
-    return (out2.crossJoin(F.broadcast(solec))
-            .crossJoin(F.broadcast(apx)))
+    return out.join(lzc, "doc_id").join(can, "doc_id")
 
 
 def _q_rollup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7169,15 +6844,6 @@ def oracle_sql() -> dict[str, str]:
     from nyxus_spark.functions import STOPWORDS
     from nyxus_spark.sources.tables import SQL_PROBES, SQL_TOKENS_STATIC, SQL_VERSIONS
 
-    _p31 = 2147483647
-    _bf1 = " + ".join(
-        f"CAST(tokens[i + {j}] AS BIGINT) * {pow(131, j, _p31)}"
-        for j in range(8)
-    )
-    _bf2 = " + ".join(
-        f"CAST(tokens[i + {j}] AS BIGINT) * {pow(257, j, _p31)}"
-        for j in range(8)
-    )
     extra = {
         "ih": oracles.sql_ih(64),
         "percentiles": oracles.sql_percentiles(),
@@ -9263,10 +8929,6 @@ WITH ts_all AS MATERIALIZED (
 SELECT *, CAST(ntile(4) OVER (PARTITION BY lang_pred
              ORDER BY quality_score ASC, doc_id ASC) AS BIGINT)
           AS curriculum_bucket,
-       CAST(gopher_pass + lm_keep + dsir_keep + (1 - is_contaminated)
-            AS BIGINT) AS ws_votes,
-       CAST(gopher_pass + lm_keep + dsir_keep + (1 - is_contaminated) >= 3
-            AS BIGINT) AS ws_keep,
        -- root-p curriculum pacing: unlock step t = ceil(r^2*16/N^2), the
        -- squared form of r/N <= sqrt(t/16) — exact integers throughout
        CAST((CAST(row_number() OVER (PARTITION BY lang_pred
@@ -9308,26 +8970,6 @@ lzf AS (
   SELECT doc_id, CAST(ph AS BIGINT) AS lz_phrases,
          FLOOR((ph / len(tokens)) * 10000.0 + 0.5) / 10000.0 AS lz_ratio4
   FROM lz WHERE pos = len(tokens) + 1
-),
-bfh AS (  -- engine-reproducible polynomial gram probes (base 131 / 257)
-  SELECT doc_id, ({_bf1}) % 2147483647 AS h1, ({_bf2}) % 2147483647 AS h2
-  FROM (SELECT doc_id, tokens, unnest(range(1, n_tok - 8 + 2)) AS i
-        FROM toks WHERE n_tok >= 8)
-),
-bfbits AS (  -- 63-bit words: shifting into the int64 sign bit errors here
-  SELECT bit // 63 AS w,
-         BIT_OR(CAST(1 AS BIGINT) << CAST(bit % 63 AS INTEGER)) AS m
-  FROM (SELECT unnest([h1 % 65536, h2 % 65536]) AS bit FROM bfh
-        WHERE doc_id % 97 = 0)
-  GROUP BY 1
-),
-bfcand AS (  -- corpus gram passes iff BOTH probe bits are set
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS bloom_cand
-  FROM bfh c JOIN bfbits q1 ON q1.w = (c.h1 % 65536) // 63
-             JOIN bfbits q2 ON q2.w = (c.h2 % 65536) // 63
-  WHERE (q1.m & (CAST(1 AS BIGINT) << CAST(c.h1 % 65536 % 63 AS INTEGER))) <> 0
-    AND (q2.m & (CAST(1 AS BIGINT) << CAST(c.h2 % 65536 % 63 AS INTEGER))) <> 0
-  GROUP BY 1
 ),
 dswin AS (  -- ExactSubstr windows: length-8, 0-based positions
   SELECT doc_id, i - 1 AS pos, array_to_string(tokens[i : i + 7], ',') AS gram
@@ -9391,50 +9033,6 @@ contam AS (
   FROM g8 d JOIN bench b ON d.g = b.g
   GROUP BY d.doc_id
 ),
-nov8 AS (SELECT DISTINCT doc_id, g FROM g8),
-gfreq AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS dc FROM nov8 GROUP BY g),
-nov AS (  -- novelty: distinct 8-grams appearing in no other document
-  SELECT n.doc_id,
-         CAST(COUNT(*) AS BIGINT) AS grams_distinct,
-         CAST(SUM(CASE WHEN f.dc = 1 THEN 1 ELSE 0 END) AS BIGINT) AS grams_novel,
-         FLOOR((CAST(SUM(CASE WHEN f.dc = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                / COUNT(*)) * 10000.0 + 0.5) / 10000.0 AS novelty
-  FROM nov8 n JOIN gfreq f USING (g) GROUP BY n.doc_id
-),
-msk AS (  -- deterministic MLM masking replay: position-hash < cut
-  SELECT doc_id,
-         CAST(COALESCE(list_sum(list_transform(range(0, CAST(n_tok AS BIGINT)),
-           i -> CASE WHEN (((doc_id % 2147483647) * 40503 + i * 506952122)
-                           % 2147483647) * 506952114 % 2147483647
-                     < {int(2147483647 * 0.15)} THEN 1 ELSE 0 END)), 0)
-              AS BIGINT) AS n_masked,
-         CAST(COALESCE(list_sum(list_transform(range(0, CAST(n_tok AS BIGINT)),
-           i -> CASE WHEN (((doc_id % 2147483647) * 40503 + i * 506952122)
-                           % 2147483647) * 506952114 % 2147483647
-                     < {int(2147483647 * 0.15)} THEN i + 1 ELSE 0 END)), 0)
-              AS BIGINT) AS mask_checksum
-  FROM toks
-),
-hb AS (  -- hashed-bigram linear scorer: exact BIGINT weight sum + ONE div
-  SELECT doc_id,
-         CASE WHEN n_tok >= 2 THEN
-           CAST(COALESCE(list_sum(list_transform(range(1, n_tok), i ->
-             (CAST(tokens[i] AS BIGINT) * 506952114
-              + CAST(tokens[i+1] AS BIGINT) * 40503)
-             % 2147483647 % 1024 * 2654435761 % 2147483647 % 2001
-             - 1000)), 0) AS BIGINT)
-         ELSE 0 END AS hb_score,
-         CASE WHEN n_tok >= 2 THEN
-           CAST(CASE WHEN n_tok >= 2 THEN
-             CAST(COALESCE(list_sum(list_transform(range(1, n_tok), i ->
-               (CAST(tokens[i] AS BIGINT) * 506952114
-                + CAST(tokens[i+1] AS BIGINT) * 40503)
-               % 2147483647 % 1024 * 2654435761 % 2147483647 % 2001
-               - 1000)), 0) AS BIGINT)
-           ELSE 0 END AS DOUBLE) / (n_tok - 1)
-         ELSE 0.0 END AS hb_rate
-  FROM toks
-),
 scr AS (  -- PII scrubbing over the same deterministically-augmented text
   SELECT doc_id,
          CAST(len(regexp_extract_all(t2, 'https?://[^ ]+')) AS BIGINT) AS n_url,
@@ -9451,80 +9049,6 @@ scr AS (  -- PII scrubbing over the same deterministically-augmented text
                       || CAST(doc_id AS VARCHAR)
                ELSE text END AS t2
         FROM documents)
-),
-per AS (  -- periodicity argmax: exact rational fold, ties -> smallest p
-  SELECT doc_id,
-    list_reduce(
-      [{{'num': CAST(0 AS BIGINT), 'den': CAST(1 AS BIGINT),
-         'p': CAST(0 AS BIGINT)}}] ||
-      list_transform(range(1, 9), p -> {{
-        'num': CASE WHEN n_tok > p THEN
-                 CAST(list_sum(list_transform(range(p, CAST(n_tok AS BIGINT)),
-                   i -> CASE WHEN tokens[i+1] = tokens[i-p+1]
-                        THEN 1 ELSE 0 END)) AS BIGINT)
-               ELSE CAST(-1 AS BIGINT) END,
-        'den': CAST(n_tok - p AS BIGINT),
-        'p': CAST(p AS BIGINT)}}),
-      (a, x) -> CASE WHEN x.num >= 0 AND x.num * a.den > a.num * x.den
-                THEN x ELSE a END) AS best
-  FROM toks
-),
-bl AS (  -- blocklist sequences: overlapping occurrence counts
-  SELECT doc_id,
-    CASE WHEN n_tok >= 2 THEN
-      CAST(COALESCE(list_sum(list_transform(range(1, CAST(n_tok AS BIGINT)),
-        i -> CASE WHEN tokens[i] = 104 AND tokens[i+1] = 117
-             THEN 1 ELSE 0 END)), 0) AS BIGINT)
-    ELSE 0 END AS bl_hits_0,
-    CASE WHEN n_tok >= 3 THEN
-      CAST(COALESCE(list_sum(list_transform(range(1, CAST(n_tok AS BIGINT) - 1),
-        i -> CASE WHEN tokens[i] = 104 AND tokens[i+1] = 104
-                   AND tokens[i+2] = 104 THEN 1 ELSE 0 END)), 0) AS BIGINT)
-    ELSE 0 END AS bl_hits_1
-  FROM toks
-),
-bgp AS (  -- exploded (doc, prefix, next) bigram positions
-  SELECT doc_id, tokens[i] AS p, tokens[i+1] AS nx
-  FROM (SELECT doc_id, tokens, unnest(range(1, n_tok)) AS i
-        FROM toks WHERE n_tok >= 2)
-),
-bgm AS (  -- corpus bigram model: top-1 next per prefix, ties -> lowest
-  SELECT p, nx AS top_next FROM (
-    SELECT p, nx,
-           row_number() OVER (PARTITION BY p
-                              ORDER BY COUNT(*) DESC, nx ASC) AS rn
-    FROM bgp GROUP BY p, nx) WHERE rn = 1
-),
-bga AS (  -- per-doc next-token top-1 accuracy: exact ints + ONE division
-  SELECT g.doc_id,
-         CAST(COUNT(*) AS BIGINT) AS bigram_positions,
-         CAST(SUM(CASE WHEN g.nx = m.top_next THEN 1 ELSE 0 END) AS BIGINT)
-           AS bigram_hits,
-         FLOOR(CAST(SUM(CASE WHEN g.nx = m.top_next THEN 1 ELSE 0 END)
-                    AS DOUBLE) / COUNT(*) * 10000.0 + 0.5) / 10000.0
-           AS bigram_acc4
-  FROM bgp g JOIN bgm m USING (p) GROUP BY g.doc_id
-),
-tfc AS (  -- per-(doc, token) term frequency
-  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(tokens) AS tok FROM toks)
-  GROUP BY doc_id, tok
-),
-dfc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS dfreq FROM tfc GROUP BY tok),
-ndoc AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM toks),
-tfi AS (  -- log-free TF-IDF argmax: score = tf·N/df, ties -> lowest token
-  SELECT doc_id,
-         CAST(tok AS BIGINT) AS top_tfidf_token, tf AS top_tf,
-         dfreq AS top_df,
-         FLOOR(CAST(tf * nd AS DOUBLE) / dfreq * 10000.0 + 0.5) / 10000.0
-           AS tfidf4
-  FROM (
-    SELECT t.doc_id, t.tok, t.tf, d.dfreq, n.nd,
-           row_number() OVER (PARTITION BY t.doc_id
-                              ORDER BY CAST(t.tf * n.nd AS DOUBLE) / d.dfreq
-                                       DESC, t.tok ASC) AS rn
-    FROM tfc t JOIN dfc d USING (tok), ndoc n
-  ) WHERE rn = 1
 ),
 dsx AS (  -- DSIR: hashed-bigram bucket per position (i kept for the fold order)
   SELECT doc_id, i,
@@ -9548,34 +9072,6 @@ dsiw AS (  -- per-doc weight: position-order multiply fold, replayed exactly
          list_reduce(list(r.rr ORDER BY x.i), (a, v) -> a * v) AS w
   FROM dsx x JOIN dsrt r USING (bkt) GROUP BY x.doc_id
 ),
-lmx AS (  -- bigram-LM probe: (pos, v, w), position kept for the fold order
-  SELECT doc_id, i, tokens[i] AS v, tokens[i+1] AS w
-  FROM (SELECT doc_id, tokens, unnest(range(1, n_tok)) AS i
-        FROM toks WHERE n_tok >= 2)
-),
-lmbc AS (SELECT v, w, CAST(COUNT(*) AS BIGINT) AS c_vw FROM lmx GROUP BY 1, 2),
-lmuc AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c_v FROM lmx GROUP BY 1),
-lmwc AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c_w FROM lmx GROUP BY 1),
-lmvv AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS vv
-         FROM (SELECT unnest(tokens) AS tok FROM toks)),
-lmnn AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM lmx),
-lmt AS (  -- add-1 smoothed p(w|v) + its gain over unigram: each term ONE
-          -- IEEE division of exact BIGINT products
-  SELECT x.doc_id, x.i,
-         CAST(b.c_vw + 1 AS DOUBLE) / CAST(u.c_v + t.vv AS DOUBLE) AS tp,
-         CAST((b.c_vw + 1) * (t2.nn + t.vv) AS DOUBLE)
-           / CAST((u.c_v + t.vv) * (w2.c_w + 1) AS DOUBLE) AS tg
-  FROM lmx x JOIN lmbc b USING (v, w) JOIN lmuc u USING (v)
-       JOIN lmwc w2 USING (w), lmvv t, lmnn t2
-),
-lmf AS (  -- position-order multiply folds over the first 32 positions
-  SELECT doc_id,
-         list_reduce(list(tp ORDER BY i), (a, v) -> a * v) AS lm_p32,
-         list_reduce(list(tg ORDER BY i), (a, v) -> a * v) AS lm_gain32
-  FROM lmt WHERE i <= 32 GROUP BY doc_id
-),
-lmc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS lm_terms
-        FROM lmt GROUP BY doc_id),
 bmtf AS (  -- BM25: per-(doc, query-term) tf + doc length
   SELECT doc_id, CAST(n_tok AS BIGINT) AS dl, t, CAST(COUNT(*) AS BIGINT) AS tf
   FROM (SELECT doc_id, n_tok, unnest(tokens) AS t FROM toks)
@@ -9614,35 +9110,6 @@ cblut AS (  -- |q| x |V| 4-dec cosine LUT
          / 10000.0 AS c4
   FROM cbq, cbte
 ),
-qltot AS (SELECT CAST(SUM(n_tok) AS BIGINT) AS qs FROM toks),
-qlctf AS (  -- corpus term frequency per query term
-  SELECT t, CAST(COUNT(*) AS BIGINT) AS ctf
-  FROM (SELECT unnest(tokens) AS t FROM toks)
-  WHERE t IN (18, 55, 89, 138, 216) GROUP BY t
-),
-qltf AS (
-  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(tokens) AS t FROM toks)
-  WHERE t IN (18, 55, 89, 138, 216) GROUP BY 1, 2
-),
-qlcell AS (  -- every (doc, term): gain factor >= 1, exact-int operands
-  SELECT d.doc_id, q.t,
-         CASE WHEN c.ctf > 0 THEN
-           CAST(COALESCE(f.tf, 0) * qs + 2000 * c.ctf AS DOUBLE)
-           / CAST(2000 * c.ctf AS DOUBLE)
-         ELSE 1.0 END AS v
-  FROM (SELECT doc_id FROM toks) d
-  CROSS JOIN (SELECT unnest([18, 55, 89, 138, 216]) AS t) q
-  LEFT JOIN qltf f ON f.doc_id = d.doc_id AND f.t = q.t
-  LEFT JOIN qlctf c ON c.t = q.t
-  CROSS JOIN qltot
-),
-qlg AS (  -- term-order multiply fold
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS ql_terms,
-         FLOOR(list_reduce(list(v ORDER BY t), (a, b) -> a * b)
-               * 10000.0 + 0.5) / 10000.0 AS ql_gain4
-  FROM qlcell GROUP BY doc_id
-),
 cbdt AS (SELECT DISTINCT doc_id, unnest(tokens) AS tok FROM toks),
 cbpm AS (
   SELECT doc_id, qt, MAX(c4) AS mx FROM cbdt JOIN cblut USING (tok)
@@ -9677,38 +9144,14 @@ SELECT l.doc_id, l.lang_pred,
        COALESCE(c.contam_hits, 0) AS contam_hits,
        COALESCE(c.contam_distinct, 0) AS contam_distinct,
        CAST(COALESCE(c.contam_hits, 0) > 0 AS BIGINT) AS is_contaminated,
-       COALESCE(n.grams_distinct, 0) AS grams_distinct,
-       COALESCE(n.grams_novel, 0) AS grams_novel,
-       COALESCE(n.novelty, 0.0) AS novelty,
-       m.n_masked, m.mask_checksum,
-       h.hb_score, h.hb_rate,
        sc.n_url, sc.n_email, sc.n_longnum, sc.scrub_len,
-       COALESCE(tt.top_tfidf_token, -1) AS top_tfidf_token,
-       COALESCE(tt.top_tf, 0) AS top_tf,
-       COALESCE(tt.top_df, 0) AS top_df,
-       COALESCE(tt.tfidf4, 0.0) AS tfidf4,
-       p.best.p AS period_best, p.best.num AS period_matches,
-       FLOOR(CAST(p.best.num AS DOUBLE) / p.best.den * 10000.0 + 0.5)
-         / 10000.0 AS period_frac4,
-       b.bl_hits_0, b.bl_hits_1,
-       CAST(b.bl_hits_0 > 0 OR b.bl_hits_1 > 0 AS BIGINT) AS bl_blocked,
-       COALESCE(bg.bigram_positions, 0) AS bigram_positions,
-       COALESCE(bg.bigram_hits, 0) AS bigram_hits,
-       COALESCE(bg.bigram_acc4, 0.0) AS bigram_acc4,
        COALESCE(dsd.ds_hits, 0) AS ds_hits,
        COALESCE(dsd.ds_spans, 0) AS ds_spans,
        COALESCE(dsd.ds_cover, 0) AS ds_cover,
        COALESCE(dsd.ds_first, -1) AS ds_first,
-       COALESCE(bf.bloom_cand, 0) AS bloom_cand,
-       CAST(COALESCE(bf.bloom_cand, 0) - COALESCE(c.contam_hits, 0)
-            AS BIGINT) AS bloom_fp,
        COALESCE(dw.npairs, 0) AS dsir_pairs,
        FLOOR(COALESCE(dw.w, 1.0) * 10000.0 + 0.5) / 10000.0 AS dsir_w4,
        CAST(COALESCE(dw.w, 1.0) > 1.0 AS BIGINT) AS dsir_keep,
-       COALESCE(lc.lm_terms, 0) AS lm_terms,
-       COALESCE(lf.lm_p32, 1.0) AS lm_p32,
-       COALESCE(lf.lm_gain32, 1.0) AS lm_gain32,
-       CAST(COALESCE(lf.lm_gain32, 1.0) > 1.0 AS BIGINT) AS lm_keep,
        COALESCE(bm.bm25_terms, 0) AS bm25_terms,
        COALESCE(bm.bm25_tf, 0) AS bm25_tf,
        COALESCE(bm.bm25_score4, 0.0) AS bm25_score4,
@@ -9718,7 +9161,6 @@ SELECT l.doc_id, l.lang_pred,
        COALESCE(cbx.cb_138, -2.0) AS cb_138,
        COALESCE(cbx.cb_216, -2.0) AS cb_216,
        COALESCE(cbx.colbert4, 0.0) AS colbert4,
-       qg.ql_terms, qg.ql_gain4,
        CAST(q.n_words >= 5 AND q.mean_word_len >= 2.0
             AND q.mean_word_len <= 12.0
             AND COALESCE(r.rep_dup_ratio, 0.0) <= 0.3
@@ -9734,131 +9176,13 @@ JOIN (
 ) f USING (doc_id)
 LEFT JOIN rep r USING (doc_id)
 LEFT JOIN contam c USING (doc_id)
-LEFT JOIN nov n USING (doc_id)
-JOIN msk m USING (doc_id)
-JOIN hb h USING (doc_id)
 JOIN scr sc USING (doc_id)
-LEFT JOIN tfi tt USING (doc_id)
-JOIN per p USING (doc_id)
-JOIN bl b USING (doc_id)
-LEFT JOIN bga bg USING (doc_id)
 LEFT JOIN dsdoc dsd USING (doc_id)
-LEFT JOIN bfcand bf USING (doc_id)
 LEFT JOIN dsiw dw USING (doc_id)
-LEFT JOIN lmc lc USING (doc_id)
-LEFT JOIN lmf lf USING (doc_id)
 LEFT JOIN bm USING (doc_id)
 LEFT JOIN cb cbx ON cbx.doc_id = l.doc_id
-JOIN qlg qg ON qg.doc_id = l.doc_id
 LEFT JOIN lzf lzq ON lzq.doc_id = l.doc_id
 )
-),
-aucg AS (  -- exact ROC-AUC of hb_score vs gopher_pass: Mann–Whitney with
-           -- midrank ties over a per-distinct-score aggregation
-  SELECT auc_n_pos, auc_n_neg, auc_u2,
-         CASE WHEN auc_n_pos > 0 AND auc_n_neg > 0 THEN
-           FLOOR((auc_u2 / (2 * auc_n_pos * auc_n_neg)) * 10000.0 + 0.5)
-             / 10000.0
-         END AS auc4
-  FROM (
-    SELECT CAST(SUM(cp) AS BIGINT) AS auc_n_pos,
-           CAST(SUM(c) - SUM(cp) AS BIGINT) AS auc_n_neg,
-           CAST(SUM(cp * (2 * cb + c + 1))
-                - SUM(cp) * (SUM(cp) + 1) AS BIGINT) AS auc_u2
-    FROM (
-      SELECT c, cp,
-             COALESCE(SUM(c) OVER (ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-      FROM (SELECT hb_score AS s, CAST(COUNT(*) AS BIGINT) AS c,
-                   CAST(SUM(gopher_pass) AS BIGINT) AS cp
-            FROM ts_all GROUP BY 1)))
-),
-prfg AS (  -- the shipped ws_keep decision vs the Gopher rule label
-  SELECT tp, fp, fn, tn,
-         CASE WHEN tp + fp > 0 THEN
-           FLOOR((tp / (tp + fp)) * 10000.0 + 0.5) / 10000.0 END AS prec4,
-         CASE WHEN tp + fn > 0 THEN
-           FLOOR((tp / (tp + fn)) * 10000.0 + 0.5) / 10000.0 END AS rec4,
-         CASE WHEN 2 * tp + fp + fn > 0 THEN
-           FLOOR((2 * tp / (2 * tp + fp + fn)) * 10000.0 + 0.5) / 10000.0
-         END AS f14
-  FROM (SELECT CAST(SUM(ws_keep * gopher_pass) AS BIGINT) AS tp,
-               CAST(SUM(ws_keep * (1 - gopher_pass)) AS BIGINT) AS fp,
-               CAST(SUM((1 - ws_keep) * gopher_pass) AS BIGINT) AS fn,
-               CAST(SUM((1 - ws_keep) * (1 - gopher_pass)) AS BIGINT) AS tn
-        FROM ts_all)
-),
-calr AS (  -- calibration deciles under the total (hb_score, doc_id) order
-  SELECT doc_id, CAST(ntile(10) OVER (ORDER BY hb_score ASC, doc_id ASC)
-                      AS BIGINT) AS cal_bin
-  FROM ts_all
-),
-calb AS (
-  SELECT r.cal_bin, CAST(COUNT(*) AS BIGINT) AS cal_n,
-         FLOOR((CAST(SUM(t.gopher_pass) AS BIGINT)
-                / CAST(COUNT(*) AS BIGINT)) * 10000.0 + 0.5) / 10000.0
-           AS cal_rate4
-  FROM calr r JOIN ts_all t USING (doc_id) GROUP BY r.cal_bin
-),
-confv AS (  -- split-conformal calibration: holdout val split (rate 0.2,
-            -- mixer 1566083941), counts at hb_score VALUE grain
-  SELECT hb_score AS s,
-         CAST(SUM(CASE WHEN ((doc_id % 2147483647) * 1566083941)
-                            % 2147483647 < 429496729
-                       THEN 1 ELSE 0 END) AS BIGINT) AS cn
-  FROM ts_all GROUP BY 1
-),
-confle AS (
-  SELECT s, CAST(SUM(cn) OVER (ORDER BY s ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS conf_le
-  FROM confv
-),
-confn AS (SELECT CAST(SUM(cn) AS BIGINT) AS conf_n FROM confv),
-sprf AS (  -- per-source confusion counts of ws_keep vs the Gopher label
-  SELECT d.source,
-         CAST(SUM(t.ws_keep * t.gopher_pass) AS BIGINT) AS src_tp,
-         CAST(SUM(t.ws_keep * (1 - t.gopher_pass)) AS BIGINT) AS src_fp,
-         CAST(SUM((1 - t.ws_keep) * t.gopher_pass) AS BIGINT) AS src_fn
-  FROM ts_all t JOIN documents d USING (doc_id)
-  GROUP BY d.source
-),
-sprf2 AS (
-  SELECT source, src_tp, src_fp, src_fn,
-         CASE WHEN 2 * src_tp + src_fp + src_fn > 0 THEN
-           (2 * src_tp) / (2 * src_tp + src_fp + src_fn)
-         ELSE 0.0 END AS f1raw
-  FROM sprf
-),
-macf AS (  -- macro-F1: ordered pure-add fold of the per-source doubles
-  SELECT FLOOR((list_reduce(list(f1raw ORDER BY source), (a, b) -> a + b)
-                / COUNT(*)) * 10000.0 + 0.5) / 10000.0 AS macro_f14
-  FROM sprf2
-),
-sprk AS (  -- Spearman midranks: 2*midrank = 2*rank + ties - 1 (exact int)
-  SELECT CAST(2 * rank() OVER (ORDER BY t.hb_score)
-              + COUNT(*) OVER (PARTITION BY t.hb_score) - 1 AS BIGINT) AS u,
-         CAST(2 * rank() OVER (ORDER BY d.n_chars)
-              + COUNT(*) OVER (PARTITION BY d.n_chars) - 1 AS BIGINT) AS v
-  FROM ts_all t JOIN documents d USING (doc_id)
-),
-spsm AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(u) AS BIGINT) AS su, CAST(SUM(v) AS BIGINT) AS sv,
-         CAST(SUM(u * u) AS BIGINT) AS suu,
-         CAST(SUM(v * v) AS BIGINT) AS svv,
-         CAST(SUM(u * v) AS BIGINT) AS suv
-  FROM sprk
-),
-sprho AS (
-  SELECT CAST(n * suv - su * sv AS BIGINT) AS sp_num,
-         CASE WHEN n * suu - su * su > 0 AND n * svv - sv * sv > 0 THEN
-           FLOOR((CAST(n * suv - su * sv AS DOUBLE)
-                  / (sqrt(CAST(n * suu - su * su AS DOUBLE))
-                     * sqrt(CAST(n * svv - sv * sv AS DOUBLE))))
-                 * 10000.0 + 0.5) / 10000.0
-         ELSE 0.0 END AS spearman4
-  FROM spsm
 ),
 lidt AS (  -- langid confusion vs the ground-truth lang column
   SELECT t.doc_id, d.lang AS lang_true,
@@ -9915,82 +9239,16 @@ canx AS (
   SELECT CAST(substr(c.doc_id, 5) AS BIGINT) AS did, c.can_id,
          COALESCE(l.can_caught, CAST(0 AS BIGINT)) AS can_caught
   FROM caug c LEFT JOIN canl l USING (doc_id)
-),
-apr AS (  -- wave 123: exact AP under the (score DESC, doc_id) order
-  SELECT doc_id, gopher_pass,
-         CAST(row_number() OVER (ORDER BY hb_score DESC, doc_id ASC)
-              AS BIGINT) AS rk,
-         CAST(SUM(gopher_pass) OVER (ORDER BY hb_score DESC, doc_id ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS cp
-  FROM ts_all
-),
-apx AS (  -- rank-ordered pure-add fold, then ONE division by P;
-          -- wave 125: MRR + precision@10 on the same rank table
-  SELECT CAST(COUNT(*) AS BIGINT) AS ap_pos,
-         FLOOR(list_reduce(
-                 list(CAST(cp AS DOUBLE) / CAST(rk AS DOUBLE)
-                      ORDER BY rk),
-                 (a, b) -> a + b) / COUNT(*) * 10000.0 + 0.5) / 10000.0
-           AS ap4,
-         CAST(MIN(rk) AS BIGINT) AS ap_r1,
-         FLOOR(1.0 / CAST(MIN(rk) AS DOUBLE) * 10000.0 + 0.5) / 10000.0
-           AS mrr4,
-         CAST(SUM(CASE WHEN rk <= 10 THEN 1 ELSE 0 END) AS BIGINT)
-           AS p10_hits,
-         FLOOR(CAST(SUM(CASE WHEN rk <= 10 THEN 1 ELSE 0 END) AS DOUBLE)
-               / 10.0 * 10000.0 + 0.5) / 10000.0 AS p10_4
-  FROM apr WHERE gopher_pass = 1
-),
-solec AS (  -- wave 119: per-filter sole-kill counts over ts_all
-  SELECT CAST(SUM((1 - gopher_pass) * lm_keep * dsir_keep
-                  * (1 - is_contaminated)) AS BIGINT) AS sole_gopher_n,
-         CAST(SUM(gopher_pass * (1 - lm_keep) * dsir_keep
-                  * (1 - is_contaminated)) AS BIGINT) AS sole_lm_n,
-         CAST(SUM(gopher_pass * lm_keep * (1 - dsir_keep)
-                  * (1 - is_contaminated)) AS BIGINT) AS sole_dsir_n,
-         CAST(SUM(gopher_pass * lm_keep * dsir_keep
-                  * is_contaminated) AS BIGINT) AS sole_contam_n
-  FROM ts_all
 )
-SELECT ts_all.*, a.auc_n_pos, a.auc_n_neg, a.auc_u2, a.auc4,
-       p.tp, p.fp, p.fn, p.tn, p.prec4, p.rec4, p.f14,
-       cr.cal_bin, cb2.cal_n, cb2.cal_rate4,
-       cl.conf_le, cn2.conf_n,
-       FLOOR(((cl.conf_le + 1) / (cn2.conf_n + 1)) * 10000.0 + 0.5)
-         / 10000.0 AS conf_p4,
-       CAST((cl.conf_le + 1) * 10 > (cn2.conf_n + 1) AS BIGINT) AS conf_keep,
-       sp.src_tp, sp.src_fp, sp.src_fn,
-       FLOOR(sp.f1raw * 10000.0 + 0.5) / 10000.0 AS src_f14,
-       mf.macro_f14,
-       sh.sp_num, sh.spearman4,
+SELECT ts_all.*,
        lt.lang_true, lt.lid_correct, lr.lang_n, lr.lang_recall4,
        la.lid_acc4,
-       cx.can_id, cx.can_caught,
-       CAST((1 - ts_all.gopher_pass) * ts_all.lm_keep * ts_all.dsir_keep
-            * (1 - ts_all.is_contaminated) AS BIGINT) AS sole_gopher,
-       CAST(ts_all.gopher_pass * (1 - ts_all.lm_keep) * ts_all.dsir_keep
-            * (1 - ts_all.is_contaminated) AS BIGINT) AS sole_lm,
-       CAST(ts_all.gopher_pass * ts_all.lm_keep * (1 - ts_all.dsir_keep)
-            * (1 - ts_all.is_contaminated) AS BIGINT) AS sole_dsir,
-       CAST(ts_all.gopher_pass * ts_all.lm_keep * ts_all.dsir_keep
-            * ts_all.is_contaminated AS BIGINT) AS sole_contam,
-       sk.sole_gopher_n, sk.sole_lm_n, sk.sole_dsir_n, sk.sole_contam_n,
-       ax.ap_pos, ax.ap4, ax.ap_r1, ax.mrr4, ax.p10_hits, ax.p10_4
-FROM ts_all CROSS JOIN aucg a CROSS JOIN prfg p
-JOIN calr cr ON cr.doc_id = ts_all.doc_id
-JOIN calb cb2 ON cb2.cal_bin = cr.cal_bin
-JOIN confle cl ON cl.s = ts_all.hb_score CROSS JOIN confn cn2
-JOIN documents dd ON dd.doc_id = ts_all.doc_id
-JOIN sprf2 sp ON sp.source = dd.source
-CROSS JOIN macf mf
-CROSS JOIN sprho sh
+       cx.can_id, cx.can_caught
+FROM ts_all
 JOIN lidt lt ON lt.doc_id = ts_all.doc_id
 JOIN lidr lr ON lr.lang_true = lt.lang_true
 CROSS JOIN lida la
 JOIN canx cx ON cx.did = ts_all.doc_id
-CROSS JOIN solec sk
-CROSS JOIN apx ax
 """,
         "glrlm": oracles.sql_glrlm(64),
         "glcm": oracles.sql_glcm(64),

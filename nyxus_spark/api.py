@@ -100,8 +100,12 @@ class NyxusSpark:
         keep_tokens: bool = False,
     ) -> DataFrame:
         """Featurize in-memory token arrays (reference featurize over numpy
-        montages, nyxus.py:373-506 — zero-copy in via Arrow)."""
-        ids = doc_ids or [f"doc_{i}" for i in range(len(token_lists))]
+        montages, nyxus.py:373-506 — zero-copy in via Arrow). `doc_ids`,
+        when given, must hold one id per token list."""
+        ids = [f"doc_{i}" for i in range(len(token_lists))] if doc_ids is None else doc_ids
+        if len(ids) != len(token_lists):
+            raise ValueError(
+                f"doc_ids has {len(ids)} ids for {len(token_lists)} token lists")
         df = spark.createDataFrame(
             [(i, [int(t) for t in toks], len(toks)) for i, toks in zip(ids, token_lists)],
             f"doc_id string, {self.tokens_col} array<int>, n_tok int",

@@ -360,84 +360,6 @@ def stride_interleave_key(rank_col, weights: dict[str, int],
     return (rank_col.cast("bigint") * stride).cast("bigint")
 
 
-def mask_tokens(df, rate: float, mask_id: int = -100,
-                tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                id_expr_sql: str = "cast(substr(doc_id, 5) as bigint)",
-                seed: int = 0, mix: int = 2654435761, p31: int = 2147483647):
-    """Deterministic MLM-style token masking — the BERT/T5 corruption pass,
-    reproducible forever: position p of document d is masked iff
-    pmod(pmod(d·K1 + (p+seed)·K2, P31) · (MIX mod P31), P31) < ⌊P31·rate⌋,
-    so any (doc, position) re-derives its mask decision on any engine and
-    any partitioning (df.sample-style randomness would not). Changing
-    `seed` yields a fresh independent corruption of the same corpus —
-    the per-epoch mask refresh dynamic-masking training uses.
-
-    Pure column expressions (one transform over the token array, no
-    shuffle, no Python). Adds masked_tokens (masked positions replaced by
-    `mask_id`), n_masked, and mask_checksum = Σ (p+1) over masked
-    positions (an exact BIGINT pinning WHICH positions were masked).
-    `id_expr_sql` must evaluate to a nonnegative integer document id."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    cut = int(p31 * rate)
-    k1, k2 = 40503, 2654435769 % p31
-    # p is the 0-based position (Spark lambda index via zip_with sequence)
-    h = (
-        f"pmod(pmod(({id_expr_sql}) % {p31} * {k1}"
-        f" + (cast(i as bigint) + {seed}) * {k2}, {p31})"
-        f" * {mix % p31} % {p31}, {p31})"
-    )
-    masked = (
-        f"CASE WHEN {n_tok_col} > 0 THEN "
-        f"zip_with({tokens_col}, sequence(0, {n_tok_col} - 1),"
-        f" (t, i) -> CASE WHEN {h} < {cut} THEN {mask_id} ELSE t END)"
-        f" ELSE array() END"
-    )
-    flags = (
-        f"CASE WHEN {n_tok_col} > 0 THEN "
-        f"transform(sequence(0, {n_tok_col} - 1),"
-        f" i -> CASE WHEN {h} < {cut} THEN cast(i + 1 as bigint) ELSE 0L END)"
-        f" ELSE array() END"
-    )
-    return df.select(
-        "*",
-        F.expr(masked).alias("masked_tokens"),
-        F.expr(f"aggregate({flags}, 0L, (a, x) -> a + CASE WHEN x > 0"
-               " THEN 1L ELSE 0L END)").alias("n_masked"),
-        F.expr(f"aggregate({flags}, 0L, (a, x) -> a + x)").alias("mask_checksum"),
-    )
-
-
-def ngram_novelty(df, n: int = 8, tokens_col: str = "tokens",
-                  n_tok_col: str = "n_tok", id_col: str = "doc_id"):
-    """Per-document n-gram NOVELTY — the memorization-risk monitor: which
-    fraction of a document's distinct n-grams appears in NO other document?
-    Low novelty ⇒ the document is largely assembled from corpus-common
-    spans (boilerplate / near-dup residue); high novelty ⇒ unique content.
-
-    Two-phase: one explode + hash-agg counts each gram's distinct-document
-    frequency, then grams with doc_freq = 1 join back per document — the
-    same shuffle profile as vocabulary counting, nothing quadratic. Exact
-    integers + ONE division. Returns (id_col, grams_distinct, grams_novel,
-    novelty)."""
-    grams = df.select(
-        id_col, F.explode(F.array_distinct(ngram_keys(n, tokens_col, n_tok_col)))
-        .alias("__g")
-    )
-    freq = grams.groupBy("__g").agg(
-        F.count("*").cast("long").alias("__docs")  # grams pre-deduped per doc
-    )
-    per_doc = grams.join(freq, "__g").groupBy(id_col).agg(
-        F.count("*").cast("long").alias("grams_distinct"),
-        F.sum(F.when(F.col("__docs") == 1, 1).otherwise(0))
-        .cast("long").alias("grams_novel"),
-    )
-    return per_doc.select(
-        id_col, "grams_distinct", "grams_novel",
-        fround4(F.col("grams_novel") / F.col("grams_distinct")).alias("novelty"),
-    )
-
-
 def ngram_keys(n: int, tokens_col: str = "tokens", n_tok_col: str = "n_tok"):
     """Array of the document's token n-grams, each serialized to a ','-joined
     string key. String keys keep the downstream groupBy/join in whole-stage
@@ -780,49 +702,12 @@ def pmi_best_next(df, keep, tokens_col: str = "tokens", n_tok_col: str = "n_tok"
     )
 
 
-#: hashed-bigram scorer constants (bucket mix, weight mix, bucket count)
-MIX_CONST = 2654435761  # Knuth multiplicative constant (weight derivation)
+#: hashed-bigram bucket constants (dsir_weights): bucket(a,b) =
+#: pmod(a·K1 + b·K2, P31) mod HB_BUCKETS
 HB_P31 = 2147483647
 HB_K1 = 506952114     # 2654435761 mod P31
 HB_K2 = 40503         # 16-bit Knuth constant
 HB_BUCKETS = 1024
-HB_WSPAN = 2001       # integer weights in [-1000, 1000]
-
-
-def hashed_bigram_score(df, tokens_col: str = "tokens",
-                        n_tok_col: str = "n_tok"):
-    """Hashed-bigram linear scorer — the fastText/DSIR-style quality- or
-    domain-classifier pass: every adjacent bigram hashes into one of 1024
-    buckets, each bucket carries a fixed integer weight derived from its id
-    (a deterministic stand-in for trained classifier weights; swap in a
-    broadcast weight map in production), and the document score is the sum
-    of its bigrams' weights.
-
-        bucket(a,b) = pmod(a·K1 + b·K2, P31) mod 1024
-        w(bucket)   = pmod(bucket·2654435761, P31) mod 2001 − 1000
-        score       = Σ_bigrams w(bucket)           (exact BIGINT)
-        score_rate  = score / (n_tok − 1)           (ONE final division)
-
-    Everything integer until the single division, so the gate is exact.
-    a·K1 ≤ 2^31·2^29 and the sum of two such terms stays well under 2^63.
-    Column-expression aggregate over the in-row bigram list — zero shuffle,
-    zero Python; at 100 TB this is a pure map stage."""
-    t, n = tokens_col, n_tok_col
-    wexpr = (
-        f"aggregate(zip_with(slice({t}, 1, {n} - 1), slice({t}, 2, {n} - 1),"
-        f" (a, b) -> pmod(pmod(cast(a as bigint) * {HB_K1}"
-        f" + cast(b as bigint) * {HB_K2}, {HB_P31}) % {HB_BUCKETS}"
-        f" * cast({MIX_CONST} as bigint), {HB_P31}) % {HB_WSPAN} - 1000),"
-        f" 0L, (acc, x) -> acc + x)"
-    )
-    score = F.expr(
-        f"CASE WHEN {n} >= 2 THEN {wexpr} ELSE 0L END"
-    ).alias("hb_score")
-    rate = F.expr(
-        f"CASE WHEN {n} >= 2 THEN CAST(({wexpr}) AS DOUBLE) / ({n} - 1) "
-        "ELSE 0.0D END"
-    ).alias("hb_rate")
-    return score, rate
 
 
 def neg_sampling_shares(top, cnt_col: str = "cnt", token_col: str = "token"):
@@ -899,54 +784,6 @@ def gopher_pass_expr(n_words="n_words", mean_word_len="mean_word_len",
         & (F.col(rep_dup_ratio) <= 0.3)
         & (F.col(stopword_ratio) > 0.0)
     ).cast("long")
-
-
-def tfidf_top_term(df, id_col: str = "doc_id", tokens_col: str = "tokens"):
-    """Each document's most characteristic token by LOG-FREE TF-IDF:
-    score = tf · N_docs / df (the rank order of classic tf·log(N/df) within
-    a document whenever df ordering agrees; the log is dropped so the score
-    is ONE exact-integer product and ONE division — engine-replayable,
-    unlike cross-engine transcendentals). Ties break to the lowest token
-    id. The keyword-extraction pass of a topic/domain tagger.
-
-    Returns one row per document: (id, top_tfidf_token, top_tf, top_df,
-    tfidf4).
-
-    Scale shape: two-phase (doc, token) aggregation for tf, a token-keyed
-    aggregation for df, one equi-join tf⋈df on the token, the corpus size
-    broadcast as a 1-row cross join, and a max-struct argmax per doc (no
-    window) — every shuffle carries aggregated rows, never raw tokens."""
-
-    flat = df.select(F.col(id_col), F.explode(tokens_col).alias("tok"))
-    tf = flat.groupBy(id_col, "tok").agg(F.count("*").cast("long").alias("tf"))
-    dfreq = tf.groupBy("tok").agg(F.count("*").cast("long").alias("dfreq"))
-    nd = df.agg(F.count("*").cast("long").alias("n_docs"))
-    scored = (
-        tf.join(dfreq, "tok")
-        .crossJoin(F.broadcast(nd))
-        .withColumn(
-            "score",
-            (F.col("tf") * F.col("n_docs")).cast("double") / F.col("dfreq"),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("score"), (-F.col("tok")).alias("nt"),
-                    F.col("tf"), F.col("dfreq"),
-                )
-            ).alias("m")
-        )
-        .select(
-            id_col,
-            (-F.col("m.nt")).cast("long").alias("top_tfidf_token"),
-            F.col("m.tf").alias("top_tf"),
-            F.col("m.dfreq").alias("top_df"),
-            fround4(F.col("m.score")).alias("tfidf4"),
-        )
-    )
 
 
 def source_tv(df, ref: str, source_col: str = "source",
@@ -1186,8 +1023,7 @@ def span_corruption_stats(df, every: int = 20, span: int = 3,
     (d·1000003 + j·8191) mod P31 ≡ 0 (mod `every`), and a position is
     corrupted iff any start in the preceding `span` window covers it (so
     overlapping spans merge, exactly as T5's span sampler collapses them).
-    Re-derivable on any engine — the masking analog of `mask_tokens`, but
-    span-shaped.
+    Re-derivable on any engine from the document id and position alone.
 
     Adds: n_corrupt_spans (trigger starts), n_corrupt_tokens (covered
     positions), corrupt_checksum = Σ covered positions (1-based) — exact
@@ -1278,89 +1114,6 @@ def winnow_exprs(tokens_col: str = "tokens", n_tok_col: str = "n_tok",
             F.expr(f"transform({wrapped(sel)}, e -> e % 2147483648)")
         ).cast("array<bigint>"),
     }
-
-
-def periodicity_exprs(tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                      max_p: int = 8) -> dict:
-    """Degenerate-repetition (looping-generation) detector: for each period
-    p in 1..max_p, matches_p = #{i : t[i] == t[i-p]}; the best period is the
-    argmax of matches_p/(n-p) under EXACT cross-multiplied rational
-    comparison (strict >, so ties keep the smallest p — 'abab' reports
-    period 2, not 4). The filter every synthetic-data pipeline runs to drop
-    stuck-generation loops.
-
-    Returns: period_best (0 = none), period_matches, period_frac4 (ONE
-    division under fround4). Pure column expressions, zero shuffle."""
-    if max_p < 1:
-        raise ValueError("max_p must be >= 1")
-    # One candidate struct per period; the argmax is an aggregate() fold so
-    # `acc` is a LAMBDA VARIABLE — a chained when/otherwise here duplicates
-    # the accumulator 3x per round (3^max_p plan blowup, measured 16.9M plan
-    # chars at max_p=8 vs 2.3K for this form).
-    cands = []
-    for p in range(1, max_p + 1):
-        m = F.expr(
-            f"CASE WHEN {n_tok_col} > {p} THEN "
-            f"aggregate(zip_with(slice({tokens_col}, 1, {n_tok_col} - {p}),"
-            f" slice({tokens_col}, {p} + 1, {n_tok_col} - {p}),"
-            f" (x, y) -> IF(x = y, 1L, 0L)), 0L, (a, b) -> a + b)"
-            f" ELSE -1L END"
-        )
-        cands.append(F.struct(
-            m.alias("num"),
-            F.expr(f"cast({n_tok_col} - {p} as bigint)").alias("den"),
-            F.lit(p).cast("long").alias("p"),
-        ))
-    init = F.struct(
-        F.lit(0).cast("long").alias("num"),
-        F.lit(1).cast("long").alias("den"),
-        F.lit(0).cast("long").alias("p"),
-    )
-    best = F.aggregate(
-        F.array(*cands), init,
-        lambda acc, x: F.when(
-            (x["num"] >= 0) & (x["num"] * acc["den"] > acc["num"] * x["den"]),
-            x,
-        ).otherwise(acc),
-    )
-    return {
-        "period_best": best["p"],
-        "period_matches": best["num"],
-        "period_frac4": fround4(best["num"] / best["den"]),
-    }
-
-
-def banned_sequence_hits(patterns: list, tokens_col: str = "tokens",
-                         n_tok_col: str = "n_tok") -> dict:
-    """Blocklist sequence matcher — the bad-content filter pass: count
-    OVERLAPPING occurrences of each banned token sequence (broadcast-tiny
-    literal patterns; at scale the blocklist ships as literals or a
-    broadcast join — never a shuffle). Returns one exact-count column per
-    pattern (bl_hits_0, bl_hits_1, ...) plus bl_blocked = 1 iff any pattern
-    occurs. Pure column expressions."""
-    if not patterns or any(len(p) < 1 for p in patterns):
-        raise ValueError("need at least one non-empty pattern")
-    out: dict = {}
-    hit_cols = []
-    for pi, pat in enumerate(patterns):
-        L = len(pat)
-        cond = " AND ".join(
-            f"element_at({tokens_col}, i + {j}) = {int(v)}"
-            for j, v in enumerate(pat)
-        )
-        c = F.expr(
-            f"CASE WHEN {n_tok_col} >= {L} THEN "
-            f"aggregate(transform(sequence(1, cast({n_tok_col} as int) - {L - 1}),"
-            f" i -> IF({cond}, 1L, 0L)), 0L, (a, b) -> a + b)"
-            f" ELSE 0L END"
-        )
-        out[f"bl_hits_{pi}"] = c
-        hit_cols.append(c)
-    blocked = hit_cols[0] > 0
-    for c in hit_cols[1:]:
-        blocked = blocked | (c > 0)
-    out["bl_blocked"] = blocked.cast("long")
-    return out
 
 
 def quota_sample(df, k: int, stratum_col: str = "source",
@@ -1494,9 +1247,9 @@ def source_assoc_top(df, source_col: str = "source",
     (c(t)·c(s)) (observed over expected co-occurrence mass), argmax per
     source with ties to the lowest token id. All four counts are exact
     BIGINTs; the ranking key is ONE IEEE division of two exact integer
-    products, so the argmax is engine-reproducible (same pattern as the
-    TF-IDF gate). Tokens with c(t,s) < min_count are excluded (a rare
-    token seen once in one source has unbounded lift).
+    products, so the argmax is engine-reproducible. Tokens with
+    c(t,s) < min_count are excluded (a rare token seen once in one source
+    has unbounded lift).
 
     Two-phase (source, token) aggregation + broadcast of the 1-row total —
     one shuffle on token, scale-safe."""
@@ -1655,50 +1408,6 @@ def corpus_digest(df, group_col: str = "source", tokens_col: str = "tokens",
     )
 
 
-def bigram_accuracy(df, tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                    id_col: str = "doc_id"):
-    """LM-based quality scoring with EXACT arithmetic — the
-    perplexity-filter analog that needs no logs: train the corpus bigram
-    model's top-1 predictor (per prefix token, the most frequent next
-    token, ties to the lowest id) and score each doc by its next-token
-    top-1 accuracy. Degenerate/repetitive docs score near 1, random noise
-    scores near 1/|V| — the same separation a perplexity filter buys,
-    but every number is an exact integer (hits/positions) + ONE fround4
-    division, so the gate is engine-exact.
-
-    Scale shape: one (prefix, next) two-phase aggregation builds the model
-    (|V|² rows max — broadcast-tiny for any sub-word vocab); scoring is the
-    exploded positions broadcast-joined to the model and re-aggregated per
-    doc. Docs with < 2 tokens emit no rows (left-join + coalesce at the
-    call site)."""
-    pos = df.select(
-        id_col,
-        F.explode(F.expr(
-            f"CASE WHEN {n_tok_col} >= 2 THEN "
-            f"transform(sequence(1, cast({n_tok_col} as int) - 1),"
-            f" i -> named_struct('p', element_at({tokens_col}, i),"
-            f"                   'nx', element_at({tokens_col}, i + 1)))"
-            f" ELSE array() END")).alias("g"),
-    ).select(id_col, F.col("g.p").alias("p"), F.col("g.nx").alias("nx"))
-    model = (
-        pos.groupBy("p", "nx").agg(F.count("*").alias("c"))
-        .groupBy("p")
-        .agg(F.max(F.struct(F.col("c"), (-F.col("nx")).alias("neg"))).alias("m"))
-        .select("p", (-F.col("m.neg")).cast("int").alias("top_next"))
-    )
-    scored = pos.join(F.broadcast(model), "p").groupBy(id_col).agg(
-        F.count("*").cast("long").alias("bigram_positions"),
-        F.sum((F.col("nx") == F.col("top_next")).cast("long")).cast("long")
-         .alias("bigram_hits"),
-    )
-    return scored.select(
-        id_col, "bigram_positions", "bigram_hits",
-        F.when(F.col("bigram_positions") > 0,
-               fround4(F.col("bigram_hits") / F.col("bigram_positions")))
-         .otherwise(F.lit(0.0)).alias("bigram_acc4"),
-    )
-
-
 def kn_continuation(df, tokens_col: str = "tokens", n_tok_col: str = "n_tok"):
     """Kneser-Ney CONTINUATION counts over corpus bigrams — the smoothing
     statistics a KN language model is built on: per token w,
@@ -1780,102 +1489,6 @@ def cv_fold(id_expr, k: int, mix: int = 1181783497, p31: int = 2147483647):
         raise ValueError(f"k must be >= 2, got {k}")
     h = F.pmod((id_expr.cast("bigint") % p31) * F.lit(mix % p31), F.lit(p31))
     return (h % k).cast("long")
-
-
-def gram_poly_hash(n: int, base: int, tokens_col: str = "tokens",
-                   n_tok_col: str = "n_tok", p31: int = 2147483647):
-    """Array of ENGINE-REPRODUCIBLE polynomial hashes of the document's
-    token n-grams: h(i) = Σ_j t_{i+j}·base^j mod P31 — plain integer
-    arithmetic (tokens < 2⁸ · weights < 2³¹ · n terms stays far inside
-    int64), so DuckDB replays the chain integer-for-integer where
-    xxhash64 cannot cross engines. Same short-row guard as ngram_keys."""
-    if n <= 0:
-        raise ValueError(f"need n > 0, got {n}")
-    weights = [pow(base, j, p31) for j in range(n)]
-    terms = " + ".join(
-        f"cast(element_at({tokens_col}, i + {j + 1}) as bigint) * {w}"
-        for j, w in enumerate(weights)
-    )
-    # sequence over INT bounds: element_at requires an INT index (an
-    # incoming bigint n_tok would make the lambda var bigint and fail)
-    return F.expr(
-        f"CASE WHEN {n_tok_col} >= {n} THEN "
-        f"transform(sequence(0, cast({n_tok_col} - {n} as int)),"
-        f" i -> ({terms}) % {p31}) "
-        "ELSE array() END"
-    )
-
-
-def bloom_fpr_audit(df, bench_df, n: int = 8, bits: int = 1 << 16,
-                    tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                    id_col: str = "doc_id"):
-    """Bloom-prefilter FALSE-POSITIVE audit with engine-reproducible
-    probes. `contamination_bloom`'s bitset hashes with xxhash64 — correct
-    by construction (false positives die in the verify join) but
-    unauditable cross-engine. This variant builds the same ≤ bits/64-row
-    bitset from two POLYNOMIAL gram hashes (base-131/base-257 chains mod
-    P31, `gram_poly_hash`) that an oracle replays exactly — so the
-    prefilter construction AND its measured selectivity become checkable
-    artifacts: bloom_cand per document is the count of gram positions
-    passing the prefilter; bloom_cand − exact hits is the wasted verify
-    work, the number a capacity plan needs before sizing `bits`.
-
-    Same plan shape as contamination_bloom: bitset = one bit_or hash agg
-    (KBs, always broadcastable); the corpus-side test is two broadcast
-    joins + mask ANDs — zero corpus shuffle before the per-doc count.
-    Words hold 63 bits (shifts 0..62): shifting into the int64 sign bit
-    is an ERROR in DuckDB while Spark wraps silently — 63-bit words keep
-    the mask arithmetic identical on both engines."""
-    if bits < 64 or bits & (bits - 1):
-        raise ValueError(f"bits must be a power of two >= 64, got {bits}")
-    h1 = gram_poly_hash(n, 131, tokens_col, n_tok_col)
-    h2 = gram_poly_hash(n, 257, tokens_col, n_tok_col)
-    bench_bits = bench_df.select(
-        F.explode(
-            F.concat(
-                F.transform(h1, lambda x: x % bits),
-                F.transform(h2, lambda x: x % bits),
-            )
-        ).alias("bit")
-    )
-    bloom = (
-        bench_bits.select(
-            F.expr("CAST(bit DIV 63 AS BIGINT)").alias("bloom_word"),
-            F.expr("shiftleft(1L, CAST(bit % 63 AS INT))").alias("bloom_mask"),
-        )
-        .groupBy("bloom_word")
-        .agg(F.bit_or("bloom_mask").alias("bloom_mask"))
-    )
-    pos = df.select(
-        F.col(id_col),
-        F.explode(F.arrays_zip(h1.alias("h1"), h2.alias("h2"))).alias("__p"),
-    ).select(id_col, F.col("__p.h1").alias("__h1"), F.col("__p.h2").alias("__h2"))
-    zero = F.lit(0).cast("long")
-    cand = pos
-    for i in (1, 2):
-        b = bloom.withColumnRenamed("bloom_word", f"w{i}").withColumnRenamed(
-            "bloom_mask", f"m{i}"
-        )
-        cand = (
-            cand.withColumn("__bit", F.col(f"__h{i}") % bits)
-            .withColumn(f"w{i}", F.expr("CAST(__bit DIV 63 AS BIGINT)"))
-            .withColumn(f"p{i}", F.expr("shiftleft(1L, CAST(__bit % 63 AS INT))"))
-            .drop("__bit")
-            .join(F.broadcast(b), f"w{i}", "left")
-            .filter(
-                F.coalesce(F.col(f"m{i}"), zero).bitwiseAND(F.col(f"p{i}")) != 0
-            )
-        )
-    return (
-        df.select(id_col)
-        .join(
-            cand.groupBy(id_col).agg(
-                F.count("*").cast("long").alias("bloom_cand")
-            ),
-            id_col, "left",
-        )
-        .select(id_col, F.coalesce("bloom_cand", zero).alias("bloom_cand"))
-    )
 
 
 def digest_update(old_digest, removed, added, group_col: str = "source",
@@ -1993,86 +1606,6 @@ def bpe_train(df, n_merges: int, new_id_start: int,
         # round's plan otherwise nests the previous round's fold
         out = out.localCheckpoint(eager=False)
     return merges, out
-
-
-def bigram_lm_score(df, tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                    id_col: str = "doc_id", probe: int = 32):
-    """Per-doc likelihood under the corpus add-1-smoothed bigram LM — the
-    CCNet-style perplexity filter, log-free so the gate stays engine-exact:
-
-        p(w|v) = (c(v,w) + 1) / (c(v) + V)          (conditional MLE)
-        gain_i = p(w|v) / p_uni(w)
-               = ((c(v,w)+1)·(N+V)) / ((c(v)+V)·(c(w)+1))
-
-    with c(v) = v's left-context count, c(w) = w's right-occurrence count,
-    N = total bigram positions, V = |corpus vocabulary|. Every term is ONE
-    IEEE division of two exact BIGINT products (< 2⁵³ up to ~10⁸ positions
-    with 10⁷-hot tokens — pre-scale beyond that); the per-doc folds
-    multiply SEQUENTIALLY in position order (seed 1.0; 1.0·t₁ == t₁
-    exactly), which DuckDB replays multiply-for-multiply with
-    list_reduce(list(term ORDER BY pos)).
-
-    The folds run over the first `probe` positions only: a bounded window
-    keeps both products inside the normal double range by construction
-    (term ∈ [1/(N+V)², N+V] ⇒ 32 multiplies stay within ±10^192 for any
-    corpus under 10⁶ positions), so no underflow-to-zero/overflow-to-inf
-    edge can differ across engines. `lm_terms` still counts ALL positions.
-    lm_gain32 > 1 ⇔ the bigram model beats unigram on the probe — the
-    predictability signal a perplexity filter thresholds (degenerate
-    repetition scores high, shuffled noise ≈ 1).
-
-    Returns one row per doc with ≥ 2 tokens: (doc_id, lm_terms, lm_p32,
-    lm_gain32, lm_keep); shorter docs emit nothing (left-join + coalesce
-    at the call site).
-
-    Scale shape: the (v,w) count table is the one heavy aggregation
-    (map-side combinable); scoring joins the exploded positions back on
-    (v,w)/(v)/(w) — the standard score-corpus-against-LM-table pipeline —
-    then ONE per-doc re-aggregation. No Python anywhere."""
-    t, n = tokens_col, n_tok_col
-    pos = df.select(
-        id_col,
-        F.posexplode(F.expr(
-            f"CASE WHEN {n} >= 2 THEN "
-            f"transform(sequence(1, cast({n} as int) - 1),"
-            f" i -> named_struct('v', cast(element_at({t}, i) as bigint),"
-            f"                   'w', cast(element_at({t}, i + 1) as bigint)))"
-            f" ELSE array() END")).alias("pos", "g"),
-    ).select(id_col, "pos", F.col("g.v").alias("v"), F.col("g.w").alias("w"))
-    bc = pos.groupBy("v", "w").agg(F.count("*").cast("long").alias("c_vw"))
-    uc = pos.groupBy("v").agg(F.count("*").cast("long").alias("c_v"))
-    wc = pos.groupBy("w").agg(F.count("*").cast("long").alias("c_w"))
-    tot = df.select(F.explode(tokens_col).alias("tok")).agg(
-        F.countDistinct("tok").cast("long").alias("lm_V")
-    ).crossJoin(pos.agg(F.count("*").cast("long").alias("lm_N")))
-    j = (
-        pos.join(bc, ["v", "w"])
-        .join(uc, ["v"])
-        .join(wc, ["w"])
-        .crossJoin(F.broadcast(tot))
-    )
-    tp = (
-        (F.col("c_vw") + 1).cast("double")
-        / (F.col("c_v") + F.col("lm_V")).cast("double")
-    )
-    tg = (
-        ((F.col("c_vw") + 1) * (F.col("lm_N") + F.col("lm_V"))).cast("double")
-        / ((F.col("c_v") + F.col("lm_V")) * (F.col("c_w") + 1)).cast("double")
-    )
-    per = j.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("lm_terms"),
-        F.collect_list(
-            F.when(F.col("pos") < probe,
-                   F.struct(F.col("pos"), tp.alias("tp"), tg.alias("tg")))
-        ).alias("__lst"),
-    )
-    fold = "aggregate(sort_array(__lst), cast(1.0 as double), (a, x) -> a * x.{})"
-    return per.select(
-        id_col, "lm_terms",
-        F.expr(fold.format("tp")).alias("lm_p32"),
-        F.expr(fold.format("tg")).alias("lm_gain32"),
-        (F.expr(fold.format("tg")) > 1.0).cast("long").alias("lm_keep"),
-    )
 
 
 def dsir_weights(df, target_flag, tokens_col: str = "tokens",
@@ -2342,87 +1875,6 @@ def nucleus_flags(df, p_num: int = 9, p_den: int = 10,
         "in_nucleus",
         ((F.col("nuc_cum") - F.col("cnt")) * p_den
          < p_num * F.col("nuc_tot")).cast("long"),
-    )
-
-
-def ql_lm_scores(df, terms, mu: int = 2000, tokens_col: str = "tokens",
-                 n_tok_col: str = "n_tok", id_col: str = "doc_id"):
-    """Query-likelihood language-model retrieval with Dirichlet smoothing
-    (Ponte & Croft, SIGIR 1998; Zhai & Lafferty, SIGIR 2001) — the third
-    classical ranking family beside BM25 (tf·idf) and MaxSim (late
-    interaction), LOG-FREE so it replays cross-engine:
-
-        p(q|d) = Π_{t ∈ q} (tf_{t,d} + µ·ctf_t/S) / (dl + µ)
-
-    Gated as the GAIN over the background (document-independent) model —
-    the quantity that actually ranks, with every factor ≥ 1 so fround4
-    keeps signal (the raw p(q|d) underflows 4 decimals):
-
-        gain(q, d) = p(q|d) / p_bg(q|d) = Π_t (tf_{t,d}·S + µ·ctf_t) / (µ·ctf_t)
-
-    Every term is ONE IEEE division of two exact BIGINTs (ctf = corpus
-    term frequency, S = corpus token mass); zero-tf terms contribute
-    exactly 1, so — unlike BM25's match-only sum — every document scores
-    on every query term and the score is a fixed |q|-term multiply chain
-    in term order, replayed by the oracle term-for-term. Numerator exact
-    while tf·S + µ·ctf fits int64 (tf ≲ 10³, S ≲ 10¹⁴).
-
-    Scale shape: corpus scalars broadcast; per-(doc, term) tf from one
-    explode + IN-filter + hash agg; missing (doc, term) cells re-enter
-    via a doc × |q|-literal-terms expansion (narrow). Returns
-    (id_col, ql_terms, ql_p4)."""
-    terms = sorted(set(int(x) for x in terms))
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if mu < 1:
-        raise ValueError(f"mu must be >= 1, got {mu}")
-    tot = df.agg(F.sum(n_tok_col).cast("long").alias("__S"))
-    ctf = (
-        df.select(F.explode(tokens_col).alias("__t"))
-        .filter(F.col("__t").isin(terms))
-        .groupBy("__t")
-        .agg(F.count("*").cast("long").alias("__ctf"))
-    )
-    ex = df.select(
-        id_col, F.col(n_tok_col).cast("long").alias("__dl"),
-        F.explode(tokens_col).alias("__t"),
-    ).filter(F.col("__t").isin(terms))
-    tf = ex.groupBy(id_col, "__dl", "__t").agg(
-        F.count("*").cast("long").alias("__tf"))
-    # every (doc, term) cell: docs × the literal term array, tf coalesced 0
-    grid = df.select(
-        id_col, F.col(n_tok_col).cast("long").alias("__dl"),
-        F.explode(F.array(*[F.lit(t) for t in terms])).alias("__t"),
-    )
-    cells = (
-        grid.join(tf, [id_col, "__dl", "__t"], "left")
-        .withColumn("__tf", F.coalesce("__tf", F.lit(0).cast("long")))
-        .join(F.broadcast(ctf.withColumnRenamed("__ctf", "__ctf")), "__t", "left")
-        .withColumn("__ctf", F.coalesce("__ctf", F.lit(0).cast("long")))
-        .join(F.broadcast(tot))
-    )
-    v = F.when(
-        F.col("__ctf") > 0,
-        (F.col("__tf") * F.col("__S") + F.lit(mu) * F.col("__ctf"))
-        .cast("double")
-        / (F.lit(mu) * F.col("__ctf")).cast("double"),
-    ).otherwise(F.lit(1.0))
-    return (
-        cells.select(id_col, "__t", v.alias("__v"))
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("ql_terms"),
-            F.array_sort(
-                F.collect_list(F.struct(F.col("__t").alias("t"),
-                                        F.col("__v").alias("v")))
-            ).alias("__vs"),
-        )
-        .select(
-            id_col, "ql_terms",
-            fround4(
-                F.aggregate("__vs", F.lit(1.0), lambda a, x: a * x["v"])
-            ).alias("ql_gain4"),
-        )
     )
 
 

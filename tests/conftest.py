@@ -13,13 +13,14 @@ def spark():
     from nyxus_spark.session import get_spark
 
     # Every AQE stage update renders the whole plan to a string for the SQL
-    # listener; for the widest gate queries (text_stats reads one persisted
-    # frame hundreds of times, and each read prints the cached plan again)
-    # that string alone exhausts an 8 GB JVM heap, and the dying serve
-    # thread leaves toPandas waiting forever. Cap the rendered plan at 1 MB
-    # (the plans tests inspect are a few KB) and keep fewer finished
-    # executions in the listener so their plans do not pile up across the
-    # session. Neither setting changes a query result.
+    # listener, and a cached frame's plan is printed again at each read. A
+    # wide gate query that reads one cached frame many times can make that
+    # string outgrow an 8 GB JVM heap; the dying serve thread then leaves
+    # toPandas waiting forever. No gate needs it today (text_stats passes
+    # without the cap), so the cap is a guard: it holds the rendered plan
+    # to 1 MB (the plans tests inspect are a few KB). Fewer finished
+    # executions in the listener keep their plans from piling up across
+    # the session. Neither setting changes a query result.
     s = get_spark(
         "nyxus_spark_tests", cores=8, shuffle_partitions=8,
         extra_conf={

@@ -36,6 +36,16 @@ def test_featurize_memory_and_gray_depth(spark):
     assert out["IH_NUM_BINS"].dropna().unique().tolist() == [32.0]
 
 
+def test_featurize_memory_doc_ids_length_must_match(spark):
+    api = NyxusSpark(["MEAN"])
+    toks = [[1, 2], [3, 4], [5, 6]]
+    for ids in (["a"], ["a", "b", "c", "d"], []):
+        with pytest.raises(ValueError, match="doc_ids"):
+            api.featurize_memory(spark, toks, doc_ids=ids)
+    out = api.featurize_memory(spark, toks, doc_ids=["a", "b", "c"]).toPandas()
+    assert sorted(out["doc_id"]) == ["a", "b", "c"]
+
+
 def test_featurize_path(spark, sf_dir, tmp_path):
     t = tokens_static(spark, sf_dir).limit(20)
     p = str(tmp_path / "toks")

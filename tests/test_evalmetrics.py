@@ -1,83 +1,6 @@
-"""functions/evalmetrics.py: exact ROC-AUC (midrank ties) and P/R/F1."""
-
-import math
-
-import pytest
-
-from nyxus_spark.functions.evalmetrics import binary_auc, prf_counts
-
-
-def _py_auc(pairs):
-    """Pairwise-comparison AUC: P(score_pos > score_neg) + 0.5·P(tie)."""
-    pos = [s for s, y in pairs if y == 1]
-    neg = [s for s, y in pairs if y == 0]
-    if not pos or not neg:
-        return None
-    num = 0.0
-    for a in pos:
-        for b in neg:
-            num += 1.0 if a > b else (0.5 if a == b else 0.0)
-    return num / (len(pos) * len(neg))
-
-
-def test_auc_matches_pairwise_definition(spark):
-    pairs = [((i * 37) % 23, 1 if (i * 53) % 5 < 2 else 0) for i in range(120)]
-    df = spark.createDataFrame([(i, s, y) for i, (s, y) in enumerate(pairs)],
-                               "rid long, score long, label long")
-    r = binary_auc(df, "score", "label").first()
-    exp = _py_auc(pairs)
-    assert r["auc4"] == math.floor(exp * 10000.0 + 0.5) / 10000.0
-    assert r["auc_n_pos"] == sum(y for _, y in pairs)
-    assert r["auc_n_neg"] == len(pairs) - r["auc_n_pos"]
-    # 2U identity: auc == u2 / (2·np·nn) exactly
-    assert abs(r["auc_u2"] / (2 * r["auc_n_pos"] * r["auc_n_neg"]) - exp) < 1e-12
-
-
-def test_auc_edges(spark):
-    # perfect separation -> 1.0; reversed -> 0.0; single class -> NULL
-    df = spark.createDataFrame(
-        [(1, 10, 1), (2, 9, 1), (3, 2, 0), (4, 1, 0)],
-        "rid long, score long, label long")
-    assert binary_auc(df, "score", "label").first()["auc4"] == 1.0
-    rev = spark.createDataFrame(
-        [(1, 1, 1), (2, 2, 1), (3, 9, 0), (4, 10, 0)],
-        "rid long, score long, label long")
-    assert binary_auc(rev, "score", "label").first()["auc4"] == 0.0
-    one = spark.createDataFrame([(1, 5, 1)], "rid long, score long, label long")
-    r = one.transform(lambda d: binary_auc(d, "score", "label")).first()
-    assert r["auc4"] is None
-
-
-def test_prf_matches_python(spark):
-    rows = [(i, (i * 7) % 3 == 0, (i * 11) % 4 == 0) for i in range(100)]
-    df = spark.createDataFrame(
-        [(i, int(p), int(y)) for i, p, y in rows],
-        "rid long, pred long, label long")
-    r = prf_counts(df, "pred", "label").first()
-    tp = sum(1 for _, p, y in rows if p and y)
-    fp = sum(1 for _, p, y in rows if p and not y)
-    fn = sum(1 for _, p, y in rows if not p and y)
-    tn = sum(1 for _, p, y in rows if not p and not y)
-    assert (r["tp"], r["fp"], r["fn"], r["tn"]) == (tp, fp, fn, tn)
-    assert r["prec4"] == math.floor(tp / (tp + fp) * 10000.0 + 0.5) / 10000.0
-    assert r["rec4"] == math.floor(tp / (tp + fn) * 10000.0 + 0.5) / 10000.0
-    assert r["f14"] == math.floor(
-        2 * tp / (2 * tp + fp + fn) * 10000.0 + 0.5) / 10000.0
-
-
-def test_calibration_table_bins_and_rates(spark):
-    from nyxus_spark.functions.evalmetrics import calibration_table
-
-    rows = [(i, i, 1 if i >= 70 else 0) for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, score long, label long")
-    got = calibration_table(df, "score", "label", bins=10).toPandas()
-    # monotone scores + threshold label: bins 1-7 rate 0, bins 8-10 rate 1
-    for _, r in got.iterrows():
-        assert r["cal_n"] == 10
-        assert r["cal_rate4"] == (1.0 if r["cal_bin"] >= 8 else 0.0)
-        assert r["cal_bin"] == (r["score"] // 10) + 1
-    with pytest.raises(ValueError):
-        calibration_table(df, "score", "label", bins=1)
+"""Evaluation helpers outside the feature kernels: the temporal group
+split (operators/windows.py) and the cross-multiplied chi-square flag of
+the A/B audit (__spark_entry__._ab_chi2)."""
 
 
 def test_temporal_group_split_laws(spark):

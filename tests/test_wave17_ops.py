@@ -1,17 +1,13 @@
-"""Wave-17 operators: winnowing fingerprints (MOSS), degenerate-repetition
-periodicity, and the blocklist sequence matcher — each pinned against a
-pure-Python reference on randomized token streams."""
+"""Wave-17 operators: winnowing fingerprints (MOSS) and their pair
+verification — pinned against a pure-Python reference on randomized token
+streams."""
 
 import random
 
 import pyspark.sql.functions as F
 import pytest
 
-from nyxus_spark.functions.text import (
-    banned_sequence_hits,
-    periodicity_exprs,
-    winnow_exprs,
-)
+from nyxus_spark.functions.text import winnow_exprs
 from nyxus_spark.operators.dedup import winnow_verify
 
 P31, BASE = 2147483647, 1000003
@@ -35,24 +31,6 @@ def _ref_winnow(toks, k=4, w=4):
         fps.append((s + j) * 2147483648 + m)
     out = list(dict.fromkeys(fps))
     return out, list(dict.fromkeys(e % 2147483648 for e in out))
-
-
-def _ref_period(toks, max_p=8):
-    n = len(toks)
-    best = (0, 1, 0)  # num, den, p
-    for p in range(1, max_p + 1):
-        if n <= p:
-            continue
-        m = sum(1 for i in range(p, n) if toks[i] == toks[i - p])
-        if m * best[1] > best[0] * (n - p):
-            best = (m, n - p, p)
-    return best
-
-
-def _ref_hits(toks, pat):
-    length = len(pat)
-    return sum(1 for i in range(len(toks) - length + 1)
-               if toks[i:i + length] == list(pat))
 
 
 def _rand_docs(seed=11, n_docs=50, vocab=8, max_len=40):
@@ -117,59 +95,6 @@ def test_winnow_param_validation():
         winnow_exprs(k=1)
     with pytest.raises(ValueError):
         winnow_exprs(w=0)
-
-
-def test_periodicity_matches_reference(tokdf):
-    pe = periodicity_exprs("tokens", "n_tok", max_p=8)
-    got = tokdf.select("doc_id", "tokens",
-                       pe["period_best"].alias("p"),
-                       pe["period_matches"].alias("m")).collect()
-    found = 0
-    for r in got:
-        num, _den, p = _ref_period(list(r.tokens))
-        assert (r.p, r.m) == (p, num), r.doc_id
-        found += p > 0
-    assert found >= 10, "fixture produced no periodic docs"
-
-
-def test_periodicity_smallest_period_wins(spark):
-    # 'ababab...' has equal match fraction at p=2 and p=4 — strict > keeps 2
-    df = spark.createDataFrame([(0, [7, 9] * 10)],
-                               "doc_id long, tokens array<int>")
-    pe = periodicity_exprs("tokens", "size(tokens)")
-    assert df.select(pe["period_best"]).first()[0] == 2
-
-
-def test_periodicity_validation():
-    with pytest.raises(ValueError):
-        periodicity_exprs(max_p=0)
-
-
-def test_banned_sequences_match_reference(tokdf):
-    pats = [[1, 2], [3, 3, 3], [0]]
-    bl = banned_sequence_hits(pats, "tokens", "n_tok")
-    got = tokdf.select("tokens", *[bl[f"bl_hits_{i}"].alias(f"h{i}")
-                                   for i in range(3)],
-                       bl["bl_blocked"].alias("blk")).collect()
-    for r in got:
-        hits = [_ref_hits(list(r.tokens), p) for p in pats]
-        assert [r.h0, r.h1, r.h2] == hits
-        assert r.blk == (1 if any(hits) else 0)
-
-
-def test_banned_sequences_overlapping(spark):
-    # overlapping occurrences all count: 'aaaa' contains 'aa' three times
-    df = spark.createDataFrame([(0, [4, 4, 4, 4], 4)],
-                               "doc_id long, tokens array<int>, n_tok long")
-    bl = banned_sequence_hits([[4, 4]], "tokens", "n_tok")
-    assert df.select(bl["bl_hits_0"]).first()[0] == 3
-
-
-def test_banned_sequences_validation():
-    with pytest.raises(ValueError):
-        banned_sequence_hits([])
-    with pytest.raises(ValueError):
-        banned_sequence_hits([[1], []])
 
 
 def test_winnow_verify_pairs(spark):

@@ -125,61 +125,3 @@ def test_corpus_digest_order_independent(spark):
         spark.createDataFrame(rows[::-1], schema).repartition(7)).first()
     assert (a.digest_xor, a.digest_sum, a.digest_docs) \
         == (b.digest_xor, b.digest_sum, b.digest_docs)
-
-
-# --- wave-21: bigram-LM next-token accuracy ---------------------------------
-
-def test_bigram_accuracy_reference(spark):
-    from collections import Counter
-
-    from nyxus_spark.functions.text import bigram_accuracy
-
-    rng = random.Random(17)
-    rows = []
-    for i in range(60):
-        n = rng.randint(0, 20)
-        toks = [rng.randrange(6) for _ in range(n)]
-        if i % 4 == 0 and n >= 6:  # repetitive docs must score high
-            toks = [toks[0]] * n
-        rows.append((f"doc_{i}", toks, n))
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int")
-    got = {r.doc_id: r for r in bigram_accuracy(df).collect()}
-    # python reference
-    cnt = Counter()
-    for _d, toks, _n in rows:
-        for a, b in zip(toks, toks[1:]):
-            cnt[(a, b)] += 1
-    model = {}
-    for (a, b), c in cnt.items():
-        if a not in model or (c, -b) > (model[a][1], -model[a][0]):
-            model[a] = (b, c)
-    import math
-    for d, toks, n in rows:
-        if n < 2:
-            assert d not in got
-            continue
-        hits = sum(1 for a, b in zip(toks, toks[1:]) if model[a][0] == b)
-        r = got[d]
-        assert r.bigram_positions == n - 1, d
-        assert r.bigram_hits == hits, d
-        assert abs(r.bigram_acc4
-                   - math.floor(hits / (n - 1) * 10000.0 + 0.5) / 10000.0) < 1e-12
-    # constant docs of token t score 1.0 exactly when the corpus model's
-    # top next for t is t itself — check model-aware
-    const = [(got[d], toks[0]) for d, toks, n in rows
-             if n >= 6 and len(set(toks)) == 1]
-    assert const
-    for r, t in const:
-        assert (r.bigram_acc4 == 1.0) == (model[t][0] == t)
-
-
-def test_bigram_model_tie_breaks_to_lowest(spark):
-    from nyxus_spark.functions.text import bigram_accuracy
-
-    # prefix 5 -> next 1 and next 2 both twice: model must pick 1
-    df = spark.createDataFrame(
-        [("a", [5, 1, 5, 2, 5, 1, 5, 2], 8), ("b", [5, 1], 2)],
-        "doc_id string, tokens array<int>, n_tok int")
-    got = {r.doc_id: r for r in bigram_accuracy(df).collect()}
-    # doc b's single position (5 -> 1) must hit
-    assert got["b"].bigram_hits == 1

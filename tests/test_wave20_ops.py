@@ -391,7 +391,7 @@ def test_mean_pool_docs_skips_unmatched_tokens(spark):
 
 
 # ---------------------------------------------------------------------------
-# holdout split / poly-hash bloom audit
+# holdout split
 # ---------------------------------------------------------------------------
 
 def test_holdout_split_deterministic_and_disjoint(spark):
@@ -436,33 +436,6 @@ def test_cv_fold_covers_and_balances(spark):
     assert len({got[i] for i in range(10)}) >= 3
     with pytest.raises(ValueError):
         cv_fold(F.col("doc_id"), 1)
-
-
-def test_bloom_fpr_audit_superset_of_exact(spark):
-    from nyxus_spark.functions import bloom_fpr_audit, contamination
-    rows = [(f"d{i}", [(i * 13 + j) % 97 for j in range(20)]) for i in range(30)]
-    df = _tok_df(spark, rows)
-    bench = df.filter(F.col("doc_id").isin("d0", "d7"))
-    cand = {r.doc_id: r.bloom_cand
-            for r in bloom_fpr_audit(df, bench, n=8).collect()}
-    exact = {r.doc_id: r.contam_hits
-             for r in contamination(df, bench, n=8).collect()}
-    # no false negatives: every exact hit passes the prefilter
-    for d in exact:
-        assert cand.get(d, 0) >= exact[d]
-    # bench docs fully self-match
-    assert cand["d0"] >= 13 and exact["d0"] == 13
-
-
-def test_gram_poly_hash_matches_python(spark):
-    from nyxus_spark.functions import gram_poly_hash
-    toks = [5, 250, 0, 17, 99, 3, 42, 8, 1]
-    df = _tok_df(spark, [("a", toks)])
-    out = df.select(gram_poly_hash(4, 131).alias("h")).collect()[0].h
-    P31 = 2147483647
-    exp = [sum(toks[i + j] * pow(131, j, P31) for j in range(4)) % P31
-           for i in range(len(toks) - 3)]
-    assert list(out) == exp
 
 
 def test_suffix_containment_finds_header_prepends(spark):

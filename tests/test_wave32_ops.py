@@ -215,66 +215,6 @@ def test_largest_remainder_tie_breaks_on_source(spark):
 
 
 # ---------------------------------------------------------------------------
-# bigram-LM likelihood probe
-# ---------------------------------------------------------------------------
-
-def _py_lm(rows, probe=32):
-    """Pure-Python reference: add-1 bigram LM, sequential position folds."""
-    from collections import Counter
-
-    bc, uc, wc = Counter(), Counter(), Counter()
-    vocab = set()
-    n_pos = 0
-    for _, toks in rows:
-        vocab.update(toks)
-        for v, w in zip(toks, toks[1:]):
-            bc[(v, w)] += 1
-            uc[v] += 1
-            wc[w] += 1
-            n_pos += 1
-    V = len(vocab)
-    out = {}
-    for doc_id, toks in rows:
-        if len(toks) < 2:
-            continue
-        p = g = 1.0
-        terms = 0
-        for i, (v, w) in enumerate(zip(toks, toks[1:])):
-            terms += 1
-            if i < probe:
-                p = p * (float(bc[(v, w)] + 1) / float(uc[v] + V))
-                g = g * (float((bc[(v, w)] + 1) * (n_pos + V))
-                         / float((uc[v] + V) * (wc[w] + 1)))
-        out[doc_id] = (terms, p, g)
-    return out
-
-
-def test_bigram_lm_score_matches_python_reference(spark):
-    from nyxus_spark.functions import bigram_lm_score
-
-    rows = [
-        (0, [1, 2, 3, 1, 2, 3, 1, 2]),     # repetitive: high gain
-        (1, [5, 9, 2, 7, 1, 8, 4, 6, 3]),  # scattered
-        (2, [1, 2]),                        # single bigram
-        (3, [7]),                           # too short: no row
-        (4, [2, 3] * 40),                   # longer than the probe window
-    ]
-    df = spark.createDataFrame(
-        [(i, t, len(t)) for i, t in rows], ["doc_id", "tokens", "n_tok"])
-    got = {r.doc_id: r for r in bigram_lm_score(df).collect()}
-    exp = _py_lm(rows)
-    assert set(got) == set(exp)  # doc 3 absent from both
-    for d, (terms, p, g) in exp.items():
-        assert got[d].lm_terms == terms
-        assert got[d].lm_p32 == p          # bit-exact sequential fold
-        assert got[d].lm_gain32 == g
-        assert got[d].lm_keep == (1 if g > 1.0 else 0)
-    # probe window: doc 4 scores on 32 of its 79 positions
-    assert got[4].lm_terms == 79
-    assert got[0].lm_keep == 1
-
-
-# ---------------------------------------------------------------------------
 # exact two-sample KS drift
 # ---------------------------------------------------------------------------
 

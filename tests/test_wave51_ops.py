@@ -175,50 +175,6 @@ def test_merge_upsert_missing_column_raises(spark):
 
 
 # ---------------------------------------------------------------------------
-# query-likelihood LM retrieval (wave 56)
-# ---------------------------------------------------------------------------
-
-def test_ql_lm_gain_matches_python(spark):
-    from nyxus_spark.functions import ql_lm_scores
-
-    rows = [
-        ("doc_0", [5, 5, 7, 1]),
-        ("doc_1", [1, 2, 3]),           # no query terms: gain exactly 1
-        ("doc_2", [5] * 10),
-    ]
-    df = spark.createDataFrame(
-        [(d, t, len(t)) for d, t in rows],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    terms, mu = [5, 7, 9], 2000
-    S = sum(len(t) for _, t in rows)
-    ctf = {q: sum(t.count(q) for _, t in rows) for q in terms}
-    got = {r["doc_id"]: (r["ql_terms"], r["ql_gain4"])
-           for r in ql_lm_scores(df, terms, mu=mu).collect()}
-    for doc_id, toks in rows:
-        g = 1.0
-        for q in sorted(terms):
-            if ctf[q] > 0:
-                g = g * (float(toks.count(q) * S + mu * ctf[q])
-                         / float(mu * ctf[q]))
-        assert got[doc_id] == (3, _r4(g)), doc_id
-    assert got["doc_1"][1] == 1.0       # background-only doc: gain 1
-    # matching two query terms (doc_0) outranks one higher-tf term (doc_2)
-    assert got["doc_0"][1] > got["doc_2"][1]
-
-
-def test_ql_lm_rejects_bad_args(spark):
-    from nyxus_spark.functions import ql_lm_scores
-
-    df = spark.createDataFrame([("d", [1], 1)],
-                               "doc_id string, tokens array<int>, n_tok int")
-    with pytest.raises(ValueError):
-        ql_lm_scores(df, [])
-    with pytest.raises(ValueError):
-        ql_lm_scores(df, [1], mu=0)
-
-
-# ---------------------------------------------------------------------------
 # TextTiling topical segmentation (wave 57)
 # ---------------------------------------------------------------------------
 

@@ -358,35 +358,8 @@ def test_boilerplate_python_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# tfidf_top_term / minhash_estimate
+# minhash_estimate
 # ---------------------------------------------------------------------------
-
-def test_tfidf_top_term_python_reference(spark):
-    from collections import Counter
-
-    from nyxus_spark.functions import tfidf_top_term
-
-    docs = [(f"d{i}", [((i * 7 + j * 3) % 6) for j in range((i % 5) + 2)])
-            for i in range(15)]
-    df = spark.createDataFrame(
-        [(d, t, len(t)) for d, t in docs],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    got = {r["doc_id"]: (r["top_tfidf_token"], r["top_tf"], r["top_df"])
-           for r in tfidf_top_term(df).collect()}
-    dfreq = Counter()
-    for _, t in docs:
-        for tok in set(t):
-            dfreq[tok] += 1
-    n = len(docs)
-    want = {}
-    for d, t in docs:
-        tf = Counter(t)
-        # score = tf*N/df, ties -> lowest token
-        best = min(tf, key=lambda k: (-(tf[k] * n / dfreq[k]), k))
-        want[d] = (best, tf[best], dfreq[best])
-    assert got == want
-
 
 def test_minhash_estimate_bounds_and_identity(spark):
     from nyxus_spark.operators.dedup import minhash_estimate

@@ -1,14 +1,6 @@
-"""Wave-8 operators: segment reassembly, deterministic MLM masking,
-n-gram novelty."""
+"""Wave-8 operators: segment reassembly."""
 
-import pytest
-from pyspark.sql import functions as F
-
-from nyxus_spark.functions import mask_tokens, ngram_novelty
 from nyxus_spark.operators.dedup import reassemble_segments, segment_dedup
-
-P31 = 2147483647
-MIX = 2654435761
 
 
 def test_reassemble_roundtrip_without_duplicates(spark):
@@ -33,72 +25,3 @@ def test_reassemble_drops_duplicate_segments_in_order(spark):
     assert out["a"] == [1, 2, 3]
     assert out["b"] == [7]      # only the novel segment survives, order kept
     assert "c" not in out
-
-
-def _py_mask(oid, n, rate, seed=0):
-    cut = int(P31 * rate)
-    k1, k2 = 40503, 2654435769 % P31
-    out = []
-    for i in range(n):
-        h = ((oid % P31 * k1 + (i + seed) * k2) % P31) * (MIX % P31) % P31
-        out.append(h % P31 < cut)
-    return out
-
-
-def test_mask_tokens_matches_python(spark):
-    rows = [(f"doc_{i}", list(range(10 + i)), 10 + i) for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>, n_tok int")
-    got = {r["doc_id"]: r for r in mask_tokens(df, 0.3).collect()}
-    for i in range(6):
-        oid, n = i, 10 + i
-        want = _py_mask(oid, n, 0.3)
-        r = got[f"doc_{i}"]
-        assert r["n_masked"] == sum(want)
-        assert r["mask_checksum"] == sum(p + 1 for p, m in enumerate(want) if m)
-        for p, m in enumerate(want):
-            assert r["masked_tokens"][p] == (-100 if m else p)
-
-
-def test_mask_tokens_seed_changes_mask_and_zero_rate_is_identity(spark):
-    df = spark.createDataFrame(
-        [("doc_1", list(range(50)), 50)], "doc_id string, tokens array<int>, n_tok int"
-    )
-    a = mask_tokens(df, 0.5, seed=0).collect()[0]
-    b = mask_tokens(df, 0.5, seed=1).collect()[0]
-    assert a["mask_checksum"] != b["mask_checksum"]  # fresh corruption per seed
-    z = mask_tokens(df, 0.0).collect()[0]
-    assert z["n_masked"] == 0 and z["masked_tokens"] == list(range(50))
-    full = mask_tokens(df, 1.0).collect()[0]
-    assert full["n_masked"] == 50
-
-
-def test_mask_tokens_validation():
-    with pytest.raises(ValueError, match="rate"):
-        mask_tokens(None, 1.5)
-
-
-def test_ngram_novelty_exact(spark):
-    # doc a: grams (1,2),(2,3) ; doc b: (1,2),(2,4) ; doc c: (9,9) unique
-    data = [
-        ("a", [1, 2, 3], 3),
-        ("b", [1, 2, 4], 3),
-        ("c", [9, 9], 2),
-        ("d", [7], 1),          # shorter than n → no gram rows
-    ]
-    df = spark.createDataFrame(data, "doc_id string, tokens array<int>, n_tok int")
-    got = {r["doc_id"]: r for r in ngram_novelty(df, n=2).collect()}
-    assert got["a"]["grams_distinct"] == 2 and got["a"]["grams_novel"] == 1
-    assert got["b"]["grams_distinct"] == 2 and got["b"]["grams_novel"] == 1
-    assert got["a"]["novelty"] == pytest.approx(0.5)
-    assert got["c"]["grams_novel"] == 1 and got["c"]["novelty"] == pytest.approx(1.0)
-    assert "d" not in got
-
-
-def test_ngram_novelty_repeated_gram_within_one_doc_stays_novel(spark):
-    # the same gram twice in ONE doc is still doc_freq=1 (array_distinct)
-    df = spark.createDataFrame(
-        [("a", [5, 6, 5, 6], 4)], "doc_id string, tokens array<int>, n_tok int"
-    )
-    # grams: (5,6), (6,5), (5,6) → 2 distinct, both unique to this doc
-    r = ngram_novelty(df, n=2).collect()[0]
-    assert r["grams_distinct"] == 2 and r["grams_novel"] == 2

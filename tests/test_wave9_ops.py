@@ -1,5 +1,6 @@
-"""Wave-9 operators: content-defined chunking dedup, PMI collocations,
-hashed-bigram linear scorer — each checked against a pure-Python reference."""
+"""Wave-9 operators: content-defined chunking dedup, PMI collocations and
+the Bloom-prefiltered contamination scan — each checked against a
+pure-Python reference or the exact path."""
 
 import random
 
@@ -7,11 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyxus_spark.operators.dedup import CDC_K, cdc_chunks
-from nyxus_spark.functions import (
-    bigram_counts,
-    hashed_bigram_score,
-    pmi_best_next,
-)
+from nyxus_spark.functions import bigram_counts, pmi_best_next
 
 P31 = 2147483647
 
@@ -153,35 +150,6 @@ def test_pmi_best_next_validation():
 
 
 # ------------------------------------------------- hashed-bigram scorer
-
-
-def _hb_ref(tokens):
-    s = 0
-    for a, b in zip(tokens, tokens[1:]):
-        bucket = (a * 506952114 + b * 40503) % P31 % 1024
-        s += (bucket * 2654435761) % P31 % 2001 - 1000
-    return s
-
-
-def test_hashed_bigram_score_matches_python(spark):
-    docs = _toy_corpus()
-    df = _corpus_df(spark, docs)
-    score, rate = hashed_bigram_score(df)
-    got = {r.doc_id: (r.hb_score, r.hb_rate)
-           for r in df.select("doc_id", score, rate).collect()}
-    for doc_id, toks in docs:
-        want = _hb_ref(toks)
-        want_rate = want / (len(toks) - 1) if len(toks) >= 2 else 0.0
-        assert got[doc_id] == (want, want_rate), doc_id
-
-
-def test_hashed_bigram_score_short_rows_zero(spark):
-    df = spark.createDataFrame(
-        [("a", [5], 1), ("b", [], 0)], "doc_id string, tokens array<int>, n_tok int"
-    )
-    score, rate = hashed_bigram_score(df)
-    for r in df.select("doc_id", score, rate).collect():
-        assert (r.hb_score, r.hb_rate) == (0, 0.0)
 
 
 # ------------------------------------------------- bloom decontamination
