@@ -13,9 +13,10 @@ wires them into the single config-driven call a corpus owner actually runs:
                        bench_df=benchmark_docs)
     res.docs                    # cleaned token table (doc_id, tokens, n_tok, source)
     res.provenance              # every dropped doc_id + the stage that dropped it
-    res.stage_counts()          # per-stage drop counts (lazy DataFrame)
     res.packs                   # context-window pack assignment (if configured)
     res.write_epoch(path, 0)    # reproducible epoch-shuffled materialization
+    res.stage_counts()          # per-stage drop counts (taken in that write
+                                #   when packing is on)
 
 Reference analog: `Nyxus(...).featurize_directory` is the reference's one-call
 lifecycle (scan -> segment -> feature -> write; nyxus.py:291-370); this is the
@@ -34,10 +35,15 @@ mirrors (CCNet / Gopher / RefinedWeb-style):
     8. sequence packing       shard-local concat-then-chunk window assignment
 
 Scale shape: every stage is the already-audited operator (broadcast dims,
-skew-safe min-struct aggregations, banded LSH — never all-pairs); the glue
-adds only left-anti joins for drop provenance, which are lazy and computed
-only when `provenance`/`stage_counts()` are materialized. `temperature_rates`
-is the one eager step (a strata-sized driver dict, prescan shape).
+skew-safe min-struct aggregations, banded LSH — never all-pairs). The glue
+adds left-anti joins for drop provenance, which run only when `provenance`
+is read. Per-stage drop counts are row counts that `Observation`s take on
+each stage's output during the pass that does the work: the first
+`write_epoch` of a packed corpus, otherwise one `noop` pass when
+`stage_counts()` is first called. The observations sit on a private
+rebuild of the chain, so the public frames carry none.
+`temperature_rates` is the one eager step (a strata-sized driver dict,
+prescan shape); the rebuild reuses its rates.
 
 Determinism: sampling/packing/epoch keys derive from `id_expr` (default
 xxhash64(doc_id)) via the shared (id*MIX mod P31) family, so a cleaned corpus,
@@ -46,17 +52,21 @@ its sample, and every epoch order are re-derivable forever.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
-    """Knobs for `clean_corpus`; None / False disables a stage."""
+    """Knobs for `clean_corpus`; None / False disables a stage. Values that
+    would silently keep or drop every doc raise ValueError."""
 
     # 1. length filter (docs outside [min_tokens, max_tokens] drop)
     min_tokens: int = 1
@@ -89,34 +99,150 @@ class PipelineConfig:
     pack_capacity: int | None = None
     pack_shards: int = 8
 
+    def __post_init__(self) -> None:
+        if self.min_tokens < 0:
+            raise ValueError(f"min_tokens must be >= 0, got {self.min_tokens}")
+        if self.max_tokens is not None and self.max_tokens < self.min_tokens:
+            raise ValueError(f"max_tokens ({self.max_tokens}) < min_tokens "
+                             f"({self.min_tokens}) drops every doc")
+        if (self.max_rep3_ratio is not None
+                and not 0.0 <= self.max_rep3_ratio <= 1.0):
+            raise ValueError("max_rep3_ratio must be in [0, 1], got "
+                             f"{self.max_rep3_ratio}")
+        if (self.near_jaccard is not None
+                and not 0.0 < self.near_jaccard <= 1.0):
+            raise ValueError(f"near_jaccard must be in (0, 1], got "
+                             f"{self.near_jaccard}")
+
+
+class _Chain(NamedTuple):
+    docs: DataFrame
+    provenance: DataFrame
+    packs: DataFrame | None
+    rates: dict | None
+
 
 class CorpusCleanResult:
     """Outputs of `clean_corpus`: the cleaned docs, full drop provenance,
     and (optionally) the pack assignment — all lazy DataFrames."""
 
-    def __init__(self, docs: DataFrame, provenance: DataFrame,
-                 packs: DataFrame | None, id_expr: Column) -> None:
-        self.docs = docs
-        self.provenance = provenance
-        self.packs = packs
+    def __init__(self, chain: _Chain, id_expr: Column,
+                 rebuild: Callable[[list], _Chain]) -> None:
+        self.docs = chain.docs
+        self.provenance = chain.provenance
+        self.packs = chain.packs
         self._id_expr = id_expr
+        self._rebuild = rebuild
+        self._observed = False
+        self._drops: dict[str, int] | None = None
+
+    def _observe(self, action: Callable[[_Chain], None]) -> None:
+        """Run `action` on a rebuild of the chain whose stage outputs carry
+        fresh row-count observations, and keep the per-stage drops unless
+        they cannot be trusted (see stage_counts)."""
+        observed: list[tuple[str, Observation]] = []
+        sc = self.docs.sparkSession.sparkContext
+        tag = f"nyxus-stage-counts-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            action(self._rebuild(observed))
+        finally:
+            sc.removeJobTag(tag)
+        drops = _observed_drops(observed)
+        if drops is not None and (min(drops.values(), default=0) < 0
+                                  or _tasks_repeated(sc, tag)):
+            drops = None
+        self._drops = drops
+        self._observed = True
 
     def stage_counts(self) -> DataFrame:
-        """(drop_stage, docs_dropped) — the "where did my docs go?" audit."""
-        return (self.provenance.groupBy("drop_stage")
-                .agg(F.count(F.lit(1)).cast("long").alias("docs_dropped"))
-                .orderBy("drop_stage"))
+        """(drop_stage, docs_dropped) — the "where did my docs go?" audit,
+        sorted by stage; a stage that dropped nothing has no row.
+
+        Each count is rows into a stage minus rows out of it. With packing,
+        the rows are counted in the first `write_epoch` pass; otherwise
+        (or before any epoch is written) the first call counts them in one
+        `noop` pass over the cleaned docs. The counts equal `provenance`
+        per stage when `id_col` is unique. The frame is a local relation:
+        collecting it runs no job.
+
+        A pass's counts are not used, and this aggregates `provenance`
+        instead, where Spark pruned a counted node (it may for empty input,
+        or for a stage that drops every doc), where a drop would be
+        negative (a counted node ran twice), and where a task of the pass
+        failed or a partition completed twice (a stage run again, a
+        speculative copy), which may merge its rows twice."""
+        if not self._observed:
+            self._observe(lambda c: c.docs.write.format("noop")
+                          .mode("overwrite").save())
+        if self._drops is None:
+            return (self.provenance.groupBy("drop_stage")
+                    .agg(F.count(F.lit(1)).cast("long").alias("docs_dropped"))
+                    .orderBy("drop_stage"))
+        spark = self.docs.sparkSession
+        rows = sorted(self._drops.items()) or [("", 0)]
+        values = ", ".join(f"('{s}', {n}L)" for s, n in rows)
+        out = spark.sql(f"SELECT * FROM VALUES {values} "
+                        "AS t(drop_stage, docs_dropped)")
+        return out if self._drops else out.filter(F.lit(False))
 
     def write_epoch(self, path: str, epoch: int, n_files: int = 32,
                     mode: str = "overwrite") -> None:
         """Materialize one epoch's reproducible global training order
         (sinks.write_training_order: range-partition + in-partition sort on
-        the epoch-shuffle key — non-overlapping sorted files)."""
+        the epoch-shuffle key — non-overlapping sorted files). With packing,
+        the first write also counts the rows each stage keeps (see
+        stage_counts)."""
         from nyxus_spark.sinks import write_training_order
 
-        src = self.packs if self.packs is not None else self.docs
-        write_training_order(src, path, epoch, self._id_expr,
-                             n_files=n_files, mode=mode)
+        def write(src: DataFrame) -> None:
+            write_training_order(src, path, epoch, self._id_expr,
+                                 n_files=n_files, mode=mode)
+
+        if self.packs is None or self._observed:
+            write(self.packs if self.packs is not None else self.docs)
+        else:
+            # The range partitioner's sample job runs the plan above the
+            # write's last shuffle a second time, so an observation there
+            # counts its rows twice. Packing's window is a shuffle above
+            # every stage output; without packing the last stages sit above
+            # no shuffle, so that write is not observed.
+            self._observe(lambda c: write(c.packs))
+
+
+def _observed_drops(observed: list[tuple[str, Observation]]
+                    ) -> dict[str, int] | None:
+    """Per-stage drops from the row counts on the chain's input and each
+    stage's output; None when Spark pruned an observed node, which leaves
+    its observation without a row."""
+    rows = []
+    for _, obs in observed:
+        try:
+            rows.append(obs.get["rows"])
+        except Py4JJavaError:  # the row is empty: toPyRow's assert fails
+            return None
+    drops = {stage: before - after for (stage, _), before, after
+             in zip(observed[1:], rows, rows[1:])}
+    return {s: n for s, n in drops.items() if n}
+
+
+def _tasks_repeated(sc, tag: str) -> bool:
+    """Whether the jobs tagged `tag` may have merged a task's observed rows
+    twice. Spark merges a shuffle-map task's metrics on every successful
+    attempt, so a partition that completes twice (in a stage run again
+    after a fetch failure or a lost executor, or by a speculative copy)
+    counts its rows again. A failed task or stage is taken as a sign of
+    the first; a job the status store no longer holds counts as repeated."""
+    jsc = sc._jsc.sc()
+    try:  # the status store is fed by the listener bus
+        jsc.listenerBus().waitUntilEmpty(60_000)
+        jobs = [jsc.statusStore().job(job_id)
+                for job_id in jsc.statusTracker().getJobIdsForTag(tag)]
+    except Py4JJavaError:
+        return True
+    return any(job.numFailedTasks() or job.numFailedStages()
+               or job.numCompletedTasks() > job.numCompletedIndices()
+               for job in jobs)
 
 
 def _dropped(before: DataFrame, after: DataFrame, stage: str,
@@ -156,15 +282,38 @@ def clean_corpus(
     similarity.kmeans_step); drops each doc whose cluster holds a lower-id
     member within the cosine threshold (operators/dedup.semdedup).
     """
-    cfg = config
     if id_expr is None:
         id_expr = F.xxhash64(F.col(id_col))
-    cur = df
+    build = partial(_chain, df, config, bench_df, embeddings_df,
+                    centroids_df, id_expr, id_col, tokens_col, n_tok_col,
+                    source_col, emb_vec_col)
+    chain = build(None, None)
+    return CorpusCleanResult(chain, id_expr, partial(build, chain.rates))
+
+
+def _chain(df: DataFrame, cfg: PipelineConfig, bench_df: DataFrame | None,
+           embeddings_df: DataFrame | None, centroids_df: DataFrame | None,
+           id_expr: Column, id_col: str, tokens_col: str, n_tok_col: str,
+           source_col: str, emb_vec_col: str, rates: dict | None,
+           observed: list[tuple[str, Observation]] | None) -> _Chain:
+    """Build the stage chain of `clean_corpus`. `rates` reuses already
+    computed temperature rates. With an `observed` list, the input and
+    every stage output carry a fresh row-count Observation, appended as
+    (stage, observation) in chain order (the input's stage is "")."""
+
+    def watch(frame: DataFrame, stage: str) -> DataFrame:
+        if observed is None:
+            return frame
+        obs = Observation()
+        observed.append((stage, obs))
+        return frame.observe(obs, F.count(F.lit(1)).alias("rows"))
+
+    cur = watch(df, "")
     prov: list[DataFrame] = []
 
     def step(nxt: DataFrame, stage: str) -> DataFrame:
         prov.append(_dropped(cur, nxt, stage, id_col))
-        return nxt
+        return watch(nxt, stage)
 
     # 1. length rule — pure pushdown-able predicate
     if cfg.min_tokens > 0 or cfg.max_tokens is not None:
@@ -274,8 +423,9 @@ def clean_corpus(
             temperature_rates,
         )
 
-        rates = temperature_rates(cur, stratum_col=source_col,
-                                  alpha=cfg.temperature_alpha)
+        if rates is None:
+            rates = temperature_rates(cur, stratum_col=source_col,
+                                      alpha=cfg.temperature_alpha)
         cur = step(cur.filter(stratified_keep(rates, source_col, id_expr)),
                    "7_mixture_sample")
     elif cfg.sample_rate is not None:
@@ -297,4 +447,4 @@ def clean_corpus(
     else:
         provenance = df.sparkSession.createDataFrame([], StructType([
             df.schema[id_col], StructField("drop_stage", StringType())]))
-    return CorpusCleanResult(cur, provenance, packs, id_expr)
+    return _Chain(cur, provenance, packs, rates)

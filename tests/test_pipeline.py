@@ -6,7 +6,9 @@ plus glue-level contracts (provenance, stage counts, packing, epoch write)."""
 
 import os
 import sys
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -122,8 +124,6 @@ def test_pipeline_filters_sampling_packing(spark, tmp_path):
 
 
 def test_pipeline_semantic_dedup(spark):
-    import pytest
-
     rows = [(f"doc_{i}", [i * 10 + j for j in range(6)], 6, "web")
             for i in range(3)]
     df = spark.createDataFrame(
@@ -253,9 +253,270 @@ def test_pipeline_renamed_columns_integer_ids(spark):
     assert prov_b == prov_a == {(8, "1_length"), (9, "4_exact_dup"),
                                 (10, "5_near_dup"),
                                 (12, "6_all_segments_dup")}
+    assert _call(lambda: [tuple(r) for r in b.stage_counts().collect()]) == [
+        ("1_length", 1), ("4_exact_dup", 1), ("5_near_dup", 1),
+        ("6_all_segments_dup", 1)]
 
     # no stage enabled: the empty provenance keeps the integer id type
     none = clean_corpus(renamed, PipelineConfig(min_tokens=0, exact=False,
                                                 near_jaccard=None), **keys)
     assert none.provenance.schema["id"].dataType == LongType()
     assert none.provenance.count() == 0
+
+
+# --- stage_counts() == provenance per stage, across settings and call orders
+
+ORDERS = ("counts_first", "after_write", "after_public_reads")
+
+
+def _call(fn, timeout=300):
+    """Run `fn` in a daemon thread so a blocked Observation.get fails the
+    test instead of hanging the suite."""
+    box = {}
+
+    def run():
+        try:
+            box["value"] = fn()
+        except BaseException as e:  # re-raised in the test thread
+            box["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout)
+    if t.is_alive():
+        pytest.fail(f"call did not return within {timeout} s")
+    if "error" in box:
+        raise box["error"]
+    return box.get("value")
+
+
+def _corpus(spark):
+    """One doc (at least) for every stage to drop; ids zero-padded so that
+    string order is integer order."""
+    toks = {i: [1000 + i * 50 + j for j in range(30)] for i in range(20)}
+    toks[20] = [1, 2]                                   # 1: too short
+    toks[21] = list(range(2000, 2090))                  # 1: too long
+    toks[22] = [7, 8, 9] * 8                            # 2: repetitive
+    toks[23] = list(range(5000, 5020))                  # 3: benchmark copy
+    toks[24] = toks[1]                                  # 4: exact dup of 1
+    toks[25] = toks[2][:-1] + [999]                     # 5: near dup of 2
+    toks[26] = list(range(6000, 6030))                  # 5b: same emb as 3
+    toks[27] = [3001, 3002, 3003, 104, 3004, 3005, 3006]
+    toks[28] = [3004, 3005, 3006, 104, 3001, 3002, 3003]  # 6: all segs dup
+    bp = [4001, 4002, 4003]
+    toks[29] = bp + [104, 4101, 4102, 4103]
+    toks[30] = bp + [104, 4201, 4202, 4203]
+    toks[31] = list(bp)                                 # 6: boilerplate only
+    rows = [(f"doc_{i:02d}", t, len(t), "small" if i % 5 == 0 else "big")
+            for i, t in sorted(toks.items())]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    bench = spark.createDataFrame(
+        [("b0", list(range(5000, 5020)), 20)],
+        "doc_id string, tokens array<int>, n_tok int")
+    emb = spark.createDataFrame(
+        [("doc_03", [0, 100, 50, 0]), ("doc_26", [0, 100, 50, 0]),
+         ("doc_04", [127, 0, 0, 0])], "doc_id string, qvec array<int>")
+    cents = spark.createDataFrame(
+        [(0, [0, 0, 0, 0])], "cent_id int, cent_qvec array<int>")
+    return df, bench, dict(embeddings_df=emb, centroids_df=cents)
+
+
+# Every stage is covered by one of these configs, each with a doc it drops.
+# They are split because the provenance plan of one config that enables
+# every stage grows with each stage that reads its input twice, and Spark
+# then spends minutes planning it.
+OFF = dict(min_tokens=0, exact=False, near_jaccard=None)
+CONFIGS = {
+    # 1 (both bounds), 2, 3, 7 as a temperature mixture, 8 on
+    "filters_temperature_packed": (
+        dict(min_tokens=3, max_tokens=80, max_rep3_ratio=0.5, exact=False,
+             near_jaccard=None, temperature_alpha=0.5, pack_capacity=64),
+        True,
+        {"1_length", "2_repetition", "3_contaminated", "7_mixture_sample"}),
+    # 4, 5, 5b
+    "dedup": (dict(exact=True, near_jaccard=0.5, semantic_threshold=0.98,
+                   min_tokens=0), False,
+              {"4_exact_dup", "5_near_dup", "5b_semantic_dup"}),
+    # 6 flag-only boilerplate, 7 as a flat rate, 8 off
+    "segments_flat": (dict(OFF, segment_delim=104, boilerplate_min_docs=2,
+                           sample_rate=0.7), False,
+                      {"6_all_segments_dup", "7_sample"}),
+    # 6 dropping boilerplate
+    "segments_drop_boilerplate": (
+        dict(OFF, segment_delim=104, boilerplate_min_docs=2,
+             drop_boilerplate=True), False, {"6_all_segments_dup"}),
+}
+
+
+def _source(spark, df, kind, path):
+    if kind == "local":
+        return df
+    df.write.mode("overwrite").parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def _prov_counts(res):
+    return sorted((r["drop_stage"], r["n"]) for r in
+                  res.provenance.groupBy("drop_stage")
+                  .agg(F.count(F.lit(1)).alias("n")).collect())
+
+
+def _counts_in_order(res, order, out):
+    """stage_counts() rows, called in `order`; every order also writes an
+    epoch to `out`."""
+    if order == "after_public_reads":
+        _call(lambda: res.provenance.collect())
+        _call(lambda: res.docs.show(2))
+        _call(lambda: res.docs.limit(1).collect())
+    if order != "counts_first":
+        _call(lambda: res.write_epoch(out, 0, n_files=2))
+        # only a packed write is observed
+        assert res._observed == (res.packs is not None), order
+    sc = _call(lambda: res.stage_counts())
+    assert [(f.name, f.dataType.simpleString()) for f in sc.schema] == [
+        ("drop_stage", "string"), ("docs_dropped", "bigint")]
+    got = _call(lambda: [(r["drop_stage"], r["docs_dropped"])
+                         for r in sc.collect()])
+    if order == "counts_first":
+        _call(lambda: res.write_epoch(out, 0, n_files=2))
+    return got
+
+
+@pytest.mark.parametrize("name,source,orders", [
+    ("filters_temperature_packed", "local", ORDERS),
+    ("filters_temperature_packed", "parquet", ("after_write",)),
+    ("dedup", "local", ("after_public_reads",)),
+    ("dedup", "parquet", ("after_write",)),
+    ("segments_flat", "local", ("after_public_reads",)),
+    ("segments_drop_boilerplate", "parquet", ("counts_first",)),
+])
+def test_stage_counts_match_provenance(spark, tmp_path, name, source, orders):
+    """stage_counts() equals the provenance aggregate in every call order,
+    and the observed write holds exactly the rows the counts keep."""
+    kw, bench, stages = CONFIGS[name]
+    df, bench_df, extra = _corpus(spark)
+    src = _source(spark, df, source, tmp_path / "src")
+    n_in = df.count()
+    want = None
+    for order in orders:
+        res = clean_corpus(src, PipelineConfig(**kw), **extra,
+                           bench_df=bench_df if bench else None)
+        out = str(tmp_path / order)
+        got = _counts_in_order(res, order, out)
+        want = want or _prov_counts(res)
+        assert got == want, order
+        assert res._drops is not None, order  # counted, not aggregated
+        n_out = spark.read.parquet(out).count()
+        assert n_out == n_in - sum(n for _, n in got), order
+    assert {s for s, _ in want} == stages
+
+
+@pytest.mark.parametrize("source", ["local", "parquet"])
+def test_stage_counts_no_stage_empty_input_all_dropped(spark, tmp_path,
+                                                      source):
+    """No stage enabled gives an empty (drop_stage, docs_dropped) frame from
+    the observed pass. An input the optimizer knows to be empty makes Spark
+    prune observed nodes, and the provenance aggregate answers. Empty input
+    and a stage that drops every doc give the right counts either way (AQE
+    may or may not prune at run time)."""
+    df, bench_df, _ = _corpus(spark)
+    src = _source(spark, df, source, tmp_path / "src")
+    none = clean_corpus(src, PipelineConfig(**OFF))
+    assert _counts_in_order(none, "counts_first", str(tmp_path / "n")) == []
+    assert none._drops == {}
+
+    cfg = PipelineConfig(min_tokens=3, max_rep3_ratio=0.5, exact=False,
+                         near_jaccard=None, pack_capacity=64)
+    pruned = clean_corpus(src.filter(F.lit(False)), cfg, bench_df=bench_df)
+    assert _counts_in_order(pruned, "after_write", str(tmp_path / "p")) == []
+    assert pruned._drops is None
+
+    empty = _source(spark, spark.createDataFrame([], df.schema), source,
+                    tmp_path / "empty")
+    for order in ("counts_first", "after_write"):
+        res = clean_corpus(empty, cfg, bench_df=bench_df)
+        assert _counts_in_order(res, order, str(tmp_path / order)) == []
+
+    res = clean_corpus(src, PipelineConfig(min_tokens=1000))
+    got = _counts_in_order(res, "after_write", str(tmp_path / "all"))
+    assert got == [("1_length", df.count())] == _prov_counts(res)
+
+
+def test_stage_counts_after_write_runs_no_replay(spark, tmp_path):
+    """After write_epoch, collecting stage_counts() runs at most one Spark
+    job (replaying the chain with left-anti joins ran 15 on the
+    corpus_clean benchmark workload) over no RDD or Python scan, and the
+    public frames carry no observation."""
+    df, bench_df, _ = _corpus(spark)
+    res = clean_corpus(df, PipelineConfig(
+        **CONFIGS["filters_temperature_packed"][0]), bench_df=bench_df)
+    res.write_epoch(str(tmp_path / "e0"), 0, n_files=2)
+    sc = spark.sparkContext
+    group = "pipeline-stage-counts-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        counts = res.stage_counts()
+        rows = counts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
+    assert [(r[0], r[1]) for r in rows] == _prov_counts(res)
+    for frame in (res.docs, res.packs, res.provenance):
+        assert "CollectMetrics" not in \
+            frame._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_stage_counts_duplicate_ids(spark, tmp_path):
+    """With every id twice (and one id on two different docs) the row
+    counts of the segment stage's inner join stay >= 0 and equal the
+    provenance aggregate."""
+    df, _, _ = _corpus(spark)
+    other = (df.filter("doc_id = 'doc_05'")
+             .withColumn("tokens", F.sequence(F.lit(9000), F.lit(9029))))
+    dup = df.unionByName(df).unionByName(other)
+    res = clean_corpus(dup, PipelineConfig(**CONFIGS["segments_flat"][0]))
+    got = _counts_in_order(res, "after_write", str(tmp_path / "e0"))
+    assert res._drops is not None
+    assert got == _prov_counts(res)
+    assert all(n > 0 for _, n in got)
+
+
+@pytest.mark.parametrize("why", ["tasks_repeated", "negative_drop"])
+def test_stage_counts_untrusted_pass_uses_provenance(spark, monkeypatch,
+                                                     why):
+    """Counts from a pass that may have merged a task twice (a failed
+    task, a partition completed twice), or that give a stage a negative
+    drop, are not used: the provenance aggregate answers."""
+    import nyxus_spark.pipeline as pipeline
+
+    if why == "tasks_repeated":
+        monkeypatch.setattr(pipeline, "_tasks_repeated", lambda sc, tag: True)
+    else:
+        real = pipeline._observed_drops
+        monkeypatch.setattr(pipeline, "_observed_drops", lambda obs: {
+            **real(obs), "0_phantom": -1})
+    df, _, _ = _corpus(spark)
+    res = clean_corpus(df, PipelineConfig(**dict(OFF, min_tokens=3)))
+    got = _call(lambda: [tuple(r) for r in res.stage_counts().collect()])
+    assert res._observed and res._drops is None
+    assert got == _prov_counts(res) == [("1_length", 1)]
+
+
+@pytest.mark.parametrize("kw", [
+    dict(near_jaccard=1.5), dict(near_jaccard=0.0), dict(near_jaccard=-0.5),
+    dict(min_tokens=5, max_tokens=4), dict(min_tokens=-1),
+    dict(max_rep3_ratio=1.5), dict(max_rep3_ratio=-0.1),
+])
+def test_config_refuses_keep_all_or_drop_all(kw):
+    """Values that silently kept or dropped every doc raise at construction,
+    before any Spark job; the bounds themselves are valid."""
+    with pytest.raises(ValueError):
+        PipelineConfig(**kw)
+    PipelineConfig(near_jaccard=1.0, min_tokens=0, max_tokens=0,
+                   max_rep3_ratio=0.0)
+    PipelineConfig(max_rep3_ratio=1.0)
