@@ -227,32 +227,8 @@ def _q_tokens_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("hapax_tokens", zero).alias("hapax_tokens"),
         F.coalesce("simpson_num", zero).alias("simpson_num"),
     )
-    # T5-style deterministic SPAN corruption stats (trigger starts every
-    # ~20 positions, 3-token spans, overlaps merged) — the denoising
-    # objective's data pass, each span decision pinned by the checksum
-    from nyxus_spark.functions import span_corruption_stats
-
-    spn = span_corruption_stats(t, every=20, span=3).select(
-        "doc_id", "n_corrupt_spans", "n_corrupt_tokens", "corrupt_checksum",
-    )
-    # deterministic FIM (fill-in-the-middle) transform stats: hash-decided
-    # application + two hash-derived cut points; segment lengths and the
-    # position-weighted checksum of the PSM-reordered stream pin every
-    # decision (pure exprs, zero shuffle)
-    from nyxus_spark.functions import fim_stats
-
-    fim = fim_stats("cast(substring(doc_id, 5) as bigint)")
-    fimdf = t.select("doc_id", *[v.alias(k) for k, v in fim.items()])
-    # TextTiling-style TOPICAL segmentation (Hearst 1997): lexical-cohesion
-    # valleys — the content-driven splitter beside the delimiter split;
-    # score array staged once, boundary minima exact ints, every boundary
-    # position pinned by the checksum
-    from nyxus_spark.functions import texttile_cols
-
-    tt = texttile_cols(t.select("doc_id", "tokens", "n_tok")).select(
-        "doc_id", "tt_pos", "tt_min", "tt_bounds", "tt_ck")
     res = (
-        out.join(spn, "doc_id").join(fimdf, "doc_id").join(tt, "doc_id")
+        out
         .withColumn(
             "ttr4",
             F.when(F.col("n_tok") > 0,
@@ -289,120 +265,6 @@ def _q_tokens_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0.0)),
         )
     )
-    # skyline (Pareto-front) membership on the length/richness plane:
-    # keep-the-frontier corpus curation as an exactly-checkable column
-    # (operators/selection.py — per-x max dim + broadcast, no global sort)
-    from nyxus_spark.operators import pareto_layers, skyline_flags
-
-    pts = res.select("doc_id",
-                     F.col("n_tok").cast("long").alias("__skx"),
-                     F.col("distinct_tokens").alias("__sky"))
-    sk = skyline_flags(pts, "__skx", "__sky").select("doc_id", "on_skyline")
-    # graded frontier rank (onion peeling, layers 1..3, interior 0): the
-    # "keep the top-L frontiers" curation dial — k tiny dim-aggs, no sorts
-    pl = pareto_layers(pts, "__skx", "__sky", k=3).select(
-        "doc_id", "pareto_layer")
-    # wave 57a — RESCALED RANGE (the Hurst-exponent R/S statistic over the
-    # token stream): with P_j = n·prefix_j − j·S (exact int64, includes
-    # P_0 = 0), R/S = (max_j P_j − min_j P_j)/√(n·Σx² − S²) — the whole
-    # range numerator is exact, the denominator ONE correctly-rounded sqrt,
-    # ONE final division (integer-numerator discipline). The total sum S is
-    # STAGED as a column and only REFERENCED in the fold lambda (CLAUDE.md
-    # captured-subexpression rule); the fold state is all-BIGINT named_struct
-    # (stable field types).
-    rs0 = t.select(
-        "doc_id", "n_tok", "tokens",
-        F.expr("aggregate(tokens, 0L, (a, x) -> a + x)").alias("__s"),
-    )
-    rs = rs0.select(
-        "doc_id",
-        F.expr(
-            "aggregate(tokens,"
-            " named_struct('j', 0L, 'pre', 0L, 'mx', 0L, 'mn', 0L),"
-            " (s, x) -> named_struct("
-            "   'j', s.j + 1L,"
-            "   'pre', s.pre + cast(x as bigint),"
-            "   'mx', greatest(s.mx, cast(n_tok as bigint) * (s.pre + cast(x as bigint))"
-            "                        - (s.j + 1L) * __s),"
-            "   'mn', least(s.mn, cast(n_tok as bigint) * (s.pre + cast(x as bigint))"
-            "                     - (s.j + 1L) * __s)),"
-            " s -> named_struct('mx', s.mx, 'mn', s.mn))"
-        ).alias("__rsmm"),
-    ).select(
-        "doc_id",
-        F.col("__rsmm.mx").alias("__rsmx"),
-        F.col("__rsmm.mn").alias("__rsmn"),
-    )
-    # wave 57b — Bandt–Pompe ORDINAL PATTERNS (m = 3): counts of the six
-    # strict orderings of consecutive triples plus a tie bucket — the
-    # permutation-entropy histogram with the cross-host log kept OUT of the
-    # gate (counts are exact int64; the dominant-pattern share is one
-    # division of exact ints)
-    def _op_cnt(cond: str):
-        return F.expr(
-            "CASE WHEN n_tok >= 3 THEN aggregate(zip_with("
-            " zip_with(slice(tokens, 1, n_tok - 2), slice(tokens, 2, n_tok - 2),"
-            "          (a, b) -> named_struct('a', a, 'b', b)),"
-            f" slice(tokens, 3, n_tok - 2), (p, c) -> CASE WHEN {cond} THEN 1L ELSE 0L END),"
-            " 0L, (s, x) -> s + x) ELSE 0L END"
-        )
-
-    ordf = t.select(
-        "doc_id",
-        _op_cnt("p.a < p.b AND p.b < c").alias("op_asc"),
-        _op_cnt("p.a < c AND c < p.b").alias("op_acb"),
-        _op_cnt("p.b < p.a AND p.a < c").alias("op_bac"),
-        _op_cnt("p.b < c AND c < p.a").alias("op_bca"),
-        _op_cnt("c < p.a AND p.a < p.b").alias("op_cab"),
-        _op_cnt("c < p.b AND p.b < p.a").alias("op_desc"),
-        _op_cnt("p.a = p.b OR p.b = c OR p.a = c").alias("op_ties"),
-    )
-    res = res.join(rs, "doc_id").join(ordf, "doc_id")
-    nnl = F.col("n_tok").cast("long")
-    rsk = nnl * F.col("tok_energy") - F.col("tok_sum") * F.col("tok_sum")
-    res = (
-        res.withColumn("rs_range", (F.col("__rsmx") - F.col("__rsmn")).cast("long"))
-        .withColumn(
-            "rs4",
-            F.when(
-                (F.col("n_tok") >= 2) & (rsk > 0),
-                _r4((F.col("__rsmx") - F.col("__rsmn")).cast("double")
-                    / F.sqrt(rsk.cast("double"))),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "op_max_share4",
-            F.when(
-                F.col("n_tok") >= 3,
-                _r4(F.greatest("op_asc", "op_acb", "op_bac", "op_bca",
-                               "op_cab", "op_desc", "op_ties").cast("double")
-                    / (nnl - 2)),
-            ).otherwise(F.lit(0.0)),
-        )
-        .drop("__rsmx", "__rsmn")
-    )
-    # tabular feature-ENCODING block (functions/encoding.py): within-source
-    # z-score of n_tok (fixed IEEE chain over exact BIGINT sums), exact
-    # percentile rank (rank−1)/(n−1), and p10/p90 WINSORIZATION with bounds
-    # from the lower-rank rule via a value-grain agg + cumulative window —
-    # the per-source standardization/clipping a mixed-corpus feature matrix
-    # applies before training
-    from nyxus_spark.functions.encoding import group_standardize, percentile_clip
-
-    enc = group_standardize(
-        t.select("doc_id", "source", "n_tok"), "source", "n_tok", prefix="src"
-    )
-    enc = percentile_clip(enc, "source", "n_tok", prefix="src").select(
-        "doc_id", "src_z4", "src_rank4", "src_lo", "src_hi", "src_wins"
-    )
-    # wave 112 — LONGEST REPEATED SUBSTRING (the within-doc degeneracy
-    # metric the train-data dedup literature filters on): suffix-array
-    # identity, 64-capped (functions.lrs_capped — pure JVM exprs; the cap
-    # bounds state to 64·n per doc, the 100 TB-safe form). The oracle
-    # replays the sorted-adjacent-suffix LCP from scratch in DuckDB.
-    from nyxus_spark.functions import lrs_capped
-
-    lrs = lrs_capped(t, cap=64)
     # wave 113 — GREEDY SET-COVER eval-set selection (max-coverage, the
     # (1−1/e) greedy): pick 8 docs covering the most NEW distinct BIGRAM
     # shingles (set ops run in shingle space — raw token sets are
@@ -423,124 +285,10 @@ def _q_tokens_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("doc_"), F.col("__oid").cast("string")).alias("doc_id"),
         "sc_step", "sc_gain",
     )
-    # wave 120 — DOC-LEVEL Huffman optimal-coding bound (the
-    # compression-based quality filter: boilerplate/degenerate docs have
-    # large fixed-vs-optimal savings): the same two-smallest merge as the
-    # per-source wave 107, grouped per doc (counts, never the corpus,
-    # enter Python), fixed-width baseline n_tok·⌈log2 vocab⌉ via the
-    # length(bin()) kit, saving ratio ONE division. Oracle replays the
-    # merge one recursion step per doc in parallel rows (the LZ78 shape).
-    from nyxus_spark.functions.coding import huffman_bits
-
-    hufd = huffman_bits(t, group_col="doc_id").select(
-        "doc_id",
-        F.col("huff_bits").alias("doc_huff_bits"),
-        F.col("huff_vocab").alias("doc_huff_vocab"),
-        F.when(
-            F.col("huff_vocab") > 1,
-            F.col("huff_mass")
-            * F.length(F.expr("bin(huff_vocab - 1)")).cast("long"),
-        ).otherwise(F.lit(0).cast("long")).alias("doc_fixed_bits"),
-    ).withColumn(
-        "doc_hsave4",
-        F.when(
-            F.col("doc_fixed_bits") > 0,
-            _r4((F.col("doc_fixed_bits") - F.col("doc_huff_bits"))
-                .cast("double") / F.col("doc_fixed_bits").cast("double")),
-        ).otherwise(F.lit(0.0)),
-    )
-    # wave 121 — NSP (next-segment-prediction) PAIR CONSTRUCTION (the
-    # BERT-style objective's data pass): A = first nonempty delimiter
-    # segment, B = second; a deterministic hash flips half the docs to a
-    # NEGATIVE (B swapped with the oid-order NEXT eligible doc's B,
-    # wrapping at the end). Label, partner id, and position-weighted
-    # checksums of the CHOSEN A/B pin every construction decision — a
-    # wrong swap, wrong segment, or wrong label flips a checksum. Reuses
-    # the split_on_token segments already derived above.
-    from pyspark.sql import Window
-
-    s2 = (
-        segs.filter(F.col("seg_id") <= 1)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("__c2"),
-            F.max(F.when(F.col("seg_id") == 0, F.col("seg_tokens")))
-            .alias("__a"),
-            F.max(F.when(F.col("seg_id") == 1, F.col("seg_tokens")))
-            .alias("__b"),
-        )
-        .filter(F.col("__c2") == 2)
-        .select(
-            "doc_id",
-            F.expr("cast(substr(doc_id, 5) as bigint)").alias("__oid"),
-            "__a", "__b",
-        )
-    )
-    wnsp = Window.orderBy(F.col("__oid").asc())
-    wnspa = Window.orderBy(F.col("__oid").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-
-    def _ck(c):
-        return F.expr(
-            f"aggregate(zip_with({c}, sequence(1, size({c})),"
-            f" (t, i) -> cast(t as bigint) * i), 0L, (s, x) -> s + x)"
-        )
-
-    nsp = (
-        s2.withColumn(
-            "__nb",
-            F.coalesce(F.lead("__b").over(wnsp),
-                       F.first("__b").over(wnspa)),
-        )
-        .withColumn(
-            "__np",
-            F.coalesce(F.lead("__oid").over(wnsp),
-                       F.first("__oid").over(wnspa)),
-        )
-        .withColumn(
-            "__neg",
-            (F.pmod((F.col("__oid") % F.lit(2147483647))
-                    * F.lit(1103515245), F.lit(2147483647))
-             % 2).cast("long"),
-        )
-        .withColumn(
-            "__bc",
-            F.when(F.col("__neg") == 1, F.col("__nb"))
-            .otherwise(F.col("__b")),
-        )
-        .select(
-            "doc_id",
-            (1 - F.col("__neg")).cast("long").alias("nsp_label"),
-            F.when(F.col("__neg") == 1, F.col("__np"))
-            .otherwise(F.col("__oid")).cast("long").alias("nsp_partner"),
-            F.size("__a").cast("long").alias("nsp_a_len"),
-            F.size("__bc").cast("long").alias("nsp_b_len"),
-            _ck("__a").alias("nsp_a_ck"),
-            _ck("__bc").alias("nsp_b_ck"),
-        )
-    )
-    zl = F.lit(0).cast("long")
     return (
-        res.join(sk, "doc_id").join(pl, "doc_id").join(enc, "doc_id")
-        .join(lrs, "doc_id", "left")
-        .withColumn("lrs64", F.coalesce("lrs64", zl))
-        .join(nsp, "doc_id", "left")
-        .withColumn("nsp_label",
-                    F.coalesce("nsp_label", F.lit(-1).cast("long")))
-        .withColumn("nsp_partner",
-                    F.coalesce("nsp_partner", F.lit(-1).cast("long")))
-        .withColumn("nsp_a_len", F.coalesce("nsp_a_len", zl))
-        .withColumn("nsp_b_len", F.coalesce("nsp_b_len", zl))
-        .withColumn("nsp_a_ck", F.coalesce("nsp_a_ck", zl))
-        .withColumn("nsp_b_ck", F.coalesce("nsp_b_ck", zl))
-        .join(scov, "doc_id", "left")
-        .withColumn("sc_step", F.coalesce("sc_step", zl))
-        .withColumn("sc_gain", F.coalesce("sc_gain", zl))
-        .join(hufd, "doc_id", "left")
-        .withColumn("doc_huff_bits", F.coalesce("doc_huff_bits", zl))
-        .withColumn("doc_huff_vocab", F.coalesce("doc_huff_vocab", zl))
-        .withColumn("doc_fixed_bits", F.coalesce("doc_fixed_bits", zl))
-        .withColumn("doc_hsave4", F.coalesce("doc_hsave4", F.lit(0.0)))
+        res.join(scov, "doc_id", "left")
+        .withColumn("sc_step", F.coalesce("sc_step", zero))
+        .withColumn("sc_gain", F.coalesce("sc_gain", zero))
     )
 
 
@@ -1014,51 +762,6 @@ def _q_prescan_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cramers_v4"),
     )
     base = base.crossJoin(F.broadcast(slchi))
-    # wave 106 — HUFFMAN optimal prefix-code bound per source (the
-    # entropy-free compression planner: the OPTIMAL bound beside
-    # text_stats' LZ78 ACTUAL parse cost): huff_bits = minimal
-    # Σ c_t·len(code_t) by the two-smallest merge over the per-source
-    # COUNT dim (applyInPandas — the count table, never the corpus,
-    # enters Python; the total is tie-break-INVARIANT across all optimal
-    # codes, so the gate is exact), the fixed-width baseline
-    # mass·⌈log2 vocab⌉ via the cross-engine length(bin()) kit, and the
-    # saving ratio as ONE final division. Oracle: recursive CTE merging
-    # two smallest per step on sorted (weight, id) struct lists.
-    from nyxus_spark.functions.coding import huffman_bits
-
-    huf = huffman_bits(t).withColumn(
-        "fixed_bits",
-        F.when(
-            F.col("huff_vocab") > 1,
-            F.col("huff_mass")
-            * F.length(F.expr("bin(huff_vocab - 1)")).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    ).withColumn(
-        "huff_save4",
-        F.when(
-            F.col("fixed_bits") > 0,
-            _r4((F.col("fixed_bits") - F.col("huff_bits")).cast("double")
-                / F.col("fixed_bits").cast("double")),
-        ).otherwise(F.lit(0.0)),
-    )
-    # wave 107 — UNIMAX epoch-capped mixture allocation (uniform budget
-    # waterfilling with a 2-epoch repetition cap, ascending-cap walk,
-    # floor-division exact): budget = ⌊39·T/20⌋ (just under 2 full
-    # epochs) puts the uniform share INSIDE the cap range so the walk
-    # saturates the small sources and leaves the big ones on the share —
-    # the mixture-design regime UniMax exists for. ONE single-group
-    # applyInPandas over the 20-row source dim; the oracle replays the
-    # walk one recursion step per source.
-    from nyxus_spark.functions.coding import unimax_allocation
-
-    um_budget = (
-        39 * t.agg(F.sum("n_tok").cast("long")).collect()[0][0]
-    ) // 20
-    um = unimax_allocation(
-        base.select("source", F.col("total_tokens").cast("long")
-                    .alias("total_tokens")),
-        budget=um_budget, epoch_cap=2,
-    )
     # wave 108 — MEDIAN-OF-MEANS robust per-source mean length (the
     # heavy-tail-safe estimator beside mean/median/MAD): 8 deterministic
     # hash buckets (oid·1103515245 mod P31 — re-derivable on any engine
@@ -1119,7 +822,7 @@ def _q_prescan_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(mhsk, "source")
            .join(mad, "source").join(trim, "source").join(ks, "source")
            .join(sim, "source").join(dec, "source").join(emd, "source")
-           .join(huf, "source").join(um, "source").join(mom, "source")
+           .join(mom, "source")
            .join(oov, "source", "left")
            .drop("sy", "sxx", "syy", "sxy"))
     return (
@@ -1735,14 +1438,6 @@ def _q_lag_lead_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
                                tiebreak="event_id")
     out = with_decayed_counter(out, "cents", half_life_us=14_400_000_000,
                                tiebreak="event_id")
-    # LOO + smoothed TARGET ENCODING of the user against purchase cents
-    # (functions/encoding.py): the leakage-free categorical encoder —
-    # (S_u − x)/(n_u − 1) for the row's own category, and the m=20
-    # Bayesian shrink toward the global mean as ONE cross-multiplied
-    # exact division (empty users get exactly the global mean)
-    from nyxus_spark.functions.encoding import loo_target_encode
-
-    out = loo_target_encode(out, "doc_id", "cents", m=20, prefix="te")
     # TEMPORAL GROUP SPLIT (the leakage-free backtest split, the north
     # rule's zero-temporal-leakage discipline as an operator): T = exact
     # lower-median event time; unseen-after-T users are TEST, pre-T rows of
@@ -1795,7 +1490,6 @@ def _q_lag_lead_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         _r4("dk30m_cents").alias("dk30"),
         F.col("dk240m_num_cents").alias("dk240_num"),
         _r4("dk240m_cents").alias("dk240"),
-        "te_n", "te_loo4", "te_sm4",
         "split_T_us", "key_first_us", "tsplit",
         "scd_from_us", "scd_to_us", "scd_current",
         "f_ts_0", "f_ts_1", "f_ts_2", "funnel_stage",
@@ -6301,9 +5995,9 @@ def _q_histo_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CDF — the preprocessing transform ahead of texture/IH binning):
     # eq(v) = round-half-up of (cdf(v) − cdf_min)·63/(N − cdf_min), exact
     # via floor((2a·63 + b) div (2b)). The CDF is a 251-row dim (global
-    # window on the DIM only, like the skyline cummax), broadcast back to
-    # the exploded stream; per-doc sums/extrema/position-checksum gate the
-    # whole remapped sequence.
+    # window on the DIM only), broadcast back to the exploded stream;
+    # per-doc sums/extrema/position-checksum gate the whole remapped
+    # sequence.
     from pyspark.sql import Window
 
     cnts = (
@@ -9290,128 +8984,6 @@ JOIN ({oracles.sql_haar()}) h USING (doc_id)
     return extra | {
         "tokens_basic": f"""
 WITH RECURSIVE {SQL_TOKENS_STATIC},
-encs AS (  -- per-source moments for the z-score chain
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS en,
-         CAST(SUM(CAST(n_tok AS BIGINT)) AS BIGINT) AS es,
-         CAST(SUM(CAST(n_tok AS BIGINT) * CAST(n_tok AS BIGINT)) AS BIGINT) AS ee
-  FROM tokens_static GROUP BY source
-),
-encv AS (SELECT source, CAST(n_tok AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS c
-         FROM tokens_static GROUP BY 1, 2),
-encc AS (SELECT source, v,
-                SUM(c) OVER (PARTITION BY source ORDER BY v
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-                SUM(c) OVER (PARTITION BY source) AS n
-         FROM encv),
-encb AS (  -- winsorization bounds: lower-rank rule max(1, (n·k) div 100)
-  SELECT source,
-         CAST(MIN(CASE WHEN cum >= GREATEST(1, (n * 10) // 100) THEN v END) AS BIGINT) AS src_lo,
-         CAST(MIN(CASE WHEN cum >= GREATEST(1, (n * 90) // 100) THEN v END) AS BIGINT) AS src_hi
-  FROM encc GROUP BY source
-),
-encr AS (SELECT doc_id,
-                CAST(rank() OVER (PARTITION BY source ORDER BY n_tok) AS BIGINT) AS rk
-         FROM tokens_static),
-lrsx AS (  -- wave 112: max LCP of lexicographically adjacent 64-capped
-           -- suffixes == min(longest repeated substring, 64)
-  SELECT doc_id, CAST(MAX(lcp) AS BIGINT) AS lrs64
-  FROM (
-    SELECT doc_id,
-           CASE WHEN prev IS NULL THEN 0
-                ELSE COALESCE(
-                  list_min(list_filter(
-                    range(1, least(len(sfx), len(prev)) + 1),
-                    k -> sfx[k] <> prev[k])) - 1,
-                  least(len(sfx), len(prev))) END AS lcp
-    FROM (
-      SELECT doc_id, sfx,
-             lag(sfx) OVER (PARTITION BY doc_id ORDER BY sfx) AS prev
-      FROM (
-        SELECT doc_id, list_slice(tokens, i, least(i + 63, n_tok)) AS sfx
-        FROM (SELECT doc_id, tokens, n_tok, unnest(range(1, n_tok + 1)) AS i
-              FROM tokens_static WHERE n_tok > 0)
-      )
-    )
-  )
-  GROUP BY doc_id
-),
-hufdc AS (  -- wave 120: doc-level Huffman bound — per-doc token counts
-  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT doc_id, unnest(tokens) AS tok FROM tokens_static)
-  GROUP BY doc_id, tok
-),
-hufd0 AS (
-  SELECT doc_id,
-         list_sort(list({{'w': c, 'id': CAST(tok AS BIGINT)}})) AS items,
-         CAST(0 AS BIGINT) AS bits,
-         CAST(COUNT(*) AS BIGINT) AS vocab,
-         CAST(SUM(c) AS BIGINT) AS mass
-  FROM hufdc GROUP BY doc_id
-),
-hufdr AS (  -- two-smallest merge, one step per recursion, per-doc rows
-  SELECT doc_id, items, bits, vocab, mass FROM hufd0
-  UNION ALL
-  SELECT doc_id,
-         list_sort(list_append(items[3:],
-           {{'w': items[1].w + items[2].w,
-             'id': 1048576 + vocab - len(items)}})),
-         bits + items[1].w + items[2].w,
-         vocab, mass
-  FROM hufdr WHERE len(items) > 1
-),
-hufdx AS (
-  SELECT doc_id, bits AS doc_huff_bits, vocab AS doc_huff_vocab,
-         CASE WHEN vocab > 1
-              THEN mass * CAST(length(bin(vocab - 1)) AS BIGINT)
-              ELSE CAST(0 AS BIGINT) END AS doc_fixed_bits
-  FROM hufdr WHERE len(items) = 1
-),
-nsp0 AS (  -- wave 121: NSP pairs — nonempty delimiter-104 segments
-  SELECT doc_id, CAST(substr(doc_id, 5) AS BIGINT) AS oid,
-         list_filter(
-           list_transform(range(1, len(dp) + 2),
-             k -> tokens[(CASE WHEN k = 1 THEN 1 ELSE dp[k-1] + 1 END):
-                         (CASE WHEN k = len(dp) + 1 THEN len(tokens)
-                               ELSE dp[k] - 1 END)]),
-           x -> len(x) > 0) AS nsegs
-  FROM (SELECT doc_id, tokens,
-               list_filter(range(1, len(tokens) + 1),
-                           i -> tokens[i] = 104) AS dp
-        FROM tokens_static WHERE len(tokens) > 0)
-),
-nspe AS (
-  SELECT doc_id, oid, nsegs[1] AS a, nsegs[2] AS b
-  FROM nsp0 WHERE len(nsegs) >= 2
-),
-nspp AS (  -- partner = next eligible doc's B in oid order, wrapping
-  SELECT doc_id, oid, a, b,
-         COALESCE(lead(b) OVER (ORDER BY oid),
-                  first_value(b) OVER (ORDER BY oid
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND UNBOUNDED FOLLOWING)) AS nb,
-         COALESCE(lead(oid) OVER (ORDER BY oid),
-                  first_value(oid) OVER (ORDER BY oid
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND UNBOUNDED FOLLOWING)) AS np,
-         ((oid % 2147483647) * 1103515245) % 2147483647 % 2 AS neg
-  FROM nspe
-),
-nspx AS (
-  SELECT doc_id,
-         CAST(1 - neg AS BIGINT) AS nsp_label,
-         CAST(CASE WHEN neg = 1 THEN np ELSE oid END AS BIGINT)
-           AS nsp_partner,
-         CAST(len(a) AS BIGINT) AS nsp_a_len,
-         CAST(len(CASE WHEN neg = 1 THEN nb ELSE b END) AS BIGINT)
-           AS nsp_b_len,
-         CAST(list_sum(list_transform(range(1, len(a) + 1),
-              i -> CAST(a[i] AS BIGINT) * i)) AS BIGINT) AS nsp_a_ck,
-         CAST(list_sum(list_transform(
-              range(1, len(CASE WHEN neg = 1 THEN nb ELSE b END) + 1),
-              i -> CAST((CASE WHEN neg = 1 THEN nb ELSE b END)[i] AS BIGINT)
-                   * i)) AS BIGINT) AS nsp_b_ck
-  FROM nspp
-),
 scdt AS (  -- wave 113: doc → distinct bigram-shingle sets
   SELECT CAST(substr(doc_id, 5) AS BIGINT) AS oid,
          list_sort(list_distinct(list_transform(range(1, n_tok),
@@ -9512,146 +9084,6 @@ lex AS (  -- lexical diversity: two-phase (doc, token) aggregation
         FROM (SELECT doc_id, unnest(tokens) AS tok FROM tokens_static)
         GROUP BY doc_id, tok)
   GROUP BY doc_id
-),
-pts AS (  -- skyline plane: (length, richness) per doc
-  SELECT s.doc_id, CAST(s.n_tok AS BIGINT) AS px,
-         COALESCE(lx.distinct_tokens, 0) AS py
-  FROM tokens_static s LEFT JOIN lex lx USING (doc_id)
-),
-sky AS (  -- Pareto-maxima membership by direct dominance test
-  SELECT p.doc_id,
-         CASE WHEN EXISTS (
-           SELECT 1 FROM pts q
-           WHERE q.px >= p.px AND q.py >= p.py
-             AND (q.px > p.px OR q.py > p.py)
-         ) THEN 0 ELSE 1 END AS on_skyline
-  FROM pts p
-),
-pr1 AS (SELECT doc_id FROM sky WHERE on_skyline = 1),
-prr1 AS (SELECT * FROM pts WHERE doc_id NOT IN (SELECT doc_id FROM pr1)),
-pr2 AS (  -- layer 2 = skyline of the remainder
-  SELECT p.doc_id FROM prr1 p WHERE NOT EXISTS (
-    SELECT 1 FROM prr1 q
-    WHERE q.px >= p.px AND q.py >= p.py AND (q.px > p.px OR q.py > p.py))
-),
-prr2 AS (SELECT * FROM prr1 WHERE doc_id NOT IN (SELECT doc_id FROM pr2)),
-pr3 AS (
-  SELECT p.doc_id FROM prr2 p WHERE NOT EXISTS (
-    SELECT 1 FROM prr2 q
-    WHERE q.px >= p.px AND q.py >= p.py AND (q.px > p.px OR q.py > p.py))
-),
-players AS (
-  SELECT p.doc_id,
-         CASE WHEN p.doc_id IN (SELECT doc_id FROM pr1) THEN 1
-              WHEN p.doc_id IN (SELECT doc_id FROM pr2) THEN 2
-              WHEN p.doc_id IN (SELECT doc_id FROM pr3) THEN 3
-         ELSE 0 END AS pareto_layer
-  FROM pts p
-),
-fim1 AS (  -- FIM replay: double-multiply pmod hashes for apply/i/j
-  SELECT doc_id, tokens, n, app, i,
-         i + (((((((((nid % 2147483647) * 69621) % 2147483647) + 2147483647)
-                  % 2147483647) * 69621) % 2147483647) + 2147483647)
-              % 2147483647) % (n - i + 1) AS j
-  FROM (
-    SELECT doc_id, nid, tokens, n,
-           ((((((((nid % 2147483647) * 40692) % 2147483647) + 2147483647)
-              % 2147483647) * 40692) % 2147483647) + 2147483647)
-           % 2147483647 < {int(2147483647 * 0.5)} AS app,
-           ((((((((nid % 2147483647) * 48271) % 2147483647) + 2147483647)
-              % 2147483647) * 48271) % 2147483647) + 2147483647)
-           % 2147483647 % (n + 1) AS i
-    FROM (SELECT doc_id, CAST(substr(doc_id, 5) AS BIGINT) AS nid, tokens,
-                 CAST(n_tok AS BIGINT) AS n FROM tokens_static))
-),
-fim AS (
-  SELECT doc_id,
-         CAST(app AS BIGINT) AS fim_applied,
-         CAST(CASE WHEN app THEN i ELSE n END AS BIGINT) AS fim_prefix_len,
-         CAST(CASE WHEN app THEN j - i ELSE 0 END AS BIGINT) AS fim_middle_len,
-         CAST(CASE WHEN app THEN n - j ELSE 0 END AS BIGINT) AS fim_suffix_len,
-         CAST(CASE WHEN app THEN
-           COALESCE((SELECT SUM(CAST(u.t AS BIGINT) * u.ord) FROM
-             (SELECT unnest(r) AS t, unnest(range(1, len(r)+1)) AS ord) u), 0)
-           % 1000003
-         ELSE
-           COALESCE((SELECT SUM(CAST(u.t AS BIGINT) * u.ord) FROM
-             (SELECT unnest(tokens) AS t,
-                     unnest(range(1, len(tokens)+1)) AS ord) u), 0)
-           % 1000003
-         END AS BIGINT) AS fim_checksum
-  FROM (SELECT doc_id, tokens, n, app, i, j,
-               tokens[1:i] || tokens[j+1:n] || tokens[i+1:j] AS r
-        FROM fim1)
-),
-ttsc AS (  -- TextTiling cohesion scores at positions w..n_tok-w
-  SELECT doc_id,
-    CASE WHEN n_tok >= 16 THEN
-      list_transform(range(8, n_tok - 8 + 1),
-        i -> len(list_filter(
-               list_distinct(tokens[CAST(i - 8 + 1 AS INTEGER) : CAST(i AS INTEGER)]),
-               x -> list_contains(
-                      tokens[CAST(i + 1 AS INTEGER) : CAST(i + 8 AS INTEGER)], x))))
-    ELSE [] END AS s
-  FROM tokens_static
-),
-tt AS (  -- strict local minima at depth <= threshold
-  SELECT doc_id,
-         CAST(len(s) AS BIGINT) AS tt_pos,
-         CAST(COALESCE(list_min(s), -1) AS BIGINT) AS tt_min,
-         CAST(len(list_filter(range(2, len(s)), j ->
-               s[CAST(j AS INTEGER)] < s[CAST(j - 1 AS INTEGER)]
-           AND s[CAST(j AS INTEGER)] <= s[CAST(j + 1 AS INTEGER)]
-           AND s[CAST(j AS INTEGER)] <= 2)) AS BIGINT) AS tt_bounds,
-         CAST(COALESCE(list_sum(list_filter(range(2, len(s)), j ->
-               s[CAST(j AS INTEGER)] < s[CAST(j - 1 AS INTEGER)]
-           AND s[CAST(j AS INTEGER)] <= s[CAST(j + 1 AS INTEGER)]
-           AND s[CAST(j AS INTEGER)] <= 2)), 0) AS BIGINT) AS tt_ck
-  FROM ttsc
-),
-rsx AS (  -- rescaled-range replay: P_j = n·prefix_j − j·S (exact int64)
-  SELECT doc_id,
-         GREATEST(CAST(MAX(p) AS BIGINT), 0) AS rs_mx,
-         LEAST(CAST(MIN(p) AS BIGINT), 0) AS rs_mn
-  FROM (
-    SELECT doc_id,
-           CAST(n_tok AS BIGINT)
-             * SUM(CAST(t AS BIGINT)) OVER (PARTITION BY doc_id ORDER BY j)
-             - j * SUM(CAST(t AS BIGINT)) OVER (PARTITION BY doc_id) AS p
-    FROM (SELECT doc_id, n_tok, unnest(tokens) AS t,
-                 unnest(range(1, n_tok + 1)) AS j
-          FROM tokens_static))
-  GROUP BY doc_id
-),
-ordp AS (  -- Bandt–Pompe ordinal-pattern counts over consecutive triples
-  SELECT doc_id,
-         CAST(COALESCE(SUM(CASE WHEN a < b AND b < c THEN 1 END), 0) AS BIGINT) AS op_asc,
-         CAST(COALESCE(SUM(CASE WHEN a < c AND c < b THEN 1 END), 0) AS BIGINT) AS op_acb,
-         CAST(COALESCE(SUM(CASE WHEN b < a AND a < c THEN 1 END), 0) AS BIGINT) AS op_bac,
-         CAST(COALESCE(SUM(CASE WHEN b < c AND c < a THEN 1 END), 0) AS BIGINT) AS op_bca,
-         CAST(COALESCE(SUM(CASE WHEN c < a AND a < b THEN 1 END), 0) AS BIGINT) AS op_cab,
-         CAST(COALESCE(SUM(CASE WHEN c < b AND b < a THEN 1 END), 0) AS BIGINT) AS op_desc,
-         CAST(COALESCE(SUM(CASE WHEN a = b OR b = c OR a = c THEN 1 END), 0) AS BIGINT) AS op_ties
-  FROM (SELECT doc_id, tokens[i] AS a, tokens[i + 1] AS b, tokens[i + 2] AS c
-        FROM (SELECT doc_id, tokens,
-                     unnest(range(1, GREATEST(n_tok - 2, 0) + 1)) AS i
-              FROM tokens_static))
-  GROUP BY doc_id
-),
-spn AS (  -- T5-style span corruption replay: trigger + 3-window coverage
-  SELECT doc_id,
-         CAST(len(list_filter(range(1, n_tok + 1), j ->
-           (CAST(substr(doc_id, 5) AS BIGINT) % 2147483647 * 1000003
-            + j * 8191) % 2147483647 % 20 = 0)) AS BIGINT)
-           AS n_corrupt_spans,
-         CAST(len(cov) AS BIGINT) AS n_corrupt_tokens,
-         CAST(COALESCE(list_sum(cov), 0) AS BIGINT) AS corrupt_checksum
-  FROM (SELECT doc_id, n_tok,
-               list_filter(range(1, n_tok + 1), i ->
-                 len(list_filter(range(GREATEST(1, i - 2), i + 1), j ->
-                   (CAST(substr(doc_id, 5) AS BIGINT) % 2147483647 * 1000003
-                    + j * 8191) % 2147483647 % 20 = 0)) > 0) AS cov
-        FROM tokens_static)
 )
 SELECT doc_id, n_tok,
        list_min(tokens) AS tok_min,
@@ -9713,10 +9145,6 @@ SELECT doc_id, n_tok,
        sa.min_seg_mean4,
        COALESCE(lx.distinct_tokens, 0) AS distinct_tokens,
        COALESCE(lx.hapax_tokens, 0) AS hapax_tokens,
-       sp.n_corrupt_spans, sp.n_corrupt_tokens, sp.corrupt_checksum,
-       fm.fim_applied, fm.fim_prefix_len, fm.fim_middle_len,
-       fm.fim_suffix_len, fm.fim_checksum,
-       tl.tt_pos, tl.tt_min, tl.tt_bounds, tl.tt_ck,
        CASE WHEN n_tok > 0 THEN
          FLOOR((COALESCE(lx.distinct_tokens, 0) / n_tok) * 10000.0 + 0.5) / 10000.0
        ELSE 0.0 END AS ttr4,
@@ -9747,90 +9175,17 @@ SELECT doc_id, n_tok,
                         i -> tokens[i] <> tokens[i + 1])) AS BIGINT) END AS DOUBLE)
                 / n_tok) * 10000.0 + 0.5) / 10000.0
        ELSE 0.0 END AS rle_ratio4,
-       CAST(sk.on_skyline AS BIGINT) AS on_skyline,
-       CAST(pl.pareto_layer AS BIGINT) AS pareto_layer,
-       COALESCE(rx.rs_mx - rx.rs_mn, 0) AS rs_range,
-       CASE WHEN n_tok >= 2 AND
-         CAST(n_tok AS BIGINT) * (SELECT SUM(CAST(u.t AS BIGINT) * u.t)
-             FROM (SELECT unnest(tokens) AS t) u)
-         - CAST(list_sum(tokens) AS BIGINT) * CAST(list_sum(tokens) AS BIGINT) > 0
-       THEN
-         FLOOR((CAST(rx.rs_mx - rx.rs_mn AS DOUBLE)
-              / sqrt(CAST(
-                  CAST(n_tok AS BIGINT) * (SELECT SUM(CAST(u.t AS BIGINT) * u.t)
-                      FROM (SELECT unnest(tokens) AS t) u)
-                  - CAST(list_sum(tokens) AS BIGINT)
-                    * CAST(list_sum(tokens) AS BIGINT) AS DOUBLE)))
-              * 10000.0 + 0.5) / 10000.0
-       ELSE 0.0 END AS rs4,
-       COALESCE(op.op_asc, 0) AS op_asc,
-       COALESCE(op.op_acb, 0) AS op_acb,
-       COALESCE(op.op_bac, 0) AS op_bac,
-       COALESCE(op.op_bca, 0) AS op_bca,
-       COALESCE(op.op_cab, 0) AS op_cab,
-       COALESCE(op.op_desc, 0) AS op_desc,
-       COALESCE(op.op_ties, 0) AS op_ties,
-       CASE WHEN n_tok >= 3 THEN
-         FLOOR((CAST(GREATEST(op.op_asc, op.op_acb, op.op_bac, op.op_bca,
-                              op.op_cab, op.op_desc, op.op_ties) AS DOUBLE)
-                / (CAST(n_tok AS BIGINT) - 2)) * 10000.0 + 0.5) / 10000.0
-       ELSE 0.0 END AS op_max_share4,
-       -- feature-encoding block: within-source z (fixed IEEE chain),
-       -- exact percentile rank, lower-rank p10/p90 winsorization
-       CASE WHEN s9.en > 1 AND s9.en * s9.ee - s9.es * s9.es > 0 THEN
-         FLOOR((CAST(s9.en * CAST(n_tok AS BIGINT) - s9.es AS DOUBLE)
-                / (CAST(s9.en AS DOUBLE)
-                   * sqrt((s9.en * s9.ee - s9.es * s9.es)
-                          / (s9.en * (s9.en - 1)))))
-               * 10000.0 + 0.5) / 10000.0
-       END AS src_z4,
-       CASE WHEN s9.en > 1 THEN
-         FLOOR(((er.rk - 1) / (s9.en - 1)) * 10000.0 + 0.5) / 10000.0
-       END AS src_rank4,
-       eb.src_lo, eb.src_hi,
-       CAST(GREATEST(eb.src_lo, LEAST(eb.src_hi, CAST(n_tok AS BIGINT)))
-            AS BIGINT) AS src_wins,
-       -- wave 112: longest repeated substring (capped-64 suffix LCP)
-       COALESCE(lr.lrs64, 0) AS lrs64,
        -- wave 113: greedy set-cover pick order + marginal shingle gain
        COALESCE(scp.step, 0) AS sc_step,
-       COALESCE(scp.gain, 0) AS sc_gain,
-       -- wave 120: doc-level Huffman optimal-coding bound
-       COALESCE(hd.doc_huff_bits, 0) AS doc_huff_bits,
-       COALESCE(hd.doc_huff_vocab, 0) AS doc_huff_vocab,
-       COALESCE(hd.doc_fixed_bits, 0) AS doc_fixed_bits,
-       CASE WHEN COALESCE(hd.doc_fixed_bits, 0) > 0 THEN
-         FLOOR(CAST(hd.doc_fixed_bits - hd.doc_huff_bits AS DOUBLE)
-               / CAST(hd.doc_fixed_bits AS DOUBLE) * 10000.0 + 0.5) / 10000.0
-       ELSE 0.0 END AS doc_hsave4,
-       -- wave 121: NSP pair construction (label/partner/chosen-B checksums)
-       COALESCE(nx.nsp_label, -1) AS nsp_label,
-       COALESCE(nx.nsp_partner, -1) AS nsp_partner,
-       COALESCE(nx.nsp_a_len, 0) AS nsp_a_len,
-       COALESCE(nx.nsp_b_len, 0) AS nsp_b_len,
-       COALESCE(nx.nsp_a_ck, 0) AS nsp_a_ck,
-       COALESCE(nx.nsp_b_ck, 0) AS nsp_b_ck
+       COALESCE(scp.gain, 0) AS sc_gain
 FROM tokens_static JOIN bpem bm USING (doc_id)
 LEFT JOIN segagg sa USING (doc_id)
 LEFT JOIN lex lx USING (doc_id)
-JOIN spn sp USING (doc_id)
-JOIN fim fm USING (doc_id)
-JOIN tt tl USING (doc_id)
-JOIN sky sk USING (doc_id)
-JOIN players pl USING (doc_id)
-LEFT JOIN rsx rx USING (doc_id)
-LEFT JOIN ordp op USING (doc_id)
-JOIN encs s9 USING (source)
-JOIN encb eb USING (source)
-JOIN encr er USING (doc_id)
-LEFT JOIN lrsx lr USING (doc_id)
 LEFT JOIN (SELECT step, pick, gain FROM scr WHERE step > 0) scp
        ON scp.pick = CAST(substr(tokens_static.doc_id, 5) AS BIGINT)
-LEFT JOIN hufdx hd ON hd.doc_id = tokens_static.doc_id
-LEFT JOIN nspx nx ON nx.doc_id = tokens_static.doc_id
 """,
         "prescan_sources": f"""
-WITH RECURSIVE {SQL_TOKENS_STATIC},
+WITH {SQL_TOKENS_STATIC},
 docs AS (
   SELECT source, doc_id, n_tok, tokens,
          CAST(list_sum(tokens) AS BIGINT) AS y
@@ -10198,60 +9553,6 @@ ks AS (  -- exact KS numerator max + ONE division
        (SELECT CAST(COUNT(*) AS BIGINT) AS n_all FROM documents) a
   GROUP BY c.source, n.n_s, a.n_all
 ),
-hufc AS (  -- wave 106: Huffman bound — per-source token counts
-  SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c
-  FROM (SELECT source, unnest(tokens) AS tok FROM docs)
-  GROUP BY source, tok
-),
-huf0 AS (
-  SELECT source,
-         list_sort(list({{'w': c, 'id': CAST(tok AS BIGINT)}})) AS items,
-         CAST(0 AS BIGINT) AS bits,
-         CAST(COUNT(*) AS BIGINT) AS vocab,
-         CAST(SUM(c) AS BIGINT) AS mass
-  FROM hufc GROUP BY source
-),
-hufr AS (  -- merge the two smallest (weight, id) per step; total cost is
-           -- tie-break-invariant across all optimal prefix codes
-  SELECT source, items, bits, vocab, mass FROM huf0
-  UNION ALL
-  SELECT source,
-         list_sort(list_append(items[3:],
-           {{'w': items[1].w + items[2].w,
-             'id': 1048576 + vocab - len(items)}})),
-         bits + items[1].w + items[2].w,
-         vocab, mass
-  FROM hufr WHERE len(items) > 1
-),
-huf AS (
-  SELECT source, bits AS huff_bits, vocab AS huff_vocab, mass AS huff_mass,
-         CASE WHEN vocab > 1
-              THEN mass * CAST(length(bin(vocab - 1)) AS BIGINT)
-              ELSE CAST(0 AS BIGINT) END AS fixed_bits
-  FROM hufr WHERE len(items) = 1
-),
-umb AS (  -- wave 107: UniMax budget ⌊39·T/20⌋ — just under 2 full epochs
-  SELECT CAST((39 * CAST(SUM(total_tokens) AS BIGINT)) // 20 AS BIGINT) AS b,
-         CAST(COUNT(*) AS BIGINT) AS k
-  FROM base
-),
-umord AS (
-  SELECT source, 2 * total_tokens AS cap,
-         CAST(row_number() OVER (ORDER BY 2 * total_tokens, source)
-              AS BIGINT) AS i
-  FROM base
-),
-umrec AS (  -- the ascending-cap waterfilling walk, one step per source
-  SELECT CAST(0 AS BIGINT) AS i, b AS r FROM umb
-  UNION ALL
-  SELECT u.i, j.r - LEAST(u.cap, j.r // ((SELECT k FROM umb) - u.i + 1))
-  FROM umrec j JOIN umord u ON u.i = j.i + 1
-),
-umx AS (
-  SELECT u.source, u.cap AS um_cap,
-         LEAST(u.cap, j.r // ((SELECT k FROM umb) - u.i + 1)) AS um_alloc
-  FROM umord u JOIN umrec j ON j.i = u.i - 1
-),
 momb AS (  -- wave 108: median-of-means — 8 deterministic hash buckets
   SELECT source,
          ((oid % 2147483647) * 1103515245) % 2147483647 % 8 AS mom_bucket,
@@ -10336,12 +9637,6 @@ SELECT b.source, b.n_docs, b.total_tokens, b.src_min, b.src_max,
        FLOOR((CAST(we.emd_num AS DOUBLE) / CAST(we.emd_den AS DOUBLE))
              * 10000.0 + 0.5) / 10000.0 AS emd4,
        sx.sl_cells, sx.chi2_sl4, sx.cramers_v4,
-       hf.huff_bits, hf.huff_vocab, hf.huff_mass, hf.fixed_bits,
-       CASE WHEN hf.fixed_bits > 0 THEN
-         FLOOR(CAST(hf.fixed_bits - hf.huff_bits AS DOUBLE)
-               / CAST(hf.fixed_bits AS DOUBLE) * 10000.0 + 0.5) / 10000.0
-       ELSE 0.0 END AS huff_save4,
-       ux.um_cap, ux.um_alloc,
        mx.mom_bucket, mx.mom_sum, mx.mom_cnt, mx.mom4,
        COALESCE(ov.oov_mass, CAST(0 AS BIGINT)) AS oov_mass,
        CASE WHEN b.total_tokens > 0 THEN
@@ -10362,8 +9657,6 @@ FROM base b JOIN med m USING (source) JOIN ws w USING (source)
      JOIN ssim sm USING (source)
      JOIN decs dc USING (source)
      JOIN wemd we USING (source)
-     JOIN huf hf ON hf.source = b.source
-     JOIN umx ux ON ux.source = b.source
      JOIN momx mx ON mx.source = b.source
      LEFT JOIN oovx ov ON ov.source = b.source,
      (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_all,
@@ -10693,12 +9986,6 @@ f1 AS (SELECT e.doc_id AS fu1, CAST(MIN(e.us) AS BIGINT) AS t1
 f2 AS (SELECT e.doc_id AS fu2, CAST(MIN(e.us) AS BIGINT) AS t2
        FROM fe e JOIN f1 ON f1.fu1 = e.doc_id
        WHERE e.event_type = 'purchase' AND e.us > f1.t1 GROUP BY 1),
-tec AS (  -- target-encoding per-category stats over purchase cents
-  SELECT doc_id AS tu, CAST(COUNT(cents) AS BIGINT) AS te_n,
-         CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS te_s
-  FROM ev GROUP BY 1),
-teg AS (SELECT CAST(COUNT(cents) AS BIGINT) AS gn,
-               CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS gs FROM ev),
 tgv AS (SELECT ts_us AS v, CAST(COUNT(*) AS BIGINT) AS c FROM ev GROUP BY 1),
 tgc AS (SELECT v,
                SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
@@ -10770,14 +10057,6 @@ SELECT doc_id, event_id,
               ELSE CAST(x.v AS BIGINT) * (CAST(1 AS BIGINT)
                    << CAST(20 - LEAST((ts_us - x.u) // 14400000000, 20) AS INTEGER)) END),
          (a, b) -> a + b) AS DOUBLE) / 1048576.0) * 10000.0 + 0.5) / 10000.0 AS dk240,
-       tc.te_n,
-       CASE WHEN cents IS NOT NULL AND tc.te_n > 1 THEN
-         FLOOR(((tc.te_s - cents) / (tc.te_n - 1)) * 10000.0 + 0.5) / 10000.0
-       END AS te_loo4,
-       CASE WHEN tg.gn > 0 THEN
-         FLOOR(((tc.te_s * tg.gn + 20 * tg.gs) / ((tc.te_n + 20) * tg.gn))
-               * 10000.0 + 0.5) / 10000.0
-       END AS te_sm4,
        tt.split_T_us, tf.key_first_us,
        CAST(CASE WHEN tf.key_first_us > tt.split_T_us THEN 2
                  WHEN ts_us <= tt.split_T_us THEN 0 ELSE 1 END AS BIGINT)
@@ -10796,8 +10075,6 @@ FROM ev
 LEFT JOIN f0 ON f0.fu0 = ev.doc_id
 LEFT JOIN f1 ON f1.fu1 = ev.doc_id
 LEFT JOIN f2 ON f2.fu2 = ev.doc_id
-JOIN tec tc ON tc.tu = ev.doc_id
-CROSS JOIN teg tg
 JOIN tgf tf ON tf.fu = ev.doc_id
 CROSS JOIN tgt tt
 WINDOW w AS (PARTITION BY doc_id ORDER BY ts),

@@ -25,6 +25,18 @@ from nyxus_spark.features import extract_features
 from nyxus_spark.settings import DEFAULT_SETTINGS, FeatureSettings
 
 
+def _gray_depth(value) -> int:
+    """A `coarse_gray_depth` as an int. Negative depths select radiomics
+    binning; 0 would mean zero histogram bins and identity texture binning,
+    so it raises and points to `ibsi=True`, the knob for the latter."""
+    depth = int(value)
+    if depth == 0:
+        raise ValueError(
+            "coarse_gray_depth must be nonzero; use ibsi=True for identity "
+            "grey binning")
+    return depth
+
+
 class NyxusSpark:
     """Configured feature-extraction engine (reference: nyxus.py:145-246
     `Nyxus.__init__` — feature list + comparability-relevant knobs)."""
@@ -41,7 +53,8 @@ class NyxusSpark:
         if coarse_gray_depth is not None:
             # reference coarse_gray_depth (nyxus.py:169) drives both the
             # custom histogram and the texture grey binning
-            st = replace(st, n_bins=coarse_gray_depth, grey_info=coarse_gray_depth)
+            depth = _gray_depth(coarse_gray_depth)
+            st = replace(st, n_bins=depth, grey_info=depth)
         if offset is not None:
             st = replace(st, offset=offset)
         self.features = features or ["*ALL*"]
@@ -135,8 +148,9 @@ class NyxusSpark:
             elif key == "tokens_col":
                 self.tokens_col = value
             elif key == "coarse_gray_depth":
+                depth = _gray_depth(value)
                 self.settings = replace(
-                    self.settings, n_bins=int(value), grey_info=int(value))
+                    self.settings, n_bins=depth, grey_info=depth)
             elif key == "ibsi":
                 # IBSI mode = identity grey binning (texture_feature.h:101-103
                 # grey_info == 0 selector)

@@ -1014,50 +1014,6 @@ def largest_remainder_alloc(df, k: int, source_col: str = "source"):
     )
 
 
-def span_corruption_stats(df, every: int = 20, span: int = 3,
-                          tokens_col: str = "tokens", n_tok_col: str = "n_tok",
-                          id_expr_sql: str = "cast(substr(doc_id, 5) as bigint)",
-                          p31: int = 2147483647):
-    """Deterministic SPAN corruption — the T5/UL2 denoising objective's data
-    pass: position j (1-based) STARTS a `span`-long corruption span iff
-    (d·1000003 + j·8191) mod P31 ≡ 0 (mod `every`), and a position is
-    corrupted iff any start in the preceding `span` window covers it (so
-    overlapping spans merge, exactly as T5's span sampler collapses them).
-    Re-derivable on any engine from the document id and position alone.
-
-    Adds: n_corrupt_spans (trigger starts), n_corrupt_tokens (covered
-    positions), corrupt_checksum = Σ covered positions (1-based) — exact
-    BIGINTs pinning WHICH spans were chosen.
-
-    Pure column expressions: one sequence + filter per row, no shuffle."""
-    if every < 1 or span < 1:
-        raise ValueError("every and span must be >= 1")
-    trig = (
-        f"(({id_expr_sql}) % {p31} * 1000003 + cast(j as bigint) * 8191)"
-        f" % {p31} % {every} = 0"
-    )
-    cover = (
-        f"exists(sequence(greatest(1, i - {span - 1}), i),"
-        f" j -> {trig})"
-    )
-    starts = (
-        f"CASE WHEN {n_tok_col} > 0 THEN "
-        f"size(filter(sequence(1, {n_tok_col}), j -> {trig})) ELSE 0 END"
-    )
-    covered = (
-        f"CASE WHEN {n_tok_col} > 0 THEN "
-        f"filter(sequence(1, {n_tok_col}), i -> {cover})"
-        f" ELSE array() END"
-    )
-    return df.select(
-        "*",
-        F.expr(starts).cast("long").alias("n_corrupt_spans"),
-        F.expr(f"size({covered})").cast("long").alias("n_corrupt_tokens"),
-        F.expr(f"aggregate({covered}, 0L, (a, i) -> a + cast(i as bigint))")
-        .alias("corrupt_checksum"),
-    )
-
-
 def winnow_exprs(tokens_col: str = "tokens", n_tok_col: str = "n_tok",
                  k: int = 4, w: int = 4,
                  base: int = 1000003, p31: int = 2147483647) -> dict:
@@ -1312,68 +1268,6 @@ def cross_source_leakage(df, n: int = 8, source_col: str = "source",
         F.when(F.col("grams_total") > 0,
                fround4(F.col("grams_leaked") / F.col("grams_total")))
          .otherwise(F.lit(0.0)).alias("leak_frac4"))
-
-
-def fim_stats(id_sql: str, tokens_col: str = "tokens",
-              n_tok_col: str = "n_tok", rate: float = 0.5,
-              p31: int = 2147483647) -> dict:
-    """Deterministic FIM (fill-in-the-middle) transform stats — the
-    infilling-objective data pass (Bavarian et al. 2022): with probability
-    `rate` (decided by a re-derivable pmod hash of the doc id, NOT a RNG),
-    split the doc at two hash-derived cut points 0 <= i <= j <= n into
-    (prefix, middle, suffix) and reorder to PSM token order
-    prefix ++ suffix ++ middle. Every decision is pinned by exact
-    integers: the three segment lengths and a position-weighted checksum
-    of the REORDERED stream (mod 1000003) that flips if any token lands
-    in the wrong segment or order.
-
-    Mixers 48271 / 69621 / 40692 (classic MINSTD variants) keep the three
-    decisions mutually independent. Pure column expressions, zero shuffle.
-
-    Returns: fim_applied (0/1), fim_prefix_len, fim_middle_len,
-    fim_suffix_len, fim_checksum.
-    """
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    cut = int(p31 * rate)
-    # double multiply: a single id·mix stays below P31 for small ids (no
-    # wraparound -> no mixing); the second multiply wraps for any id >= 1
-    def _h(mix: int) -> str:
-        return (f"pmod(pmod(({id_sql} % {p31}) * {mix}, {p31})"
-                f" * {mix}, {p31})")
-    n = f"cast({n_tok_col} as bigint)"
-    app = f"({_h(40692)} < {cut})"
-    i = f"cast({_h(48271)} % ({n} + 1) as int)"
-    j = f"cast({i} + cast({_h(69621)} % ({n} - {i} + 1) as int) as int)"
-    # PSM reorder: prefix ++ suffix ++ middle (empty slices are safe:
-    # slice(xs, k, 0) = [] for any k)
-    reord = (
-        f"concat(slice({tokens_col}, 1, {i}),"
-        f" slice({tokens_col}, {j} + 1, cast({n} as int) - {j}),"
-        f" slice({tokens_col}, {i} + 1, {j} - {i}))"
-    )
-    csum = (
-        f"CASE WHEN size({tokens_col}) = 0 THEN 0L ELSE "
-        f"aggregate(zip_with({reord}, sequence(1, size({tokens_col})),"
-        f" (t, k) -> cast(t as bigint) * k), 0L, (a, x) -> a + x)"
-        f" % 1000003 END"
-    )
-    orig_csum = (
-        f"CASE WHEN size({tokens_col}) = 0 THEN 0L ELSE "
-        f"aggregate(zip_with({tokens_col}, sequence(1, size({tokens_col})),"
-        f" (t, k) -> cast(t as bigint) * k), 0L, (a, x) -> a + x)"
-        f" % 1000003 END"
-    )
-    return {
-        "fim_applied": F.expr(f"CAST({app} AS BIGINT)"),
-        "fim_prefix_len": F.expr(
-            f"CAST(IF({app}, {i}, {n}) AS BIGINT)"),
-        "fim_middle_len": F.expr(
-            f"CAST(IF({app}, {j} - {i}, 0) AS BIGINT)"),
-        "fim_suffix_len": F.expr(
-            f"CAST(IF({app}, {n} - {j}, 0) AS BIGINT)"),
-        "fim_checksum": F.expr(f"IF({app}, {csum}, {orig_csum})"),
-    }
 
 
 def corpus_digest(df, group_col: str = "source", tokens_col: str = "tokens",
@@ -1875,125 +1769,4 @@ def nucleus_flags(df, p_num: int = 9, p_den: int = 10,
         "in_nucleus",
         ((F.col("nuc_cum") - F.col("cnt")) * p_den
          < p_num * F.col("nuc_tot")).cast("long"),
-    )
-
-
-def texttile_exprs(w: int = 8, threshold: int = 2,
-                   tokens_col: str = "tokens", n_tok_col: str = "n_tok") -> dict:
-    """TextTiling-style TOPICAL segmentation (Hearst, CL 1997) — the
-    content-driven document splitter beside the delimiter-based
-    `split_on_token`: at every boundary position i the cohesion score is
-    the count of DISTINCT tokens the preceding and following w-token
-    windows share; topic boundaries are strict local minima at depth ≤
-    `threshold` (a valley in lexical cohesion = a topic shift). All exact
-    integers; the score array is STAGED as one transform so the boundary
-    pass only references it (never recomputes a window per comparison —
-    the Catalyst lambda-rescan trap).
-
-    Returns column exprs: tt_pos (scored positions), tt_min (global
-    cohesion minimum, −1 when the doc is shorter than 2w), tt_bounds
-    (boundary count), tt_ck (boundary-position checksum — pins every
-    detected boundary). Pure per-row map, zero shuffle; O(n_tok·w) work
-    per doc."""
-    if w < 1 or threshold < 0:
-        raise ValueError(f"need w >= 1 and threshold >= 0, got {w}/{threshold}")
-    sc = (
-        f"CASE WHEN {n_tok_col} >= {2 * w} THEN "
-        f"transform(sequence({w}, {n_tok_col} - {w}), "
-        f"i -> size(filter(array_distinct(slice({tokens_col}, i - {w} + 1, {w})), "
-        f"x -> array_position(slice({tokens_col}, i + 1, {w}), x) > 0))) "
-        "ELSE array() END"
-    )
-    bnd = (
-        "CASE WHEN size(__tt_sc) >= 3 THEN "
-        "filter(sequence(2, size(__tt_sc) - 1), "
-        "j -> element_at(__tt_sc, cast(j as int)) < element_at(__tt_sc, cast(j - 1 as int)) "
-        "AND element_at(__tt_sc, cast(j as int)) <= element_at(__tt_sc, cast(j + 1 as int)) "
-        f"AND element_at(__tt_sc, cast(j as int)) <= {threshold}) "
-        "ELSE array() END"
-    )
-    return {
-        "__tt_sc": F.expr(sc),
-        "tt_pos": F.size(F.expr(sc)).cast("long"),
-        "__tt_bnd": bnd,  # SQL string: must reference the staged __tt_sc
-    }
-
-
-def texttile_cols(df, w: int = 8, threshold: int = 2,
-                  tokens_col: str = "tokens", n_tok_col: str = "n_tok"):
-    """Apply `texttile_exprs` with the score array properly STAGED: one
-    select materializes __tt_sc, a second derives positions/min/boundary
-    stats from it. Adds tt_pos, tt_min, tt_bounds, tt_ck."""
-    e = texttile_exprs(w, threshold, tokens_col, n_tok_col)
-    staged = df.withColumn("__tt_sc", e["__tt_sc"])
-    bnd = F.expr(e["__tt_bnd"])
-    return (
-        staged
-        .withColumn("tt_pos", F.size("__tt_sc").cast("long"))
-        .withColumn(
-            "tt_min",
-            F.coalesce(F.array_min("__tt_sc"), F.lit(-1)).cast("long"))
-        .withColumn("tt_bounds", F.size(bnd).cast("long"))
-        .withColumn(
-            "tt_ck",
-            F.aggregate(bnd, F.lit(0).cast("long"), lambda a, x: a + x))
-        .drop("__tt_sc")
-    )
-
-
-def lrs_capped(df, cap: int = 64, tokens_col: str = "tokens",
-               n_tok_col: str = "n_tok", id_col: str = "doc_id"):
-    """Longest repeated substring per doc, capped: lrs = min(LRS, cap).
-
-    Classic suffix-array identity — the longest repeated substring is the
-    maximum LCP of two LEXICOGRAPHICALLY ADJACENT suffixes. Suffixes are
-    capped at `cap` tokens, which (a) keeps the answer exact up to the cap
-    (any repeat ≥ cap collapses to cap) and (b) bounds materialized state
-    to cap·n per doc — the form that survives 100 TB. Pure JVM column
-    expressions end-to-end: explode positions → slice → per-doc array sort
-    (arrays order lexicographically) → lag → LCP = coalesce(first-mismatch
-    − 1, common length). Tie order among EQUAL capped suffixes cannot
-    change the max (their LCP is the full common length either way).
-
-    Returns (id_col, lrs{cap}) with one row per doc having n_tok > 0.
-    """
-    from pyspark.sql import Window
-
-    col = f"lrs{cap}"
-    sfx = (
-        df.filter(F.col(n_tok_col) > 0)
-        .select(
-            id_col,
-            F.explode(F.expr(f"sequence(1, {n_tok_col})")).alias("__i"),
-            tokens_col,
-            n_tok_col,
-        )
-        .select(
-            id_col,
-            F.expr(
-                f"slice({tokens_col}, __i,"
-                f" least({cap}, {n_tok_col} - __i + 1))"
-            ).alias("__sfx"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("__sfx").asc())
-    return (
-        sfx.withColumn("__prev", F.lag("__sfx").over(w))
-        .withColumn(
-            "__lcp",
-            F.when(
-                F.col("__prev").isNull(), F.lit(0).cast("long")
-            ).otherwise(
-                F.expr(
-                    "cast(coalesce("
-                    " array_min(filter("
-                    "   sequence(1, least(size(__sfx), size(__prev))),"
-                    "   k -> element_at(__sfx, k) != element_at(__prev, k)"
-                    " )) - 1,"
-                    " least(size(__sfx), size(__prev))) as bigint)"
-                )
-            ),
-        )
-        .groupBy(id_col)
-        .agg(F.max("__lcp").cast("long").alias(col))
     )

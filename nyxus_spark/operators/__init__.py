@@ -1,10 +1,6 @@
 from nyxus_spark.operators.asof_join import asof_join  # noqa: F401
 from nyxus_spark.operators.packing import pack_sequences  # noqa: F401
-from nyxus_spark.operators.selection import (  # noqa: F401
-    pareto_layers,
-    skyline_flags,
-    greedy_set_cover,
-)
+from nyxus_spark.operators.selection import greedy_set_cover  # noqa: F401
 from nyxus_spark.operators.windows import (  # noqa: F401
     sessionize,
     with_lags,

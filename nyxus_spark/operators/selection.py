@@ -1,92 +1,17 @@
-"""Data-selection operators: skyline / Pareto-front membership.
+"""Data-selection operators: greedy maximum-coverage (set-cover) selection.
 
-Corpus curation routinely keeps the *frontier* of a quality/quantity
-trade-off (longest docs at every richness level, highest-quality docs at
-every length) rather than a single top-k — the classic skyline operator
-(Borzsonyi, Kossmann, Stocker: "The Skyline Operator", ICDE 2001). The
-reference engine exposes per-ROI feature vectors that downstream users
-filter exactly this way (nyxus.py featurize_* -> pandas post-filtering);
-here the frontier membership itself is a first-class, exactly-checkable
-column.
+Evaluation-set and benchmark curation often needs a small set of docs that
+together exercise as much of the corpus as possible ("choose k docs that
+cover the most distinct shingles") rather than a top-k by one score.
+`greedy_set_cover` is the (1−1/e)-approximate greedy walk for that problem,
+with deterministic tie-breaks so its picks are exactly checkable.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["skyline_flags", "pareto_layers"]
-
-
-def skyline_flags(df: DataFrame, x_col: str, y_col: str,
-                  flag_col: str = "on_skyline") -> DataFrame:
-    """Flag each row's membership in the 2-D skyline (maximize both axes).
-
-    Row p is DOMINATED iff some q has q.x >= p.x and q.y >= p.y with at
-    least one strict inequality; the skyline is the undominated set.
-    Duplicate points do not dominate each other (no strict edge), so every
-    copy of a frontier point is flagged 1.
-
-    Scale-safe plan: the textbook skyline is a self-join (quadratic) or a
-    global-window sort (single-partition shuffle at 100 TB). Instead split
-    dominance by the x-relation:
-
-      x' > p.x: dominated iff max{y' : x' > p.x} >= p.y   (x already strict)
-      x' = p.x: dominated iff max{y' : x' = p.x} >  p.y
-
-    The per-x max table has |distinct x| rows (x is a discrete feature such
-    as n_tok, so the dim is bounded regardless of corpus size); its
-    descending cumulative max over that tiny dim gives max{y' : x' > x},
-    and a broadcast join carries both bounds back to the rows. Total cost:
-    one hash-agg shuffle + one broadcast join, zero row-table sorts, exact
-    integer comparisons end to end.
-    """
-    dim = df.groupBy(x_col).agg(F.max(y_col).alias("__my"))
-    w = Window.orderBy(F.col(x_col).desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cm = dim.withColumn("__maxy_gt", F.max("__my").over(w))
-    out = df.join(F.broadcast(cm), x_col)
-    flag = (
-        (F.col("__maxy_gt").isNull() | (F.col("__maxy_gt") < F.col(y_col)))
-        & (F.col("__my") <= F.col(y_col))
-    )
-    return (
-        out.withColumn(flag_col, flag.cast("long"))
-        .drop("__my", "__maxy_gt")
-        .select(*df.columns, flag_col)
-    )
-
-
-def pareto_layers(df: DataFrame, x_col: str, y_col: str, k: int = 3,
-                  layer_col: str = "pareto_layer") -> DataFrame:
-    """Onion-peel the first `k` Pareto layers (skyline rank; Chazelle's
-    "layers of maxima"): layer 1 is the skyline, layer 2 the skyline of the
-    remainder, and so on; rows deeper than layer k get 0. The data-selection
-    dial behind "keep the top-L quality/length frontiers" curation — a
-    graded version of the binary skyline cut.
-
-    Each round reuses skyline_flags' per-x-max + broadcast plan on the
-    remaining rows, so the full cost is k tiny dim aggregations and k
-    broadcast joins — no global sorts, no self-joins, and the lineage depth
-    is k (small and fixed), no checkpointing needed. Exact integers end to
-    end. k is bounded to keep the plan linear; peel iteratively with
-    checkpoints if you genuinely need deep ranks.
-    """
-    if not 1 <= k <= 8:
-        raise ValueError(f"k must be in [1, 8] (plan depth is linear in k), got {k}")
-    out = df.withColumn(layer_col, F.lit(0).cast("long"))
-    for level in range(1, k + 1):
-        remaining = out.filter(F.col(layer_col) == 0)
-        flagged = skyline_flags(remaining.drop(layer_col), x_col, y_col,
-                                flag_col="__sf")
-        out = out.filter(F.col(layer_col) != 0).unionByName(
-            flagged.withColumn(
-                layer_col,
-                F.when(F.col("__sf") == 1, F.lit(level)).otherwise(F.lit(0))
-                .cast("long"),
-            ).drop("__sf")
-        )
-    return out
+__all__ = ["greedy_set_cover"]
 
 
 def greedy_set_cover(

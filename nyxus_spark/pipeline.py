@@ -113,6 +113,10 @@ class PipelineConfig:
                 and not 0.0 < self.near_jaccard <= 1.0):
             raise ValueError(f"near_jaccard must be in (0, 1], got "
                              f"{self.near_jaccard}")
+        if (self.sample_rate is not None
+                and not 0.0 < self.sample_rate <= 1.0):
+            raise ValueError(f"sample_rate must be in (0, 1], got "
+                             f"{self.sample_rate}")
 
 
 class _Chain(NamedTuple):

@@ -195,21 +195,6 @@ def main() -> None:
         semdedup(qemb, qseeds, vec_col="qv")
     )
 
-    # skyline: the Window/Sort in this plan runs over the AGGREGATED per-x
-    # dim (|distinct x| rows), never the row table — the row table sees one
-    # hash-agg exchange and one BroadcastHashJoin, no global sort
-    from nyxus_spark.operators import skyline_flags
-
-    skl = skyline_flags(
-        tokens_static(spark, sf).select(
-            "doc_id",
-            F.col("n_tok").cast("long").alias("x"),
-            F.size(F.array_distinct("tokens")).cast("long").alias("y"),
-        ),
-        "x", "y",
-    )
-    sections["skyline flags (dim cummax + broadcast — no row-table sort)"] = plan_of(skl)
-
     # runtime bloom-filter join pruning (InjectRuntimeFilter): on a
     # selective shuffle join, the creation side's bloom filter reaches the
     # other side's scan as a might_contain predicate — row-group-level scan
@@ -523,9 +508,6 @@ def main() -> None:
     tri_plan = sections["graph node stats (wedge-close triangles, hash joins only)"]
     assert "CartesianProduct" not in tri_plan
     assert "BroadcastNestedLoopJoin" not in tri_plan
-    sky_plan = sections["skyline flags (dim cummax + broadcast — no row-table sort)"]
-    assert "BroadcastHashJoin" in sky_plan
-    assert "SortMergeJoin" not in sky_plan and "CartesianProduct" not in sky_plan
     rbf_plan = sections[
         "runtime bloom-filter join pruning (InjectRuntimeFilter — OPTIMIZED plan)"
     ]

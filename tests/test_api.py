@@ -36,6 +36,20 @@ def test_featurize_memory_and_gray_depth(spark):
     assert out["IH_NUM_BINS"].dropna().unique().tolist() == [32.0]
 
 
+def test_coarse_gray_depth_zero_raises():
+    # 0 bins would fail inside the worker (*ALL*), read ENTROPY/UNIFORMITY
+    # as -0.0/0.0 and switch texture to identity binning without a word
+    with pytest.raises(ValueError, match="coarse_gray_depth.*ibsi=True"):
+        NyxusSpark(["*ALL*"], coarse_gray_depth=0)
+    nx = NyxusSpark(["*ALL*"])
+    with pytest.raises(ValueError, match="coarse_gray_depth.*ibsi=True"):
+        nx.set_params(coarse_gray_depth=0)
+    assert nx.get_params("coarse_gray_depth") == {"coarse_gray_depth": 64}
+    # negative depths select radiomics binning and stay valid
+    assert NyxusSpark(coarse_gray_depth=-16).get_params("n_bins") == {
+        "n_bins": -16}
+
+
 def test_featurize_memory_doc_ids_length_must_match(spark):
     api = NyxusSpark(["MEAN"])
     toks = [[1, 2], [3, 4], [5, 6]]

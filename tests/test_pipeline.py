@@ -1,7 +1,7 @@
 """The one-call pipeline (nyxus_spark/pipeline.py) vs the oracle-gated
 composition queries: clean_corpus configured like the `corpus_clean` driver
-gate must reproduce that gate's per-doc outputs exactly (the gate itself is
-DuckDB-oracle-checked every round, so this transitively gates the pipeline),
+gate must reproduce that gate's per-doc outputs exactly (read from the gate's
+DuckDB oracle, which the entry-contract test holds the Spark gate equal to),
 plus glue-level contracts (provenance, stage counts, packing, epoch write)."""
 
 import os
@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from nyxus_spark.pipeline import PipelineConfig, clean_corpus
+from tests.test_entry_contract import _duck
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -32,9 +33,12 @@ def test_pipeline_matches_corpus_clean_gate(spark):
                        segment_delim=104, boilerplate_min_docs=2,
                        drop_boilerplate=False),
     )
-    gate = entrymod._q_corpus_clean(spark, SF).select(
-        "doc_id", "segs_kept", "clean_n_tok", "clean_tok_sum", "clean_digest"
-    ).toPandas().set_index("doc_id")
+    # the gate's values come from its DuckDB oracle, which
+    # test_entry_contract holds the Spark gate equal to: reading the oracle
+    # costs seconds, building the Spark gate a second time costs a minute
+    gate = _duck(SF).execute(entrymod.oracle_sql()["corpus_clean"]).df()[
+        ["doc_id", "segs_kept", "clean_n_tok", "clean_tok_sum", "clean_digest"]
+    ].set_index("doc_id")
 
     got = res.docs.select(
         "doc_id", "n_tok",
@@ -511,6 +515,7 @@ def test_stage_counts_untrusted_pass_uses_provenance(spark, monkeypatch,
     dict(near_jaccard=1.5), dict(near_jaccard=0.0), dict(near_jaccard=-0.5),
     dict(min_tokens=5, max_tokens=4), dict(min_tokens=-1),
     dict(max_rep3_ratio=1.5), dict(max_rep3_ratio=-0.1),
+    dict(sample_rate=0.0), dict(sample_rate=-0.1), dict(sample_rate=1.5),
 ])
 def test_config_refuses_keep_all_or_drop_all(kw):
     """Values that silently kept or dropped every doc raise at construction,
@@ -520,3 +525,4 @@ def test_config_refuses_keep_all_or_drop_all(kw):
     PipelineConfig(near_jaccard=1.0, min_tokens=0, max_tokens=0,
                    max_rep3_ratio=0.0)
     PipelineConfig(max_rep3_ratio=1.0)
+    PipelineConfig(sample_rate=1.0)

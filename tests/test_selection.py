@@ -1,154 +1,5 @@
-"""skyline_flags: Pareto-front membership vs a brute-force dominance check.
-
-Covers ties on one axis, exact duplicate points (neither dominates the
-other — both stay on the frontier), a fully dominated interior, and a
-single-point frame.
-"""
-import itertools
-
-from nyxus_spark.operators import skyline_flags
-
-
-def _brute(points):
-    flags = []
-    for i, (x, y) in enumerate(points):
-        dominated = any(
-            qx >= x and qy >= y and (qx > x or qy > y)
-            for j, (qx, qy) in enumerate(points) if j != i
-        )
-        flags.append(0 if dominated else 1)
-    return flags
-
-
-def _run(spark, points):
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(points)], "id long, x long, y long"
-    )
-    got = {
-        r["id"]: r["on_skyline"]
-        for r in skyline_flags(df, "x", "y").collect()
-    }
-    exp = _brute(points)
-    assert [got[i] for i in range(len(points))] == exp
-    return exp
-
-
-def test_skyline_mixed(spark):
-    pts = [(5, 1), (4, 4), (1, 5), (3, 3), (4, 4), (2, 2), (5, 1), (0, 0)]
-    exp = _run(spark, pts)
-    # both copies of every duplicate frontier point survive
-    assert exp[1] == exp[4] == 1
-    assert exp[0] == exp[6] == 1
-    assert exp[3] == exp[5] == exp[7] == 0
-
-
-def test_skyline_ties_on_x(spark):
-    # same x, different y: only the max-y row (and its duplicates) survive
-    pts = [(3, 1), (3, 2), (3, 3), (3, 3)]
-    exp = _run(spark, pts)
-    assert exp == [0, 0, 1, 1]
-
-
-def test_skyline_monotone_chain(spark):
-    # a strictly trading-off staircase: every point is on the frontier
-    pts = [(i, 10 - i) for i in range(11)]
-    assert _run(spark, pts) == [1] * 11
-
-
-def test_skyline_single_and_grid(spark):
-    assert _run(spark, [(7, 7)]) == [1]
-    grid = list(itertools.product(range(4), range(4)))
-    exp = _run(spark, grid)
-    # only (3, 3) is undominated in a full grid
-    assert sum(exp) == 1 and exp[grid.index((3, 3))] == 1
-
-
-def test_skyline_column_contract(spark):
-    df = spark.createDataFrame([(1, 2, 3, "z")], "id long, x long, y long, tag string")
-    out = skyline_flags(df, "x", "y")
-    assert out.columns == ["id", "x", "y", "tag", "on_skyline"]
-
-
-def _brute_layers(points, k=3):
-    layer = [0] * len(points)
-    remaining = set(range(len(points)))
-    for level in range(1, k + 1):
-        sky = [
-            i for i in remaining
-            if not any(
-                points[j][0] >= points[i][0] and points[j][1] >= points[i][1]
-                and (points[j][0] > points[i][0] or points[j][1] > points[i][1])
-                for j in remaining if j != i
-            )
-        ]
-        for i in sky:
-            layer[i] = level
-        remaining -= set(sky)
-    return layer
-
-
-def test_pareto_layers_grid(spark):
-    import itertools
-    from nyxus_spark.operators import pareto_layers
-
-    grid = list(itertools.product(range(5), range(5)))
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(grid)], "id long, x long, y long"
-    )
-    got = {r["id"]: r["pareto_layer"]
-           for r in pareto_layers(df, "x", "y", k=3).collect()}
-    exp = _brute_layers(grid, k=3)
-    assert [got[i] for i in range(len(grid))] == exp
-    # grid anti-diagonals: layer 1 = (4,4); layer 2 = (3,4),(4,3); deeper 0
-    assert exp[grid.index((4, 4))] == 1
-    assert exp[grid.index((3, 4))] == exp[grid.index((4, 3))] == 2
-
-
-def test_pareto_layers_duplicates_and_bounds(spark):
-    import pytest
-    from nyxus_spark.operators import pareto_layers
-
-    pts = [(5, 5), (5, 5), (1, 1), (0, 9), (9, 0)]
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(pts)], "id long, x long, y long"
-    )
-    got = {r["id"]: r["pareto_layer"]
-           for r in pareto_layers(df, "x", "y", k=2).collect()}
-    assert [got[i] for i in range(len(pts))] == _brute_layers(pts, k=2)
-    with pytest.raises(ValueError):
-        pareto_layers(df, "x", "y", k=0)
-
-
-# -- hypothesis properties: random point clouds vs the brute dominance check
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-_points = st.lists(
-    st.tuples(st.integers(min_value=0, max_value=8),
-              st.integers(min_value=0, max_value=8)),
-    min_size=1, max_size=30,
-)
-
-
-@settings(max_examples=25, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(_points)
-def test_skyline_random_property(spark, pts):
-    _run(spark, pts)
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(_points)
-def test_pareto_layers_random_property(spark, pts):
-    from nyxus_spark.operators import pareto_layers
-
-    df = spark.createDataFrame(
-        [(i, x, y) for i, (x, y) in enumerate(pts)], "id long, x long, y long"
-    )
-    got = {r["id"]: r["pareto_layer"]
-           for r in pareto_layers(df, "x", "y", k=3).collect()}
-    assert [got[i] for i in range(len(pts))] == _brute_layers(pts, k=3)
+"""greedy_set_cover: greedy maximum-coverage picks vs a pure-Python replay,
+distinct picks once coverage is exhausted, and the k bounds."""
 
 
 def test_greedy_set_cover_matches_python(spark):

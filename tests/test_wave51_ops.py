@@ -172,55 +172,3 @@ def test_merge_upsert_missing_column_raises(spark):
     upd = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError):
         merge_upsert(old, upd, ["id"])
-
-
-# ---------------------------------------------------------------------------
-# TextTiling topical segmentation (wave 57)
-# ---------------------------------------------------------------------------
-
-def _py_texttile(toks, w=8, th=2):
-    n = len(toks)
-    if n < 2 * w:
-        return 0, -1, 0, 0
-    s = []
-    for i in range(w, n - w + 1):
-        left = toks[i - w:i]
-        right = toks[i:i + w]
-        s.append(len([x for x in dict.fromkeys(left) if x in right]))
-    bounds = [j for j in range(2, len(s))
-              if s[j - 1] < s[j - 2] and s[j - 1] <= s[j] and s[j - 1] <= th]
-    # NOTE: python j here indexes 0-based; the operator's positions are
-    # 1-based list indices — translate: operator position p (1-based, from
-    # 2..len-1) corresponds to s[p-1] with neighbors s[p-2], s[p]
-    bounds = [p for p in range(2, len(s))
-              if s[p - 1] < s[p - 2] and s[p - 1] <= s[p] and s[p - 1] <= th]
-    return len(s), min(s), len(bounds), sum(bounds)
-
-
-def test_texttile_detects_topic_shift(spark):
-    from nyxus_spark.functions import texttile_cols
-
-    # two 16-token "topics" with disjoint vocab: cohesion collapses to 0
-    # at the seam and a boundary must be detected there
-    doc = [1, 2, 3, 4] * 4 + [50, 60, 70, 80] * 4
-    homog = [1, 2, 3, 4] * 8   # one topic: no boundary anywhere
-    df = spark.createDataFrame(
-        [("shift", doc, len(doc)), ("flat", homog, len(homog)),
-         ("short", [1, 2, 3], 3)],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    got = {r["doc_id"]: (r["tt_pos"], r["tt_min"], r["tt_bounds"], r["tt_ck"])
-           for r in texttile_cols(df).collect()}
-    assert got["shift"] == _py_texttile(doc)
-    assert got["flat"] == _py_texttile(homog)
-    assert got["short"] == (0, -1, 0, 0)       # shorter than 2w: sentinel
-    assert got["shift"][1] == 0                # seam cohesion hits zero
-    assert got["shift"][2] >= 1                # at least one boundary
-    assert got["flat"][2] == 0                 # no boundary in one topic
-
-
-def test_texttile_rejects_bad_args(spark):
-    from nyxus_spark.functions import texttile_exprs
-
-    with pytest.raises(ValueError):
-        texttile_exprs(w=0)

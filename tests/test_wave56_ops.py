@@ -104,108 +104,6 @@ def test_interarrival_matches_python_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# Wave 57: rescaled range (R/S) + Bandt–Pompe ordinal patterns — validated
-# through the full tokens_basic gate path on synthetic docs with known values
-# ---------------------------------------------------------------------------
-
-def _rs_ref(xs):
-    n = len(xs)
-    s = sum(xs)
-    pre = 0
-    mx = mn = 0
-    for j, x in enumerate(xs, 1):
-        pre += x
-        p = n * pre - j * s
-        mx = max(mx, p)
-        mn = min(mn, p)
-    k = n * sum(x * x for x in xs) - s * s
-    rng = mx - mn
-    rs4 = _r4(rng / math.sqrt(k)) if (n >= 2 and k > 0) else 0.0
-    return rng, rs4
-
-
-def _ord_ref(xs):
-    pats = {"op_asc": 0, "op_acb": 0, "op_bac": 0, "op_bca": 0,
-            "op_cab": 0, "op_desc": 0, "op_ties": 0}
-    for a, b, c in zip(xs, xs[1:], xs[2:]):
-        if a == b or b == c or a == c:
-            pats["op_ties"] += 1
-        elif a < b < c:
-            pats["op_asc"] += 1
-        elif a < c < b:
-            pats["op_acb"] += 1
-        elif b < a < c:
-            pats["op_bac"] += 1
-        elif b < c < a:
-            pats["op_bca"] += 1
-        elif c < a < b:
-            pats["op_cab"] += 1
-        else:
-            pats["op_desc"] += 1
-    return pats
-
-
-def test_rs_and_ordinal_patterns_on_synthetic_docs(spark):
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(57)
-    docs = {
-        "mono_up": list(range(1, 21)),                      # pure trend: big R/S
-        "alternating": [5, 1] * 10,                         # anti-persistent
-        "constant": [7] * 9,                                # K = 0 → rs4 = 0
-        "pair": [3, 9],
-        "single": [4],
-        "random": [rng.randrange(0, 100) for _ in range(64)],
-    }
-    df = spark.createDataFrame(
-        [(k, v, len(v)) for k, v in docs.items()],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    # drive the same exprs the gate uses, via the operator-level fold
-    out = df.select(
-        "doc_id", "n_tok", "tokens",
-        F.expr("aggregate(tokens, 0L, (a, x) -> a + x)").alias("__s"),
-        F.expr("aggregate(tokens, 0L, (a, x) -> a + cast(x as bigint) * x)").alias("__e"),
-    ).select(
-        "doc_id", "n_tok", "tokens", "__s", "__e",
-        F.expr(
-            "aggregate(tokens,"
-            " named_struct('j', 0L, 'pre', 0L, 'mx', 0L, 'mn', 0L),"
-            " (s, x) -> named_struct("
-            "   'j', s.j + 1L, 'pre', s.pre + cast(x as bigint),"
-            "   'mx', greatest(s.mx, cast(n_tok as bigint) * (s.pre + cast(x as bigint)) - (s.j + 1L) * __s),"
-            "   'mn', least(s.mn, cast(n_tok as bigint) * (s.pre + cast(x as bigint)) - (s.j + 1L) * __s)),"
-            " s -> named_struct('mx', s.mx, 'mn', s.mn))"
-        ).alias("mm"),
-    )
-    got = {r["doc_id"]: r for r in out.collect()}
-    for k, xs in docs.items():
-        rng_ref, rs4_ref = _rs_ref(xs)
-        r = got[k]
-        assert r["mm"]["mx"] - r["mm"]["mn"] == rng_ref, k
-        kk = len(xs) * sum(x * x for x in xs) - sum(xs) ** 2
-        if len(xs) >= 2 and kk > 0:
-            assert _r4((r["mm"]["mx"] - r["mm"]["mn"]) / math.sqrt(kk)) == rs4_ref, k
-    # ordinal patterns through the gate query itself at tiny scale is covered
-    # by the entry-contract test; here check the reference classifier is a
-    # partition (every triple lands in exactly one bucket)
-    for k, xs in docs.items():
-        pats = _ord_ref(xs)
-        assert sum(pats.values()) == max(0, len(xs) - 2), k
-    assert _ord_ref([1, 2, 3]) == {"op_asc": 1, "op_acb": 0, "op_bac": 0,
-                                   "op_bca": 0, "op_cab": 0, "op_desc": 0,
-                                   "op_ties": 0}
-    assert _ord_ref([2, 1, 3])["op_bac"] == 1
-    # strict alternation with equal peaks is ALL ties (a == c in every triple)
-    assert _ord_ref([5, 1] * 2)["op_ties"] == 2
-    assert _ord_ref([5, 1, 6, 2]) == {"op_asc": 0, "op_acb": 1, "op_bac": 1,
-                                      "op_bca": 0, "op_cab": 0, "op_desc": 0,
-                                      "op_ties": 0}
-
-
-# ---------------------------------------------------------------------------
 # Wave 58: version-delta audit (LCP / capped LCS / edit region) — edge cases
 # through the same expressions the rollup_wide gate uses
 # ---------------------------------------------------------------------------

@@ -121,6 +121,29 @@ def test_temperature_rates_validation():
         temperature_rates(None, alpha=0.5, scale=0.0)
 
 
+def test_temperature_alpha_sweep_ordering(spark):
+    """rate_α is monotone in α for sub-maximal strata: α=0.25 flattest."""
+    from nyxus_spark.functions import temperature_rates
+
+    df = spark.createDataFrame(
+        [(f"s{i}", i) for i in range(1, 5) for _ in range(10 * i)],
+        "source string, m int",
+    )
+    r25 = temperature_rates(df, "source", alpha=0.25)
+    r50 = temperature_rates(df, "source", alpha=0.5)
+    r75 = temperature_rates(df, "source", alpha=0.75)
+    r100 = temperature_rates(df, "source", alpha=1.0)
+    for s in ("s1", "s2", "s3"):
+        assert r100[s] <= r75[s] <= r50[s] <= r25[s] <= 1.0
+    assert r25["s4"] == r50["s4"] == r75["s4"] == r100["s4"] == 1.0
+    # α = 0.75 is the exact chain sqrt(n·sqrt(n))
+    import math
+
+    n, mx = 10.0, 40.0
+    assert r75["s1"] == math.sqrt(n * math.sqrt(n)) / math.sqrt(
+        mx * math.sqrt(mx))
+
+
 # ---------------------------------------------------------------------------
 # source_drift
 # ---------------------------------------------------------------------------
@@ -459,44 +482,3 @@ def test_lsh_recall_audit_counts(spark):
     assert row["sample_true_pairs"] == 1      # only d1~d2 >= 0.5 jaccard
     assert row["lsh_found_pairs"] == 1
     assert row["lsh_recall4"] == 1.0
-
-
-# ---------------------------------------------------------------------------
-# span_corruption_stats
-# ---------------------------------------------------------------------------
-
-def test_span_corruption_python_reference(spark):
-    from nyxus_spark.functions import span_corruption_stats
-
-    P = 2147483647
-    docs = [(f"doc_{i}", [j % 5 for j in range((i * 3) % 9)]) for i in range(12)]
-    df = spark.createDataFrame(
-        [(d, t, len(t)) for d, t in docs],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    got = {r["doc_id"]: (r["n_corrupt_spans"], r["n_corrupt_tokens"],
-                         r["corrupt_checksum"])
-           for r in span_corruption_stats(df, every=20, span=3).collect()}
-    for d, t in docs:
-        oid = int(d[4:])
-        n = len(t)
-        trig = lambda j: (oid % P * 1000003 + j * 8191) % P % 20 == 0
-        starts = [j for j in range(1, n + 1) if trig(j)]
-        covered = [i for i in range(1, n + 1)
-                   if any(trig(j) for j in range(max(1, i - 2), i + 1))]
-        assert got[d] == (len(starts), len(covered), sum(covered)), d
-
-
-def test_span_corruption_overlap_merge(spark):
-    # adjacent triggers produce a merged covered region, not double-counts
-    from nyxus_spark.functions import span_corruption_stats
-
-    df = spark.createDataFrame(
-        [("doc_1", list(range(40)), 40)],
-        "doc_id string, tokens array<int>, n_tok int",
-    )
-    r = span_corruption_stats(df, every=1, span=3).collect()[0]
-    # every position triggers -> every position covered exactly once
-    assert r["n_corrupt_spans"] == 40
-    assert r["n_corrupt_tokens"] == 40
-    assert r["corrupt_checksum"] == 40 * 41 // 2
