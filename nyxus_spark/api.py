@@ -139,28 +139,32 @@ class NyxusSpark:
         `offset`/`offsets`, `symmetric_glcm`, `n_bins`, `vocab_size`,
         `features`, `tokens_col`. Image-physical knobs (pixels_per_micron,
         dynamic_range, GPU ids) have no token-stream meaning and are
-        intentionally NOT accepted. Returns self for chaining."""
+        intentionally NOT accepted. Returns self for chaining. The call is
+        atomic: if any key raises, no parameter changes."""
+        bad = [key for key in params if key not in self._PARAMS]
+        if bad:
+            raise ValueError(f"Invalid parameter: {bad[0]}")
+        features, settings, tokens_col = (
+            self.features, self.settings, self.tokens_col)
         for key, value in params.items():
-            if key not in self._PARAMS:
-                raise ValueError(f"Invalid parameter: {key}")
             if key == "features":
-                self.features = list(value)
+                features = list(value)
             elif key == "tokens_col":
-                self.tokens_col = value
+                tokens_col = value
             elif key == "coarse_gray_depth":
                 depth = _gray_depth(value)
-                self.settings = replace(
-                    self.settings, n_bins=depth, grey_info=depth)
+                settings = replace(settings, n_bins=depth, grey_info=depth)
             elif key == "ibsi":
                 # IBSI mode = identity grey binning (texture_feature.h:101-103
                 # grey_info == 0 selector)
-                cur = abs(self.settings.grey_info) or 64
-                self.settings = replace(
-                    self.settings, grey_info=0 if value else cur)
+                cur = abs(settings.grey_info) or 64
+                settings = replace(settings, grey_info=0 if value else cur)
             elif key == "offsets":
-                self.settings = replace(self.settings, offsets=tuple(value))
+                settings = replace(settings, offsets=tuple(value))
             else:
-                self.settings = replace(self.settings, **{key: value})
+                settings = replace(settings, **{key: value})
+        self.features, self.settings, self.tokens_col = (
+            features, settings, tokens_col)
         return self
 
     def get_params(self, *args) -> dict:

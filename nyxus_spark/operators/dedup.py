@@ -94,9 +94,20 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str = "doc_id") -> D
     shuffle carries one winner candidate per key per partition, not every
     duplicate), and the semi-join is AQE-skew-splittable where a window
     over a hyper-duplicated key is not. Assumes `id_col` values are unique
-    (a duplicated (key, id) row would keep both copies)."""
-    wins = df.groupBy(*key_cols).agg(F.min(id_col).alias(id_col))
-    return df.join(wins, [*key_cols, id_col], "left_semi")
+    (a duplicated (key, id) row would keep both copies). A null key is a
+    key like any other, as in the groupBy: its rows keep their lowest id."""
+    wins = df.groupBy(*key_cols).agg(F.min(id_col).alias("__win_id"))
+    wins, on = _null_safe_keys(wins, key_cols)
+    return df.join(wins, [*on, F.col(id_col) == F.col("__win_id")],
+                   "left_semi")
+
+
+def _null_safe_keys(other: DataFrame, key_cols: list[str]):
+    """`other` with its key columns renamed apart, and the null-safe
+    equality conditions that join a frame's `key_cols` to them."""
+    names = {c: f"__other_{c}" for c in key_cols}
+    other = other.withColumnsRenamed(names)
+    return other, [F.col(c).eqNullSafe(F.col(n)) for c, n in names.items()]
 
 
 def dedup_incremental(
@@ -120,10 +131,9 @@ def dedup_incremental(
     Scale shape: one left-anti hash join against the key index (broadcast
     when the day's index partition fits, SMJ + AQE otherwise) plus the
     intra-batch min-agg — the old corpus is never scanned beyond its key
-    index."""
-    fresh = new_df.join(
-        seen_keys.select(*key_cols).distinct(), key_cols, "left_anti"
-    )
+    index. A null key matches a seen null key, as in `exact_dedup`."""
+    seen, on = _null_safe_keys(seen_keys.select(*key_cols).distinct(), key_cols)
+    fresh = new_df.join(seen, on, "left_anti")
     return exact_dedup(fresh, key_cols, id_col)
 
 

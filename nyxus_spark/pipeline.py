@@ -15,6 +15,7 @@ wires them into the single config-driven call a corpus owner actually runs:
     res.provenance              # every dropped doc_id + the stage that dropped it
     res.packs                   # context-window pack assignment (if configured)
     res.write_epoch(path, 0)    # reproducible epoch-shuffled materialization
+                                #   (file count sized by AQE from the data)
     res.stage_counts()          # per-stage drop counts (taken in that write
                                 #   when packing is on)
 
@@ -41,9 +42,14 @@ is read. Per-stage drop counts are row counts that `Observation`s take on
 each stage's output during the pass that does the work: the first
 `write_epoch` of a packed corpus, otherwise one `noop` pass when
 `stage_counts()` is first called. The observations sit on a private
-rebuild of the chain, so the public frames carry none.
-`temperature_rates` is the one eager step (a strata-sized driver dict,
-prescan shape); the rebuild reuses its rates.
+rebuild of the chain, so the public frames carry none, and the rebuild
+builds no provenance joins. `temperature_rates` is the one eager step (a
+strata-sized driver dict, prescan shape); the rebuild reuses its rates.
+
+`write_epoch` range-partitions on the epoch key with no fixed count by
+default, so AQE coalesces adjacent ranges into data-sized files (at most
+Spark's initial shuffle partition count); `n_files` fixes the count
+instead.
 
 Determinism: sampling/packing/epoch keys derive from `id_expr` (default
 xxhash64(doc_id)) via the shared (id*MIX mod P31) family, so a cleaned corpus,
@@ -121,7 +127,7 @@ class PipelineConfig:
 
 class _Chain(NamedTuple):
     docs: DataFrame
-    provenance: DataFrame
+    provenance: DataFrame | None
     packs: DataFrame | None
     rates: dict | None
 
@@ -190,13 +196,18 @@ class CorpusCleanResult:
                         "AS t(drop_stage, docs_dropped)")
         return out if self._drops else out.filter(F.lit(False))
 
-    def write_epoch(self, path: str, epoch: int, n_files: int = 32,
+    def write_epoch(self, path: str, epoch: int, n_files: int | None = None,
                     mode: str = "overwrite") -> None:
         """Materialize one epoch's reproducible global training order
         (sinks.write_training_order: range-partition + in-partition sort on
-        the epoch-shuffle key — non-overlapping sorted files). With packing,
-        the first write also counts the rows each stage keeps (see
-        stage_counts)."""
+        the epoch-shuffle key — non-overlapping sorted files). By default
+        AQE sizes the files from the data, at most Spark's initial shuffle
+        partition count; with AQE's default size settings a corpus under
+        1 MB of shuffle output is one file (the rules, and the count with
+        AQE off, are in write_training_order). An explicit `n_files` asks
+        for exactly that many range partitions, which AQE leaves as they
+        are. With packing, the first write also counts the rows each stage
+        keeps (see stage_counts)."""
         from nyxus_spark.sinks import write_training_order
 
         def write(src: DataFrame) -> None:
@@ -303,7 +314,9 @@ def _chain(df: DataFrame, cfg: PipelineConfig, bench_df: DataFrame | None,
     """Build the stage chain of `clean_corpus`. `rates` reuses already
     computed temperature rates. With an `observed` list, the input and
     every stage output carry a fresh row-count Observation, appended as
-    (stage, observation) in chain order (the input's stage is "")."""
+    (stage, observation) in chain order (the input's stage is ""), and
+    the chain has no provenance: its observed pass reads only the docs or
+    the packs."""
 
     def watch(frame: DataFrame, stage: str) -> DataFrame:
         if observed is None:
@@ -316,7 +329,8 @@ def _chain(df: DataFrame, cfg: PipelineConfig, bench_df: DataFrame | None,
     prov: list[DataFrame] = []
 
     def step(nxt: DataFrame, stage: str) -> DataFrame:
-        prov.append(_dropped(cur, nxt, stage, id_col))
+        if observed is None:
+            prov.append(_dropped(cur, nxt, stage, id_col))
         return watch(nxt, stage)
 
     # 1. length rule — pure pushdown-able predicate
@@ -347,16 +361,12 @@ def _chain(df: DataFrame, cfg: PipelineConfig, bench_df: DataFrame | None,
         dirty = cm.filter(F.col("is_contaminated") == 1).select(id_col)
         cur = step(cur.join(dirty, id_col, "left_anti"), "3_contaminated")
 
-    # 4. exact dedup — lowest id per identical sequence (skew-safe agg)
+    # 4. exact dedup — lowest id per identical sequence (skew-safe agg,
+    #    grouped on the array itself, so a null element is part of the key)
     if cfg.exact:
         from nyxus_spark.operators.dedup import exact_dedup
 
-        keyed = cur.withColumn(
-            "__key",
-            F.concat_ws(",", F.transform(tokens_col,
-                                         lambda x: x.cast("string"))),
-        )
-        cur = step(exact_dedup(keyed, ["__key"], id_col=id_col).drop("__key"),
+        cur = step(exact_dedup(cur, [tokens_col], id_col=id_col),
                    "4_exact_dup")
 
     # 5. near dedup — banded MinHash-LSH candidates, higher id of each
@@ -446,7 +456,9 @@ def _chain(df: DataFrame, cfg: PipelineConfig, bench_df: DataFrame | None,
         packs = pack_sequences(cur, cfg.pack_capacity, id_expr,
                                n_shards=cfg.pack_shards, len_col=n_tok_col)
 
-    if prov:
+    if observed is not None:
+        provenance = None
+    elif prov:
         provenance = reduce(lambda a, b: a.unionByName(b), prov)
     else:
         provenance = df.sparkSession.createDataFrame([], StructType([

@@ -81,12 +81,24 @@ def to_iceberg(df: DataFrame, table: str, bucket_col: str = "doc_id", n_buckets:
     df.writeTo(table).append()
 
 
+def _training_order(df: DataFrame, epoch: int, id_expr,
+                    n_files: int | None) -> DataFrame:
+    """The frame `write_training_order` writes: `df` plus `__order_key`,
+    range-partitioned and sorted within partitions on that key."""
+    from nyxus_spark.functions import epoch_shuffle_key
+
+    keyed = df.withColumn("__order_key", epoch_shuffle_key(id_expr, epoch))
+    ranged = (keyed.repartitionByRange("__order_key") if n_files is None
+              else keyed.repartitionByRange(n_files, "__order_key"))
+    return ranged.sortWithinPartitions("__order_key")
+
+
 def write_training_order(
     df: DataFrame,
     path: str,
     epoch: int,
     id_expr,
-    n_files: int = 32,
+    n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize one epoch's GLOBAL training order: rows range-partitioned
@@ -96,14 +108,26 @@ def write_training_order(
     permutation without any driver-side sort. The key is data-independent
     (a mix of the id), so at 100 TB the RangePartitioning sampling is over
     a uniform key space — no skew regardless of id clustering. One Exchange
-    (rangepartitioning) + in-partition sort, then a plain parquet write."""
-    from nyxus_spark.functions import epoch_shuffle_key
+    (rangepartitioning) + in-partition sort, then a plain parquet write.
 
-    key = epoch_shuffle_key(id_expr, epoch)
-    (df.withColumn("__order_key", key)
-       .repartitionByRange(n_files, "__order_key")
-       .sortWithinPartitions("__order_key")
-       .write.mode(mode).parquet(path))
+    `n_files=None` (the default) sizes the files from the data: the range
+    exchange has no fixed count, so it splits the key space into Spark's
+    initial shuffle partition count
+    (`spark.sql.adaptive.coalescePartitions.initialPartitionNum` if set,
+    otherwise `spark.sql.shuffle.partitions`), and AQE's partition
+    coalescing merges adjacent ranges up to a target size. With AQE's
+    default settings that target is the epoch's shuffle output divided by
+    `defaultParallelism`, at least 1 MB
+    (`coalescePartitions.minPartitionSize`) and at most 64 MB
+    (`advisoryPartitionSizeInBytes`): an epoch under 1 MB is one file, a
+    mid-sized one about one file per core, and no epoch gets more files
+    than the initial count. With AQE or its coalescing off, every range
+    of `spark.sql.shuffle.partitions` is a file (empty ranges write none).
+    Merging only adjacent ranges keeps the layout: the same rows in the
+    same global order. An explicit `n_files` splits the key space into
+    exactly that many ranges, which AQE never coalesces."""
+    (_training_order(df, epoch, id_expr, n_files)
+     .write.mode(mode).parquet(path))
 
 
 def write_bucketed(

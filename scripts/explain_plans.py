@@ -273,6 +273,19 @@ def main() -> None:
         )
     )
 
+    # epoch training-order write: the default range exchange has no fixed
+    # count (REPARTITION_BY_COL), so AQE may coalesce adjacent ranges into
+    # data-sized files; an explicit n_files (REPARTITION_BY_NUM) is kept.
+    # The exchange's origin shows only in the tree string.
+    from nyxus_spark.sinks import _training_order
+
+    epoch_docs = spark.read.parquet(f"{sf}/documents.parquet").select(
+        "doc_id", "source")
+    for title, n in (("default, data-sized files", None), ("n_files=4", 4)):
+        ordered = _training_order(epoch_docs, 0, F.xxhash64("doc_id"), n)
+        sections[f"epoch training-order write ({title})"] = (
+            ordered._jdf.queryExecution().executedPlan().toString().rstrip())
+
     # pack segments: the explode is narrow (rides the packer's output);
     # the seg_idx window re-uses the (shard, pack) hash family
     from nyxus_spark.operators.packing import pack_segments
@@ -469,6 +482,13 @@ def main() -> None:
     ]
     assert n_exch["sequence packing (one shard exchange + JVM window)"] == 1
     assert n_exch["rolling frames (rows + time-range, one exchange)"] == 1
+    epoch_auto = sections["epoch training-order write (default, data-sized files)"]
+    epoch_fixed = sections["epoch training-order write (n_files=4)"]
+    assert "rangepartitioning" in epoch_auto and "REPARTITION_BY_COL" in epoch_auto
+    assert "REPARTITION_BY_NUM" not in epoch_auto
+    assert "ASC NULLS FIRST, 4), REPARTITION_BY_NUM" in epoch_fixed
+    assert n_exch["epoch training-order write (default, data-sized files)"] == 1
+    assert n_exch["epoch training-order write (n_files=4)"] == 1
     assert "BroadcastExchange" in sections[
         "k-means step (broadcast centroids + two-phase coordinate agg)"
     ]

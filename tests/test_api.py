@@ -50,6 +50,20 @@ def test_coarse_gray_depth_zero_raises():
         "n_bins": -16}
 
 
+@pytest.mark.parametrize("params,match", [
+    (dict(features=["ENERGY"], coarse_gray_depth=0), "coarse_gray_depth"),
+    (dict(offset=3, bogus=1), "Invalid parameter: bogus"),
+])
+def test_set_params_is_atomic(params, match):
+    """A set_params call that raises changes no parameter, including the
+    valid keys given before the bad one."""
+    nx = NyxusSpark(["MEAN"])
+    before = nx.get_params()
+    with pytest.raises(ValueError, match=match):
+        nx.set_params(**params)
+    assert nx.get_params() == before
+
+
 def test_featurize_memory_doc_ids_length_must_match(spark):
     api = NyxusSpark(["MEAN"])
     toks = [[1, 2], [3, 4], [5, 6]]

@@ -511,6 +511,71 @@ def test_stage_counts_untrusted_pass_uses_provenance(spark, monkeypatch,
     assert got == _prov_counts(res) == [("1_length", 1)]
 
 
+def test_default_packed_write_is_observed_without_provenance(
+        spark, tmp_path, monkeypatch):
+    """A packed write_epoch with the default file count writes sorted,
+    non-overlapping range files sized by AQE, counts the stages in that
+    write without building a provenance join, and the counts equal the
+    provenance aggregate."""
+    import nyxus_spark.pipeline as pipeline
+    from tests.test_training_order import (
+        _assert_range_files,
+        _files,
+        _initial_ranges,
+    )
+
+    df, bench_df, _ = _corpus(spark)
+    res = clean_corpus(df, PipelineConfig(
+        **CONFIGS["filters_temperature_packed"][0]), bench_df=bench_df)
+    calls = []
+    real = pipeline._dropped
+    monkeypatch.setattr(pipeline, "_dropped",
+                        lambda *a, **k: calls.append(a[2]) or real(*a, **k))
+    out = str(tmp_path / "e0")
+    _call(lambda: res.write_epoch(out, 0))
+    assert calls == []
+    assert res._drops is not None
+    got = _call(lambda: [tuple(r) for r in res.stage_counts().collect()])
+    assert got == _prov_counts(res)
+
+    files = _files(out)
+    _assert_range_files(files)
+    assert 1 <= len(files) <= _initial_ranges(spark)
+    assert sum(map(len, files)) == res.packs.count()
+
+
+def _kept_and_dropped(spark, rows, **kw):
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    res = clean_corpus(df, PipelineConfig(near_jaccard=None, **kw))
+    kept = sorted(r["doc_id"] for r in res.docs.select("doc_id").collect())
+    dropped = sorted(tuple(r) for r in res.provenance.collect())
+    return kept, dropped
+
+
+def test_exact_dup_keeps_null_elements_apart(spark):
+    """The exact-dup key is the token array itself: [1, NULL, 2] is not a
+    copy of [1, 2], while two equal arrays with a null element are copies
+    and the lower id survives."""
+    kept, dropped = _kept_and_dropped(spark, [
+        ("a", [1, None, 2], 3, "s"), ("b", [1, 2], 2, "s"),
+        ("c", [5, 6], 2, "s")], min_tokens=1)
+    assert (kept, dropped) == (["a", "b", "c"], [])
+    kept, dropped = _kept_and_dropped(spark, [
+        ("b", [1, None, 2], 3, "s"), ("a", [1, None, 2], 3, "s"),
+        ("c", [1, 2], 2, "s")], min_tokens=1)
+    assert (kept, dropped) == (["a", "c"], [("b", "4_exact_dup")])
+
+
+def test_exact_dup_null_token_arrays(spark):
+    """Docs whose token array is null are copies of each other, not of an
+    empty array: the lowest id of them survives."""
+    kept, dropped = _kept_and_dropped(spark, [
+        ("b", None, None, "s"), ("a", None, None, "s"),
+        ("c", [], 0, "s")], min_tokens=0)
+    assert (kept, dropped) == (["a", "c"], [("b", "4_exact_dup")])
+
+
 @pytest.mark.parametrize("kw", [
     dict(near_jaccard=1.5), dict(near_jaccard=0.0), dict(near_jaccard=-0.5),
     dict(min_tokens=5, max_tokens=4), dict(min_tokens=-1),

@@ -20,6 +20,9 @@ def test_incremental_equals_full_rerun_on_new_batch(spark):
     rng = random.Random(3)
     old = [(f"a{i:03d}", f"k{rng.randrange(30)}") for i in range(60)]
     new = [(f"n{i:03d}", f"k{rng.randrange(60)}") for i in range(60)]
+    # a null key in both batches: the old row wins it, so no new one survives
+    old += [("a900", None), ("a901", None)]
+    new += [("n900", None), ("n901", None)]
     odf, ndf = _corpus(spark, old), _corpus(spark, new)
     inc = {r.doc_id for r in
            dedup_incremental(ndf, odf.select("key"), ["key"]).collect()}
@@ -28,6 +31,7 @@ def test_incremental_equals_full_rerun_on_new_batch(spark):
             if r.doc_id.startswith("n")}
     assert inc == full
     assert inc, "fixture produced no fresh keys"
+    assert not inc & {"n900", "n901"}
 
 
 def test_incremental_drops_all_seen_keys(spark):
